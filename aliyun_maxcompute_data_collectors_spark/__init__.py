@@ -11,6 +11,7 @@ Structured Streaming, plus large-scale training-data-pipeline operators
 
 Layout:
     session     - tuned SparkSession factory (AQE, Arrow, shuffle sizing)
+    manifest_store - Spark-free snapshot-table metadata (manifests, commit)
     types       - ODPS <-> Spark type system (SURVEY.md section 1.2)
     catalog     - project.schema.table warehouse over parquet (section 1.1, 2.13)
     operators/  - hashing (OdpsDefaultHasher parity), bucketing, merge/CDC,
@@ -24,12 +25,19 @@ Layout:
 
 __version__ = "0.1.0"
 
-from aliyun_maxcompute_data_collectors_spark.catalog import BucketSpec, OdpsCatalog  # noqa: F401
-from aliyun_maxcompute_data_collectors_spark.session import (  # noqa: F401
-    ensure_parallelism,
-    get_spark,
-    load_tables,
-)
+# Spark-backed names resolve on first use, so the Spark-free submodules
+# (manifest_store) import without pyspark installed
+_LAZY = {"BucketSpec": "catalog", "OdpsCatalog": "catalog",
+         "ensure_parallelism": "session", "get_spark": "session",
+         "load_tables": "session"}
+
+
+def __getattr__(name):
+    mod = _LAZY.get(name)
+    if mod is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    import importlib
+    return getattr(importlib.import_module(f"{__name__}.{mod}"), name)
 
 
 def make_engine(warehouse: str, **kw):

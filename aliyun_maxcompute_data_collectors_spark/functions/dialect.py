@@ -83,11 +83,6 @@ def timestamp_micros(col) -> Column:
     return F.timestamp_micros(_c(col))
 
 
-def regex_match_first(col, pattern: str, group: int = 1) -> Column:
-    """regex-match-first -> regexp_extract (:812-814)."""
-    return F.regexp_extract(_c(col), pattern, group)
-
-
 def percentile(col, quantiles: float | list[float]) -> Column:
     """percentile(col, q | array(q...)) (:816-854); exact interpolated, like
     the dialect's percentile function."""

@@ -192,20 +192,6 @@ def stratified_sample(
     return df.where(_hash_frac(F.col(id_col), salt) < frac)
 
 
-def mixture_weights(
-    df: DataFrame,
-    source_col: str,
-    weights: dict[str, float],
-) -> DataFrame:
-    """Attach a sampling weight per source (training-mixture spec); rows from
-    unknown sources weigh 0.  Downstream: deterministic_sample with the
-    weight as the per-row fraction, or loss-weighting at train time."""
-    w = F.lit(0.0)
-    for src, wt in weights.items():
-        w = F.when(F.col(source_col) == src, F.lit(float(wt))).otherwise(w)
-    return df.withColumn("mix_weight", w)
-
-
 def mixture_rebalance(
     df: DataFrame,
     id_col: str,

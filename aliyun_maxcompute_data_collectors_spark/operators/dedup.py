@@ -389,11 +389,6 @@ def decontaminate(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def _md5_int(col: Column) -> Column:
-    """First 8 hex digits of md5 as a bigint - the engine-portable base hash."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 def minhash_signature(
     df: DataFrame,
     id_col: str,

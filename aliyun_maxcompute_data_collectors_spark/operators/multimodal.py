@@ -177,15 +177,6 @@ def real_media_meta(payload: bytes) -> dict:
     return sniff_media_meta(payload)
 
 
-def real_decode_image(payload: bytes) -> dict:  # pragma: no cover - no PIL here
-    raise NotImplementedError(
-        "full image PIXEL decode beyond PNG requires an image library "
-        "(PIL/opencv) not present in this container; media_codecs."
-        "decode_png_pixels handles PNG, real_media_meta handles metadata, "
-        "fake_decode_image remains for oracle-checked plumbing tests"
-    )
-
-
 def decode_media(
     df: DataFrame,
     blob_col: str = "blob",

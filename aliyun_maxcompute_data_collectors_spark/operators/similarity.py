@@ -629,17 +629,6 @@ def det_kmeans_assign_best(vec: Column, centers: list[list[float]]) -> Column:
 import pandas as _pd  # noqa: E402  (kept local to avoid top-level rename)
 
 
-def _row_groups(vals: list) -> dict[int, tuple[list[int], np.ndarray]]:
-    """Group row indices by vector length -> (indices, (g, len) matrix).
-    Rows are vectorized per length group so mixed-dim batches still run
-    columnwise."""
-    by_len: dict[int, list[int]] = {}
-    for i, v in enumerate(vals):
-        by_len.setdefault(len(v), []).append(i)
-    return {ln: (idx, np.stack([vals[i] for i in idx]))
-            for ln, idx in by_len.items()}
-
-
 def _arrow_list_parts(arr):
     """(null_mask, starts, lens, flat_float64) views of an arrow list array
     - the zero-Python-object decomposition the arrow_udf kernels gather

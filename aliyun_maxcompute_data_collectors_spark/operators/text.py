@@ -52,11 +52,6 @@ _PUNCT_CLASS = r"[^\.,!\?;:]"
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
 
 
-def char_count(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c)
-
-
 def punct_ratio(col: Column | str) -> Column:
     """punctuation chars / total chars (0 for empty text)."""
     c = F.col(col) if isinstance(col, str) else col
@@ -270,11 +265,6 @@ def fingerprint(col: Column | str) -> Column:
     engines, making this oracle-checkable; for pure-Spark use xxhash64 is
     cheaper at scale."""
     return F.md5(normalized(col))
-
-
-def fingerprint_fast(col: Column | str) -> Column:
-    """64-bit xxhash fingerprint - the scale path (no crypto cost)."""
-    return F.xxhash64(normalized(col))
 
 
 # polynomial rolling-hash constants: a*B+h stays under 2^63 because

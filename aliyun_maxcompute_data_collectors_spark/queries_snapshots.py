@@ -1235,7 +1235,7 @@ def snapshot_filelist_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         tab.consolidate_metadata()                          # v6: one segment
         tab.vacuum(keep_last=2)
         mf = tab.manifest()
-        raw = _json.load(open(tab._manifest_path(mf["version"])))
+        raw = _json.load(open(tab._store.manifest_path(mf["version"])))
         out = tab.read().agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("o_orderkey").cast("long").alias("sum_key"),
@@ -1715,7 +1715,7 @@ def snapshot_parquet_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         tab.consolidate_metadata()                  # parquet -> parquet fold
         tab.vacuum(keep_last=2)
         mf = tab.manifest()
-        raw = _json.load(open(tab._manifest_path(mf["version"])))
+        raw = _json.load(open(tab._store.manifest_path(mf["version"])))
         fsegs = raw.get("file_segments") or []
         n_pruned = len(tab.prune_files(
             mf, [("o_orderkey", "==", int(
@@ -1922,7 +1922,7 @@ def snapshot_row_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         k = b.agg(F.min("o_orderkey")).collect()[0][0]
         v_upd = tab.update({"o_totalprice": "o_totalprice * 3"},
                            ("o_orderkey", "==", int(k)))
-        added, removed = tab._commit_delta(v_upd)
+        added, removed = tab._store.commit_delta(v_upd)
         ch = tab.changes(v_pre, v_upd)
         scanned = {_os.path.realpath(f.removeprefix("file:"))
                    for f in ch.inputFiles()}

@@ -328,10 +328,6 @@ def incremental_import(
 # export (W12): append / update / upsert via foreachPartition batches
 # ---------------------------------------------------------------------------
 
-def _quote_ident(name: str) -> str:
-    return '"' + name.replace('"', '""') + '"'
-
-
 def build_insert_sql(table: str, cols: list[str], dialect: str = "ansi") -> str:
     ph = ", ".join(["?"] * len(cols))
     return f"INSERT INTO {table} ({', '.join(cols)}) VALUES ({ph})"

@@ -73,9 +73,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from aliyun_maxcompute_data_collectors_spark.snapshots import (
+from aliyun_maxcompute_data_collectors_spark.manifest_store import (
+    ManifestStore,
     SnapshotError,
-    SnapshotTable,
+    retry_on_conflict,
+)
+from aliyun_maxcompute_data_collectors_spark.snapshots import (
     _collect_file_stats,
     prune_manifest_files,
     unify_schemas,
@@ -294,7 +297,7 @@ class _SnapshotChangeReader(DataSourceReader):
         self._schema = schema
         self._partition_bytes = int(
             options.get("partition_bytes", _DEFAULT_PARTITION_BYTES))
-        tab = SnapshotTable(None, path)
+        tab = ManifestStore(path)
         start = options.get("starting_version")
         if start is None:
             raise SnapshotError(
@@ -330,7 +333,7 @@ class _SnapshotChangeReader(DataSourceReader):
             # #1): inserts arriving WITH vectors (clone of a MOR table)
             # and deletes of previously-dv'd files subtract positions
             cur_dvs = m.get("dvs") or {}
-            parent_dvs = ((tab._manifest_json(m["parent"]).get("dvs")
+            parent_dvs = ((tab.manifest_json(m["parent"]).get("dvs")
                            or {}) if m["parent"] is not None else {})
             self._entries += [
                 (f, "delete", v,
@@ -399,7 +402,7 @@ class _SnapshotWriter(DataSourceArrowWriter):
 
     def __init__(self, path: str, overwrite: bool,
                  write_schema: StructType | None = None):
-        tab = SnapshotTable(None, path)  # layout check; no session needed
+        tab = ManifestStore(path)  # layout check; no session needed
         self._path = path
         self._overwrite = overwrite
         # the Spark-provided logical write schema: the fallback schema
@@ -433,31 +436,20 @@ class _SnapshotWriter(DataSourceArrowWriter):
         return _FileCommit(file=out, rows=rows)
 
     def commit(self, messages):
-        tab = SnapshotTable(None, self._path)
+        tab = ManifestStore(self._path)
         files = sorted(m.file for m in messages if m is not None and m.file)
         rows = sum(m.rows for m in messages if m is not None)
         stats = {f: _collect_file_stats(f) for f in files}
+        pm = tab.manifest(self._parent)
         if self._overwrite:
-            pm = tab.manifest(self._parent)
-            tab._commit_manifest(
-                self._parent, files, rows, "overwrite", stats=stats,
-                schema=(_written_schema(None, files)
-                        or self._write_schema_json),
-                delta_added=files, delta_removed=pm["files"])
+            tab.commit(pm, "overwrite", rows=rows, add=files, stats=stats,
+                       schema=(_written_schema(None, files)
+                               or self._write_schema_json),
+                       shape="replace")
         else:
-            pm = tab.manifest(self._parent)
-            pfsegs = pm.get("file_segments") or None
-            tab._commit_manifest(
-                self._parent,
-                files if pfsegs else pm["files"] + files,
-                pm["rows"] + rows,
-                "append", stats={**(pm.get("stats") or {}), **stats},
-                schema=_written_schema(pm.get("schema"), files),
-                blooms=pm.get("blooms"),  # carry inline blooms (r10)
-                segments=pm.get("segments"), file_segments=pfsegs,
-                removed_files=pm.get("removed_files"),
-                delta_added=files, delta_removed=[],
-                dvs=pm.get("dvs"))
+            tab.commit(pm, "append", rows=pm["rows"] + rows, add=files,
+                       stats=stats,
+                       schema=_written_schema(pm.get("schema"), files))
 
     def abort(self, messages):
         shutil.rmtree(self._stage, ignore_errors=True)
@@ -551,7 +543,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
                 if t.tzinfo is None:
                     t = t.replace(tzinfo=_dt.timezone.utc)
                 ms = int(t.timestamp() * 1000)
-            tab0 = SnapshotTable(None, path)
+            tab0 = ManifestStore(path)
             before = [x["version"] for x in tab0.versions()
                       if x["timestamp_ms"] < ms]
             self._start = max(before) if before else 1
@@ -560,10 +552,10 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         else:
             # default: only commits AFTER stream start (the Kafka
             # `latest` shape); starting_version=1 replays the full table
-            self._start = SnapshotTable(None, path).current_version()
+            self._start = ManifestStore(path).current_version()
 
     # -- offset plumbing ----------------------------------------------------
-    def _added_files(self, tab: SnapshotTable, v: int,
+    def _added_files(self, tab: ManifestStore, v: int,
                      enforce_policy: bool = True) -> list[str]:
         """Files version ``v`` ADDED over its parent.  Non-append commits
         (overwrite/merge/rollback/compact) are not row-level inserts:
@@ -571,7 +563,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         raises, skip yields no files); policy is NOT enforced for offset
         bookkeeping of versions the stream never consumes (the starting
         version, checkpointed boundaries)."""
-        m = tab._manifest_json(v)
+        m = tab.manifest_json(v)
         op = m["operation"]
         if op == "init":
             return []
@@ -585,7 +577,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         # r11: the manifest records the commit's exact added files -
         # O(new files) planning; pre-r11 manifests fall back to the
         # parent diff (O(table files), the old shape)
-        delta = tab._commit_delta(v, m)
+        delta = tab.commit_delta(v, m)
         if delta is not None:
             return delta[0]
         m = tab.manifest(v)
@@ -593,7 +585,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
                         if m["parent"] is not None else set())
         return [f for f in m["files"] if f not in parent_files]
 
-    def _entries(self, tab: SnapshotTable, v: int,
+    def _entries(self, tab: ManifestStore, v: int,
                  enforce_policy: bool = True) -> list:
         """Version ``v``'s planning units as (file, change type, version)
         triples.  Non-CDF mode: the ADDED files as inserts (the
@@ -605,7 +597,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         if not self._cdf:
             return [(f, "insert", v)
                     for f in self._added_files(tab, v, enforce_policy)]
-        m = tab._manifest_json(v)
+        m = tab.manifest_json(v)
         op = m["operation"]
         if op == "init":
             return []
@@ -634,7 +626,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         # live here; a REMOVED file whose PARENT manifest carried dvs
         # must not re-report already-MOR-deleted rows as deletes.
         cur_dvs = m.get("dvs") or {}
-        parent_dvs = ((tab._manifest_json(m["parent"]).get("dvs") or {})
+        parent_dvs = ((tab.manifest_json(m["parent"]).get("dvs") or {})
                       if m["parent"] is not None else {})
 
         def _ins(f, v):
@@ -645,7 +637,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
             return (f, "delete", v,
                     parent_dvs[f]["path"] if f in parent_dvs else None)
 
-        delta = tab._commit_delta(v, m)
+        delta = tab.commit_delta(v, m)
         if delta is not None:
             added, removed = delta
             return ([_del(f, v) for f in sorted(removed)]
@@ -659,7 +651,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         return ([_del(f, v) for f in removed]
                 + [_ins(f, v) for f in added])
 
-    def _consumed(self, tab: SnapshotTable, off: dict) -> tuple[int, int]:
+    def _consumed(self, tab: ManifestStore, off: dict) -> tuple[int, int]:
         """(version, entries-of-that-version-consumed) from an offset
         dict; a missing ``file`` key (pre-cap checkpoints) means fully
         consumed."""
@@ -678,7 +670,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         self._trace("initialOffset")
         # starting_version semantics are "replay commits AFTER v", so v
         # itself counts as fully consumed (policy never applies to it)
-        tab = SnapshotTable(None, self._path)
+        tab = ManifestStore(self._path)
         self._cursor = {
             "version": self._start,
             "file": len(self._entries(tab, self._start,
@@ -687,7 +679,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
 
     def latestOffset(self) -> dict:
         self._trace(f"latestOffset cursor={self._cursor}")
-        tab = SnapshotTable(None, self._path)
+        tab = ManifestStore(self._path)
         head = tab.current_version()
         if self._max_files is None or self._cursor is None:
             # uncapped, or first call after a RESTART (the Python stream
@@ -720,7 +712,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         self._trace(f"partitions {start} {end}")
-        tab = SnapshotTable(None, self._path)
+        tab = ManifestStore(self._path)
         sv, sf = self._consumed(tab, start)
         ev, ef = self._consumed(tab, end)
         new_entries: list = []
@@ -766,7 +758,7 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
     here by the table's own commit log instead of a checkpoint file."""
 
     def __init__(self, path: str):
-        tab = SnapshotTable(None, path)  # layout check
+        tab = ManifestStore(path)  # layout check
         self._path = path
         self._stage = os.path.join(path, "_snapshots", "files",
                                    uuid.uuid4().hex)
@@ -792,8 +784,6 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
         return _FileCommit(file=out, rows=rows)
 
     def commit(self, messages, batchId: int) -> None:
-        from aliyun_maxcompute_data_collectors_spark.snapshots import retry_on_conflict
-
         op = f"stream-append:batch={batchId}"
         files = sorted(m.file for m in messages if m is not None and m.file)
         rows = sum(m.rows for m in messages if m is not None)
@@ -804,27 +794,13 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
             # re-reads the NEW HEAD (r10; a maintenance compact() racing
             # the stream used to kill it on the first collision), and
             # the replay check re-runs so a replayed epoch stays a no-op
-            tab = SnapshotTable(None, self._path)
+            tab = ManifestStore(self._path)
             if any(v["operation"] == op for v in tab.versions()):
                 return  # replayed epoch: already published
-            parent = tab.current_version()
-            pm = tab.manifest(parent)
-            pfsegs = pm.get("file_segments") or None
-            tab._commit_manifest(
-                parent,
-                files if pfsegs else pm["files"] + files,
-                pm["rows"] + rows, op,
-                stats={**(pm.get("stats") or {}), **stats},
-                schema=_written_schema(pm.get("schema"), files),
-                # carry the parent's inline blooms and - critically - its
-                # REMOVAL LIST: dropping removed_files on a segmented
-                # parent resurrected COW-deleted rows (r10 fix; the batch
-                # writer carried it since r9, this path did not)
-                blooms=pm.get("blooms"),
-                segments=pm.get("segments"), file_segments=pfsegs,
-                removed_files=pm.get("removed_files"),
-                delta_added=files, delta_removed=[],
-                dvs=pm.get("dvs"))
+            pm = tab.manifest()
+            tab.commit(pm, op, rows=pm["rows"] + rows, add=files,
+                       stats=stats,
+                       schema=_written_schema(pm.get("schema"), files))
 
         retry_on_conflict(publish)
 
@@ -889,7 +865,7 @@ class GraftSnapshotDataSource(DataSource):
         return path
 
     def _resolve_manifest(self) -> dict:
-        tab = SnapshotTable(None, self._table_path())
+        tab = ManifestStore(self._table_path())
         version = self.options.get("version")
         ts = self.options.get("timestamp_ms")
         if version is not None and ts is not None:

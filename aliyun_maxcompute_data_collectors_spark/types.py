@@ -217,16 +217,6 @@ def datetime_millis(col: Column | str) -> Column:
     return F.timestamp_micros((micros - _pymod(micros, F.lit(1000))).cast("long"))
 
 
-def timestamp_micros_trunc(col: Column | str) -> Column:
-    """ODPS TIMESTAMP semantics: microsecond precision (nanos truncated).
-
-    Spark already stores micros (nanos can never appear), so this is identity;
-    kept explicit for parity with OdpsUtils.scala:88-95.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("timestamp")
-
-
 def _pymod(a: Column, n: Column) -> Column:
     return ((a % n) + n) % n
 

@@ -3,8 +3,8 @@
 The single-JSON manifest carries the full file list + per-file stats
 (+ optional blooms) and is rewritten on EVERY commit; this script
 isolates the metadata costs from data IO by committing synthetic file
-lists through the real ``_commit_manifest`` / ``manifest()`` /
-``prune_files`` code paths:
+lists through the real ``ManifestStore.commit`` / ``manifest()`` /
+``prune_manifest_files`` code paths (no Spark):
 
 - commit latency: append 100 new files to a table already holding N
   (parent manifest load + stats carry + json dump + fsync)
@@ -24,9 +24,22 @@ import sys
 import tempfile
 import time
 
+# plan_s times segment decode and pruning; import pyarrow's compute
+# kernels and pandas (which arrow conversions load) up front so the
+# one-time module import is not billed to the first size's cold plan
+import pandas  # noqa: E402,F401
+import pyarrow.compute  # noqa: E402,F401
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from aliyun_maxcompute_data_collectors_spark.snapshots import SnapshotTable  # noqa: E402
+from aliyun_maxcompute_data_collectors_spark.manifest_store import (  # noqa: E402
+    ManifestStore,
+    _seg_cache_clear,
+)
+from aliyun_maxcompute_data_collectors_spark.snapshots import (  # noqa: E402
+    SnapshotTable,
+    prune_manifest_files,
+)
 
 
 def synth_stats(path: str, i: int) -> dict:
@@ -40,19 +53,14 @@ def synth_bloom(m: int = 1 << 15) -> dict:
     return {"code": {"m": m, "hex": "ab" * (m // 8)}}
 
 
-def build_table(root: str, n_files: int, blooms: bool) -> SnapshotTable:
-    os.makedirs(os.path.join(root, "_snapshots", "files"))
-    os.makedirs(os.path.join(root, "_snapshots", "manifests"))
-    tab = SnapshotTable.__new__(SnapshotTable)
-    tab.spark = None
-    tab.path = root
-    tab._root = os.path.join(root, "_snapshots")
+def build_table(root: str, n_files: int, blooms: bool) -> ManifestStore:
+    tab = ManifestStore.init(root)
     files = [os.path.join(root, "_snapshots", "files", f"seed/{i:07d}.parquet")
              for i in range(n_files)]
     stats = {f: synth_stats(f, i) for i, f in enumerate(files)}
     bl = {f: synth_bloom() for f in files} if blooms else None
-    tab._commit_manifest(parent=None, files=files, rows=n_files * 1000,
-                         operation="append", stats=stats, blooms=bl)
+    tab.commit(tab.manifest(), "append", rows=n_files * 1000, add=files,
+               stats=stats, blooms=bl)
     return tab
 
 
@@ -60,77 +68,48 @@ def bench_one(n_files: int, blooms: bool) -> dict:
     root = tempfile.mkdtemp(prefix=f"mscale_{n_files}_")
     try:
         tab = build_table(root, n_files, blooms)
-        parent = tab.current_version()
-        pm = tab.manifest(parent)
+        pm = tab.manifest()
         new = [os.path.join(root, "_snapshots", "files",
                             f"new/{i:05d}.parquet") for i in range(100)]
         new_stats = {f: synth_stats(f, n_files + i)
                      for i, f in enumerate(new)}
         new_bl = ({f: synth_bloom() for f in new} if blooms else None)
         t0 = time.perf_counter()
-        carried_bl = dict(pm.get("blooms") or {})
-        if new_bl:
-            carried_bl.update(new_bl)
-        # mirror SnapshotTable.append exactly: a segmented parent passes
-        # ONLY the new files (its list lives in immutable file segments)
-        pfsegs = pm.get("file_segments") or None
-        all_files = new if pfsegs else pm["files"] + new
-        tab._commit_manifest(
-            parent, all_files, pm["rows"] + 100 * 1000, "append",
-            stats={**(pm.get("stats") or {}), **new_stats},
-            blooms=carried_bl or None, segments=pm.get("segments"),
-            file_segments=pfsegs)
+        tab.commit(pm, "append", rows=pm["rows"] + 100 * 1000, add=new,
+                   stats=new_stats, blooms=new_bl)
         commit_s = time.perf_counter() - t0
         # planning: cold manifest load + one-conjunct prune.  Clear the
         # segment cache so "cold" really pays the segment decode (r10;
         # the r9 number was semi-warm - the preceding commit had loaded
         # the segments already)
-        from aliyun_maxcompute_data_collectors_spark.snapshots import _seg_cache_clear
         _seg_cache_clear()
         t0 = time.perf_counter()
         m = tab.manifest()
-        kept = tab.prune_files(m, [("id", "between",
-                                    (5_000, 9_000))])
+        kept = prune_manifest_files(m, [("id", "between",
+                                         (5_000, 9_000))])
         plan_s = time.perf_counter() - t0
         # warm: segments are immutable and lru-cached for the process
         t0 = time.perf_counter()
-        tab.prune_files(tab.manifest(), [("id", "between",
-                                          (5_000, 9_000))])
+        prune_manifest_files(tab.manifest(), [("id", "between",
+                                               (5_000, 9_000))])
         plan_warm_s = time.perf_counter() - t0
         # COW DML commit (r9 removal lists): drop 10 files from the
-        # table - mirrors SnapshotTable._publish_cow exactly.  On a
+        # table, as SnapshotTable's copy-on-write DML does.  On a
         # segmented parent the carried segments ride unchanged and the
         # 10 paths land on the manifest's removal list (O(touched));
         # inline parents rewrite the list directly (O(table) JSON).
         m2 = tab.manifest()
-        touched = m2["files"][:10]
-        tset = set(touched)
         t0 = time.perf_counter()
-        if m2.get("file_segments"):
-            tab._commit_manifest(
-                tab.current_version(), [], m2["rows"] - 10 * 1000,
-                "delete", stats={}, segments=m2.get("segments"),
-                file_segments=m2["file_segments"],
-                removed_files=list(m2.get("removed_files") or []) + touched)
-        else:
-            from aliyun_maxcompute_data_collectors_spark.snapshots import resolve_stats
-            all_stats, all_blooms = resolve_stats(m2)
-            keep = [f for f in m2["files"] if f not in tset]
-            kset = set(keep)
-            tab._commit_manifest(
-                tab.current_version(), keep, m2["rows"] - 10 * 1000,
-                "delete",
-                stats={f: s for f, s in all_stats.items() if f in kset},
-                blooms={f: b for f, b in all_blooms.items()
-                        if f in kset} or None)
+        tab.commit(m2, "delete", rows=m2["rows"] - 10 * 1000,
+                   remove=m2["files"][:10])
         dml_commit_s = time.perf_counter() - t0
         assert len(tab.manifest()["files"]) == len(m2["files"]) - 10
         # manifest/segment footprint of the steady-state table, captured
         # BEFORE the CDF-appends below inflate the inline variants
-        size = os.path.getsize(tab._manifest_path(tab.current_version()))
+        size = os.path.getsize(tab.manifest_path(tab.current_version()))
         seg_bytes = sum(
-            os.path.getsize(os.path.join(tab._root, "manifests", f))
-            for f in os.listdir(os.path.join(tab._root, "manifests"))
+            os.path.getsize(os.path.join(tab.root, "manifests", f))
+            for f in os.listdir(os.path.join(tab.root, "manifests"))
             if f.startswith("seg-"))
         # CDF RANGE PLANNING over 50 commits (r11, VERDICT r10 #3): 49
         # more appends (100 files each, recording per-commit deltas as
@@ -145,20 +124,14 @@ def bench_one(n_files: int, blooms: bool) -> dict:
             newc = [os.path.join(root, "_snapshots", "files",
                                  f"cdf{c:02d}/{i:05d}.parquet")
                     for i in range(100)]
-            pfsegs_c = pmc.get("file_segments") or None
-            tab._commit_manifest(
-                tab.current_version(),
-                newc if pfsegs_c else pmc["files"] + newc,
-                pmc["rows"] + 100 * 1000, "append",
-                stats={**(pmc.get("stats") or {}),
-                       **{f: synth_stats(f, i) for i, f in enumerate(newc)}},
-                blooms=pmc.get("blooms"), segments=pmc.get("segments"),
-                file_segments=pfsegs_c,
-                removed_files=pmc.get("removed_files"),
-                delta_added=newc, delta_removed=[])
+            tab.commit(pmc, "append", rows=pmc["rows"] + 100 * 1000,
+                       add=newc,
+                       stats={f: synth_stats(f, i)
+                              for i, f in enumerate(newc)})
         _seg_cache_clear()
+        planner = SnapshotTable(None, root)
         t0 = time.perf_counter()
-        plan = tab._plan_change_range(cdf_since, tab.current_version())
+        plan = planner._plan_change_range(cdf_since, tab.current_version())
         cdf_plan_s = time.perf_counter() - t0
         assert plan is not None
         assert sum(len(s[2]) for s in plan) == 49 * 100

@@ -90,8 +90,7 @@ def prof_delete_mor_phases(spark, reps: int = 3):
                 "l_orderkey", "l_linenumber", "l_extendedprice")
             tab = SnapshotTable.init(spark, root)
             tab.append(li.coalesce(2))
-            parent = tab.current_version()
-            m = tab.manifest(parent)
+            m = tab.manifest()
             conjuncts, pred = tab._resolve_predicate(
                 "l_orderkey % 100 BETWEEN 0 AND 3")
             candidates = m["files"]
@@ -112,15 +111,9 @@ def prof_delete_mor_phases(spark, reps: int = 3):
                                             per_file, mapped)
             t.mark("dv_entries")
             n_del = sum(per_file.values())
-            tab._commit_manifest(
-                parent, m["files"], m["rows"] - n_del, "delete-mor",
-                stats=m.get("stats"), schema=m.get("schema"),
-                blooms=m.get("blooms"), segments=m.get("segments"),
-                file_segments=m.get("file_segments") or None,
-                removed_files=m.get("removed_files"),
-                delta_added=[], delta_removed=[], dvs=dvs,
-                delta_dv=delta_dv)
-            t.mark("commit_manifest")
+            tab._store.commit(m, "delete-mor", rows=m["rows"] - n_del,
+                              dvs=dvs, delta_dv=delta_dv)
+            t.mark("commit")
             t.dump(f"delete_mor phases rep{rep}")
         finally:
             shutil.rmtree(root, ignore_errors=True)

@@ -1,0 +1,410 @@
+"""ManifestStore without Spark: a model-based state machine over every
+manifest layout, crash injection at each durable step of a commit, the
+directory-fsync durability pin and the pyspark-free import.
+
+Nothing here starts a JVM.  Hypothesis budgets follow the suite's
+tiers: quarter by default, ``SPARK_GRAFT_TEST_TIER=full`` for all
+examples."""
+
+from __future__ import annotations
+
+import os
+import shutil
+import subprocess
+import sys
+import tempfile
+
+import pytest
+from hypothesis import HealthCheck, settings
+from hypothesis import strategies as st
+from hypothesis.stateful import (
+    RuleBasedStateMachine,
+    initialize,
+    invariant,
+    precondition,
+    rule,
+)
+
+from aliyun_maxcompute_data_collectors_spark.manifest_store import (
+    ManifestStore,
+    resolve_stats,
+)
+
+_FULL_TIER = os.environ.get("SPARK_GRAFT_TEST_TIER", "").lower() == "full"
+
+
+def _ex(n: int) -> int:
+    return n if _FULL_TIER else max(5, n // 4)
+
+
+# ---------------------------------------------------------------------------
+# model-based state machine
+# ---------------------------------------------------------------------------
+
+class StoreModel(RuleBasedStateMachine):
+    """Every commit shape against a pure-Python model: per version, the
+    ordered live file list, each live file's stats, the deletion-vector
+    map and the file diff against the parent (None when the commit
+    records none).  Thresholds are drawn small so inline, stats-
+    segmented, file-segmented, removal-list, fold and parquet layouts
+    all occur."""
+
+    def __init__(self):
+        super().__init__()
+        self.tmp = tempfile.mkdtemp(prefix="msmodel_")
+        self.n = 0
+        self.versions: dict[int, dict] = {}
+
+    def teardown(self):
+        shutil.rmtree(self.tmp, ignore_errors=True)
+
+    @initialize(inline_files=st.integers(1, 4),
+                inline_stats_files=st.integers(1, 4),
+                max_segments=st.integers(1, 4),
+                removed_files_max=st.integers(1, 4),
+                parquet_seg_min_files=st.sampled_from([1, 10 ** 9]))
+    def create(self, **thresholds):
+        self.store = ManifestStore.init(os.path.join(self.tmp, "t"),
+                                        **thresholds)
+        self.versions[1] = {"files": [], "dvs": {}, "delta": ([], [])}
+
+    # -- helpers -------------------------------------------------------------
+    @property
+    def head(self) -> dict:
+        return self.versions[self.store.current_version()]
+
+    def _new(self, k: int) -> list[str]:
+        out = []
+        for _ in range(k):
+            self.n += 1
+            out.append(f"/data/f{self.n:05d}.parquet")
+        return out
+
+    @staticmethod
+    def _stats(files) -> dict:
+        return {f: {"x": [int(f[7:12]), int(f[7:12]) + 1]} for f in files}
+
+    def _commit(self, operation, live, live_dvs, diff, **kw) -> None:
+        v = self.store.commit(self.store.manifest(), operation,
+                              rows=len(live), **kw)
+        self.versions[v] = {"files": live, "dvs": live_dvs, "delta": diff}
+
+    def _pick(self, data, live) -> list[str]:
+        picked = data.draw(st.lists(st.sampled_from(live), unique=True,
+                                    min_size=1, max_size=3))
+        return [f for f in live if f in picked]
+
+    # -- rules ---------------------------------------------------------------
+    @rule(k=st.integers(1, 3))
+    def append(self, k):
+        head, add = self.head, self._new(k)
+        self._commit("append", head["files"] + add, head["dvs"],
+                     (add, []), add=add, stats=self._stats(add))
+
+    @precondition(lambda self: self.versions and self.head["files"])
+    @rule(data=st.data(), k=st.integers(0, 2))
+    def cow(self, data, k):
+        head, add = self.head, self._new(k)
+        gone = self._pick(data, head["files"])
+        live = [f for f in head["files"] if f not in gone] + add
+        dvs = {f: d for f, d in head["dvs"].items() if f not in gone}
+        self._commit("delete", live, dvs, (add, gone), add=add,
+                     stats=self._stats(add), remove=gone)
+
+    @rule(k=st.integers(0, 3))
+    def replace(self, k):
+        head, add = self.head, self._new(k)
+        self._commit("overwrite", add, {}, (add, head["files"]), add=add,
+                     stats=self._stats(add), shape="replace")
+
+    @precondition(lambda self: self.versions and self.head["files"])
+    @rule(data=st.data(), k=st.integers(0, 2))
+    def fold(self, data, k):
+        head, add = self.head, self._new(k)
+        gone = (self._pick(data, head["files"])
+                if data.draw(st.booleans()) else [])
+        live = [f for f in head["files"] if f not in gone] + add
+        dvs = {f: d for f, d in head["dvs"].items() if f not in gone}
+        self._commit("compact", live, dvs, (add, gone), add=add,
+                     stats=self._stats(add), remove=gone, shape="fold")
+
+    @precondition(lambda self: self.versions and self.head["files"])
+    @rule(data=st.data())
+    def set_dvs(self, data):
+        head = self.head
+        hit = self._pick(data, head["files"])
+        self.n += 1
+        side = f"/data/dv{self.n:05d}"
+        new = {f: {"path": side, "n": 1 + (head["dvs"].get(f) or {})
+                   .get("n", 0)} for f in hit}
+        self._commit("delete-mor", head["files"], {**head["dvs"], **new},
+                     ([], []), dvs=new,
+                     delta_dv={"path": side, "files": hit, "n": len(hit)})
+
+    @precondition(lambda self: len(self.versions) > 1)
+    @rule(data=st.data())
+    def rollback(self, data):
+        v = data.draw(st.sampled_from(sorted(self.versions)))
+        head = self.store.current_version()
+        target = self.versions[v]
+        nv = self.store.commit(self.store.manifest(v), f"rollback->v{v}",
+                               rows=len(target["files"]), onto=head)
+        self.versions[nv] = {"files": target["files"], "dvs": target["dvs"],
+                             "delta": None}
+
+    # -- checks --------------------------------------------------------------
+    @invariant()
+    def every_version_matches_model(self):
+        if not self.versions:
+            return
+        assert not os.path.exists(os.path.join(self.store.root,
+                                               "COMMIT_LOCK"))
+        for v, want in self.versions.items():
+            m = self.store.manifest(v)
+            # no removed file ever comes back, order included
+            assert m["files"] == want["files"], v
+            parent = m["parent"]
+            delta = self.store.commit_delta(v)
+            if want["delta"] is None:
+                assert delta is None, v
+            elif delta is not None:
+                old = set(self.versions[parent]["files"]) if parent else set()
+                new = set(want["files"])
+                assert set(delta[0]) == new - old, v
+                assert set(delta[1]) == old - new, v
+            stats, _ = resolve_stats(m)
+            assert {f: stats.get(f) for f in m["files"]} == \
+                self._stats(m["files"]), v
+            dvs = m.get("dvs") or {}
+            assert set(dvs) <= set(m["files"]), v
+            assert dvs == want["dvs"], v
+
+
+StoreModel.TestCase.settings = settings(
+    max_examples=_ex(120), stateful_step_count=20, deadline=None,
+    suppress_health_check=[HealthCheck.too_slow])
+TestStoreModel = StoreModel.TestCase
+
+
+# ---------------------------------------------------------------------------
+# crash injection
+# ---------------------------------------------------------------------------
+
+def _files(prefix: str, k: int) -> list[str]:
+    return [f"/data/{prefix}{i:03d}.parquet" for i in range(k)]
+
+
+def _stats(files) -> dict:
+    return {f: {"x": [i, i + 1]} for i, f in enumerate(files)}
+
+
+def _append(store, add, **kw):
+    m = store.manifest()
+    return store.commit(m, "append", rows=m["rows"] + len(add), add=add,
+                        stats=_stats(add), **kw)
+
+
+def _seeded(path: str, thresholds: dict, n_appends: int) -> ManifestStore:
+    store = ManifestStore.init(path, **thresholds)
+    for i in range(n_appends):
+        _append(store, _files(f"s{i}_", 2))
+    return store
+
+
+def _do_append(store):
+    return _append(store, _files("new", 3))
+
+
+def _do_cow(store):
+    m = store.manifest()
+    return store.commit(m, "delete", rows=m["rows"] - 1,
+                        add=_files("rw", 1), stats=_stats(_files("rw", 1)),
+                        remove=m["files"][:2])
+
+
+def _do_replace(store):
+    return store.commit(store.manifest(), "overwrite", rows=2,
+                        add=_files("ow", 2), stats=_stats(_files("ow", 2)),
+                        shape="replace")
+
+
+def _do_fold(store):
+    m = store.manifest()
+    return store.commit(m, "compact", rows=m["rows"], add=_files("cp", 1),
+                        stats=_stats(_files("cp", 1)),
+                        remove=m["files"][-2:], shape="fold")
+
+
+def _do_rollback(store):
+    return store.commit(store.manifest(2), "rollback->v2", rows=2,
+                        onto=store.current_version())
+
+
+CRASH_CASES = {
+    # (thresholds, seeding appends, commit)
+    "append-inline": ({}, 2, _do_append),
+    "append-crossing": ({"inline_files": 4}, 1, _do_append),
+    "append-segmented-json": ({"inline_files": 2}, 3, _do_append),
+    "append-stats-segments": ({"inline_stats_files": 1}, 2, _do_append),
+    "append-housekeeping-fold": ({"inline_files": 1, "max_segments": 2},
+                                 3, _do_append),
+    "cow-removal-list": ({"inline_files": 2}, 3, _do_cow),
+    "cow-removal-fold": ({"inline_files": 2, "removed_files_max": 1},
+                         3, _do_cow),
+    "cow-inline": ({}, 3, _do_cow),
+    "replace": ({"inline_files": 2}, 3, _do_replace),
+    "fold-parquet": ({"inline_files": 2, "parquet_seg_min_files": 1},
+                     3, _do_fold),
+    "rollback": ({"inline_files": 2}, 3, _do_rollback),
+}
+
+
+class _Crash(Exception):
+    pass
+
+
+class _Injector:
+    """Counts the durable steps a commit reaches - ``os.fsync``,
+    ``os.rename`` and segment writes - and raises at the ``fail_at``-th
+    one (never, when None).  ``published`` records that HEAD was renamed
+    into place before the failure."""
+
+    def __init__(self, monkeypatch, fail_at: int | None):
+        self.n, self.fail_at, self.published = 0, fail_at, False
+        real_fsync, real_rename = os.fsync, os.rename
+        real_seg = ManifestStore.write_segment
+
+        def step():
+            self.n += 1
+            if self.n == self.fail_at:
+                raise _Crash(self.n)
+
+        def fsync(fd):
+            step()
+            return real_fsync(fd)
+
+        def rename(src, dst):
+            step()
+            real_rename(src, dst)
+            if os.path.basename(dst) == "HEAD":
+                self.published = True
+
+        def write_segment(store, version, payload):
+            step()
+            return real_seg(store, version, payload)
+
+        monkeypatch.setattr(os, "fsync", fsync)
+        monkeypatch.setattr(os, "rename", rename)
+        monkeypatch.setattr(ManifestStore, "write_segment", write_segment)
+
+
+def _state(store: ManifestStore) -> tuple:
+    m = store.manifest()
+    stats, _ = resolve_stats(m)
+    return (m["version"], m["files"], {f: stats.get(f) for f in m["files"]},
+            m.get("dvs"), store.commit_delta(m["version"]))
+
+
+@pytest.mark.parametrize("case", sorted(CRASH_CASES))
+def test_crash_at_every_commit_step(tmp_path, monkeypatch, case):
+    """Raise at the N-th fsync, rename or segment write of one commit,
+    for every N the commit reaches.  Before the HEAD rename (the commit
+    point) the store reads exactly the pre-commit state; a failure at
+    the directory fsync after it leaves the complete post-commit state.
+    Either way COMMIT_LOCK is gone and the next commit succeeds."""
+    thresholds, seeds, do = CRASH_CASES[case]
+
+    ref = _seeded(str(tmp_path / "ref"), thresholds, seeds)
+    pre = _state(ref)
+    with monkeypatch.context() as mp:
+        count = _Injector(mp, None)
+        do(ref)
+    post = _state(ref)
+    assert count.n >= 4, count.n  # >= manifest + HEAD, file + dir fsyncs
+
+    for n in range(1, count.n + 1):
+        store = _seeded(str(tmp_path / f"c{n}"), thresholds, seeds)
+        with monkeypatch.context() as mp:
+            inj = _Injector(mp, n)
+            with pytest.raises(_Crash):
+                do(store)
+        assert _state(store) == (post if inj.published else pre), (case, n)
+        assert not os.path.exists(os.path.join(store.root, "COMMIT_LOCK"))
+        if inj.published:
+            _append(store, _files("next", 1))
+        else:
+            do(store)
+            assert _state(store) == post, (case, n)
+
+
+def test_commit_fsyncs_directory_after_each_rename(tmp_path, monkeypatch):
+    """Durability: every rename that publishes a segment, a manifest or
+    HEAD is followed by an fsync of the directory holding it - without
+    it a power loss can undo the rename after the commit returned."""
+    store = ManifestStore.init(str(tmp_path / "d"), inline_files=1,
+                               parquet_seg_min_files=1)
+    _append(store, _files("a", 1))
+    events: list[tuple[str, str]] = []
+    fd_paths: dict[int, str] = {}
+    real_open, real_close = os.open, os.close
+    real_fsync, real_rename = os.fsync, os.rename
+
+    def op(path, flags, *a, **kw):
+        fd = real_open(path, flags, *a, **kw)
+        fd_paths[fd] = os.fspath(path)
+        return fd
+
+    def close(fd):
+        fd_paths.pop(fd, None)
+        return real_close(fd)
+
+    def fsync(fd):
+        p = fd_paths.get(fd)
+        if p is not None and os.path.isdir(p):
+            events.append(("fsync_dir", os.path.normpath(p)))
+        return real_fsync(fd)
+
+    def rename(src, dst):
+        real_rename(src, dst)
+        events.append(("rename", os.fspath(dst)))
+
+    monkeypatch.setattr(os, "open", op)
+    monkeypatch.setattr(os, "close", close)
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "rename", rename)
+    v = _append(store, _files("b", 2))   # crosses: writes a parquet segment
+    monkeypatch.undo()
+
+    renames = [i for i, e in enumerate(events) if e[0] == "rename"]
+    published = [events[i][1] for i in renames]
+    assert published[-2:] == [store.manifest_path(v), store.head_path()]
+    assert any(p.endswith(".parquet") for p in published)
+    for i in renames:
+        assert events[i + 1] == (
+            "fsync_dir", os.path.dirname(events[i][1])), events
+    n_dir = sum(e[0] == "fsync_dir" for e in events)
+    assert n_dir == len(renames) == 3
+
+
+def test_manifest_store_imports_without_pyspark(tmp_path):
+    """The store is Spark-free by construction, not by assumption:
+    import it (and commit through it) with pyspark made unimportable."""
+    code = (
+        "import sys, os\n"
+        "sys.modules['pyspark'] = None\n"
+        "from aliyun_maxcompute_data_collectors_spark.manifest_store "
+        "import ManifestStore\n"
+        "s = ManifestStore.init(sys.argv[1], inline_files=1)\n"
+        "for i in range(3):\n"
+        "    m = s.manifest()\n"
+        "    s.commit(m, 'append', rows=i + 1, add=[f'/d/f{i}'])\n"
+        "assert s.manifest()['files'] == ['/d/f0', '/d/f1', '/d/f2']\n"
+        "assert not [k for k in sys.modules if k.startswith('pyspark.')]\n"
+        "print('spark-free')\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code, str(tmp_path / "t")],
+                         cwd=root, capture_output=True, text=True,
+                         timeout=120)
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "spark-free"
+

@@ -612,6 +612,9 @@ def test_stream_sink_retries_on_concurrent_commit(spark, orders, root,
     import pyarrow.parquet as pq
 
     import aliyun_maxcompute_data_collectors_spark.sources.pyds as P
+    from aliyun_maxcompute_data_collectors_spark.manifest_store import (
+        ManifestStore,
+    )
     from aliyun_maxcompute_data_collectors_spark.sources.pyds import (
         _FileCommit,
         _SnapshotStreamWriter,
@@ -622,16 +625,15 @@ def test_stream_sink_retries_on_concurrent_commit(spark, orders, root,
     tab.append(orders.where(m == 0))
     state = {"fired": False}
 
-    class Hooked(SnapshotTable):
-        def _commit_manifest(self, parent, files, rows, operation, **kw):
+    class Hooked(ManifestStore):
+        def commit(self, base, operation, **kw):
             if operation.startswith("stream-append") and not state["fired"]:
                 state["fired"] = True
                 SnapshotTable(spark, root).append(
                     orders.where(m == 1).coalesce(1))
-            return super()._commit_manifest(parent, files, rows,
-                                            operation, **kw)
+            return super().commit(base, operation, **kw)
 
-    monkeypatch.setattr(P, "SnapshotTable", Hooked)
+    monkeypatch.setattr(P, "ManifestStore", Hooked)
     sw = _SnapshotStreamWriter(root)
     f = os.path.join(sw._stage, "part-test.parquet")
     pq.write_table(pa.table({"o_orderkey": pa.array([10**9], pa.int64()),

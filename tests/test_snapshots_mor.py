@@ -293,7 +293,7 @@ def test_changes_legacy_append_range_keeps_fast_path(spark, table):
     table.append(_df(spark, [(4, "d")]).coalesce(1))
     # strip every delta record, as a pre-r11 writer would have left it
     for ver in range(1, table.current_version() + 1):
-        mp = table._manifest_path(ver)
+        mp = table._store.manifest_path(ver)
         mj = _json.load(open(mp))
         mj.pop("delta", None)
         with open(mp, "w") as f:
