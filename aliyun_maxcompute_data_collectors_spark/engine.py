@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from aliyun_maxcompute_data_collectors_spark.catalog import OdpsCatalog
@@ -460,21 +461,15 @@ class Engine:
         """DataFrames of existing TEMP views whose names are about to be
         replaced by on-demand registration; ``sql`` re-registers them from
         the captured (already-analyzed) plans after the statement."""
-        names = list(names)
-        if not names:
-            return {}
-        try:
-            temp = {t.name for t in self.spark.catalog.listTables()
-                    if t.isTemporary}
-        except Exception:
-            temp = set()
+        # per-name lookups, not listTables(): listing launches Spark jobs
+        cat = self.spark.catalog
         out: dict[str, DataFrame] = {}
         for n in names:
-            if n in temp:
-                try:
+            try:
+                if cat.tableExists(n) and cat.getTable(n).isTemporary:
                     out[n] = self.spark.table(n)
-                except Exception:
-                    pass
+            except AnalysisException:
+                pass
         return out
 
     _MAX_PT = re.compile(r"(?i)\bmax_pt\s*\(\s*'([\w.]+)'\s*\)")

@@ -76,7 +76,7 @@ def word_shingles(col: Column | str, n: int = 5) -> Column:
 
 
 def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:
-    """(id, shingle) exploded - the join-able form used by every near-dup op.
+    """(id, shingle) exploded - the join-able form of the near-dup ops.
 
     Shingling amplifies rows ~(words-n)x, so the input is spread across the
     cluster first when its scan parallelism is low (single small file)."""
@@ -184,19 +184,28 @@ def ngram_jaccard_pairs(
                     _fp_or_sentinel(text_col).alias("__fp"))
     reps = grp.groupBy("__fp").agg(F.min("__gid").alias("__rep"),
                                    F.count(F.lit(1)).alias("__gn"))
-    # cached like ``sh`` below and for the same reason (r13): this
+    # materialized like ``sh`` below and for the same reason (r13): this
     # relation is referenced FIVE times downstream (rep_df's semi-join,
     # m1/m2 pair expansion, both sides of the within-group self-join) -
-    # uncached, each reference re-ran the doc scan + fingerprint
+    # unmaterialized, each reference re-ran the doc scan + fingerprint
     # aggregate + join (20 parquet scans in one executed plan).  Four
-    # narrow columns, O(docs) rows - strictly smaller than the cached
-    # shingle table.
+    # narrow columns, O(docs) rows - strictly smaller than the shingle
+    # table.  A local checkpoint, not cache(): a cache() entry stays in
+    # the session's CacheManager (plan and blocks) until unpersisted,
+    # while local-checkpoint blocks go with the last DataFrame holding
+    # them (and a lost executor cannot recompute them from lineage).
     members = grp.join(reps, "__fp").select(
-        F.col("__fp"), F.col("__gid"), F.col("__rep"), F.col("__gn")).cache()
-    rep_df = (df.join(members.where(F.col("__gid") == F.col("__rep"))
-                      .select(F.col("__gid").alias(id_col)), id_col, "left_semi"))
+        F.col("__fp"), F.col("__gid"), F.col("__rep"), F.col("__gn")
+    ).localCheckpoint(eager=True)
+    # spread the scan-side projection, not the joined frame: on a plan
+    # with exchanges getNumPartitions() runs the query stages as jobs
+    from aliyun_maxcompute_data_collectors_spark.session import ensure_parallelism
+    rep_df = (ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
+              .join(members.where(F.col("__gid") == F.col("__rep"))
+                    .select(F.col("__gid").alias(id_col)), id_col, "left_semi"))
 
-    sh = shingle_table(rep_df, id_col, text_col, n)
+    sh = rep_df.select(F.col(id_col),
+                       F.explode(word_shingles(text_col, n)).alias("shingle"))
     if max_df is not None:
         # df counts are over REPRESENTATIVES (distinct contents): the cap
         # semantics "shared by more than max_df distinct contents" - for
@@ -208,7 +217,7 @@ def ngram_jaccard_pairs(
             .select("shingle")
         )
         sh = sh.join(rare, "shingle", "left_semi")
-    sh = sh.cache()
+    sh = sh.localCheckpoint(eager=True)
     counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -584,15 +593,13 @@ def minhash_lsh_pairs(
             # a degenerate 10M-member bucket never travel at all.
             buckets = buckets.join(F.broadcast(hot), ["band", "bucket"],
                                    "left_anti")
-    # persist the capped band relation (VERDICT r6 #8): the self-join
-    # references it on BOTH sides, so without a cache the hashing +
+    # materialize the capped band relation (VERDICT r6 #8): the self-join
+    # references it on BOTH sides, so without a lineage cut the hashing +
     # anti-join pipeline runs twice (and its run-to-run scheduling split
-    # was the measured 1.41-1.71s spread).  persist() is LAZY - the first
-    # self-join stage computes and caches, the second reads the cache, no
-    # extra job - and the frame is narrow (id, band, bucket).  The cached
-    # RDD is released by the ContextCleaner when the DataFrame goes out
-    # of scope (same lifecycle as the sig localCheckpoint above).
-    buckets = buckets.persist()
+    # was the measured 1.41-1.71s spread).  The frame is narrow (id, band,
+    # bucket).  A local checkpoint like the signatures, not persist(), so
+    # its blocks go with the result (see ngram_jaccard_pairs).
+    buckets = buckets.localCheckpoint(eager=True)
     a = buckets.alias("a")
     b = buckets.alias("b")
     cand = (
@@ -922,18 +929,18 @@ def substring_dedup(
     winners = grams.groupBy("fp").agg(
         F.min(F.struct(F.col("id").alias("d"), F.col("pos").alias("p"))).alias("w"),
         F.count(F.lit(1)).alias("c"))
-    # persist() is LAZY and pays for itself immediately: ``dup`` feeds four
-    # downstream consumers (affected x2, cover x2), and without the cache
-    # the whole gram-explode + winner-agg + join subtree - the dominant
-    # cost - re-executes once per consumer.  ``dup`` itself is only the
-    # duplicated occurrences (small by construction on a mostly-unique
-    # corpus), so the cached footprint is bounded by the dup rate, not the
-    # corpus.  Falls out of scope with the returned DataFrame.
+    # ``dup`` feeds four downstream consumers (affected x2, cover x2);
+    # without the checkpoint the whole gram-explode + winner-agg + join
+    # subtree - the dominant cost - re-executes once per consumer.  ``dup``
+    # itself is only the duplicated occurrences (small by construction on
+    # a mostly-unique corpus), so the materialized footprint is bounded by
+    # the dup rate, not the corpus.  A local checkpoint, not persist(),
+    # so its blocks go with the result (see ngram_jaccard_pairs).
     dup = (
         grams.join(winners.where(F.col("c") >= 2), "fp")
         .where(~((F.col("id") == F.col("w.d")) & (F.col("pos") == F.col("w.p"))))
         .select("id", "pos")
-        .persist()
+        .localCheckpoint(eager=True)
     )
     affected = dup.select("id").distinct()
     cover = (

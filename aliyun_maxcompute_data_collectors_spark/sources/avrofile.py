@@ -641,9 +641,9 @@ def read_avro(spark: SparkSession, path: str,
     """Scan a dir/glob of Avro container files as a DataFrame.
 
     Schema resolution: explicit ``avro_schema`` wins; otherwise the
-    smallest file's header is parsed driver-side (header-only metadata,
-    but binaryFile ships whole files - pass the schema explicitly on
-    object stores with giant files).
+    smallest file's header is parsed driver-side, reading header bytes
+    only (no Spark job; the local/shared-FS contract of the split reader
+    below).
 
     ``split_bytes`` (VERDICT r6 #6) switches to SYNC-MARKER SPLITTING:
     each file's byte range is divided into ~split_bytes splits and every
@@ -658,10 +658,12 @@ def read_avro(spark: SparkSession, path: str,
         return _read_avro_split(spark, path, avro_schema, split_bytes)
     src = spark.read.format("binaryFile").load(path)
     if avro_schema is None:
-        first = (src.orderBy("length").select("content").head())
-        if first is None:
+        from aliyun_maxcompute_data_collectors_spark.snapshots import (
+            _strip_file_scheme)
+        files = [_strip_file_scheme(f) for f in src.inputFiles()]
+        if not files:
             raise ValueError(f"read_avro: no files under {path}")
-        avro_schema, _ = parse_container(bytes(first["content"]))
+        avro_schema = _read_header_driver(min(files, key=os.path.getsize))[0]
     sdt = spark_type_of(avro_schema)
     if not isinstance(sdt, T.StructType):
         raise ValueError("read_avro: top-level avro schema must be a record")

@@ -10,7 +10,8 @@ with the driver's pandas canonicalization (raw-frame ``sort_values``, so
 list-valued cells throw exactly like the driver's red row), everything
 past position 50 executed count-only.  ``gate.sh`` fails unless every
 first-50 slot is green here, so a query physically cannot hold a rotation
-slot without a vanilla-session pass.
+slot without a vanilla-session pass.  Every query, in either part, also
+fails if it leaves a changed SQL conf or a new CacheManager entry behind.
 
 Usage: python scripts/driver_sim.py [sf_dir]   (default /root/testdata/sf0.01)
 """
@@ -61,9 +62,42 @@ def main() -> int:
         # mutate); SparkConf entries are immutable post-launch
         return {r["key"]: r["value"] for r in spark.sql("SET").collect()}
 
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    conf_before_all = _sql_conf_snapshot()
+    cached_before = cache_manager.cachedData().size()
+
+    def _leaks(name):
+        """Session state ``name`` left behind, reported once per leaker.
+
+        VERDICT r6 ask #3: no query may mutate session SQL conf without
+        restoring it - a leaked conf silently changes every later query in
+        the shared driver session (e.g. a raised cteRecursionRowLimit
+        disabling the runaway-row valve).  Likewise no query may leave an
+        entry in the CacheManager: nothing clears it but an explicit
+        unpersist, so each leaked entry pins its cached relation and
+        executed plan in driver heap for the rest of the session.
+        Diffing after EVERY query makes both classes structurally
+        impossible."""
+        nonlocal conf_before_all, cached_before
+        out = []
+        conf_now = _sql_conf_snapshot()
+        if conf_now != conf_before_all:
+            changed = {k: (conf_before_all.get(k), conf_now.get(k))
+                       for k in set(conf_before_all) | set(conf_now)
+                       if conf_before_all.get(k) != conf_now.get(k)}
+            out.append((name, f"ConfLeak: {changed}"))
+            print(f"  CONF LEAK     {name}: {changed}")
+            conf_before_all = conf_now
+        cached_now = cache_manager.cachedData().size()
+        if cached_now > cached_before:
+            out.append((name, f"CacheLeak: +{cached_now - cached_before} "
+                              "CacheManager entries"))
+            print(f"  CACHE LEAK    {name}: +{cached_now - cached_before} entries")
+        cached_before = cached_now
+        return out
+
     con = harness._duck(sf_dir)
     red = []
-    conf_before_all = _sql_conf_snapshot()
     for name in front:
         try:
             sdf = queries[name](spark, sf_dir)
@@ -96,19 +130,7 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001 - driver records any raise as red
             red.append((name, f"{type(e).__name__}: {e}"))
             print(f"  RED           {name}: {str(e)[:100]}")
-        # VERDICT r6 ask #3: no query may mutate session SQL conf without
-        # restoring it - a leaked conf silently changes every later query
-        # in the shared driver session (e.g. a raised cteRecursionRowLimit
-        # disabling the runaway-row valve).  Diffing after EVERY query
-        # makes the whole class structurally impossible.
-        conf_now = _sql_conf_snapshot()
-        if conf_now != conf_before_all:
-            changed = {k: (conf_before_all.get(k), conf_now.get(k))
-                       for k in set(conf_before_all) | set(conf_now)
-                       if conf_before_all.get(k) != conf_now.get(k)}
-            red.append((name, f"ConfLeak: {changed}"))
-            print(f"  CONF LEAK     {name}: {changed}")
-            conf_before_all = conf_now  # report each leaker once
+        red += _leaks(name)
     print(f"first-{DRIVER_WINDOW} window: {len(front) - len(red)}/{len(front)} green")
 
     tail_bad = []
@@ -117,14 +139,7 @@ def main() -> int:
             queries[name](spark, sf_dir).count()
         except Exception as e:  # noqa: BLE001
             tail_bad.append((name, str(e)[:80]))
-        conf_now = _sql_conf_snapshot()
-        if conf_now != conf_before_all:
-            changed = {k: (conf_before_all.get(k), conf_now.get(k))
-                       for k in set(conf_before_all) | set(conf_now)
-                       if conf_before_all.get(k) != conf_now.get(k)}
-            tail_bad.append((name, f"ConfLeak: {changed}"))
-            print(f"  CONF LEAK     {name}: {changed}")
-            conf_before_all = conf_now
+        tail_bad += _leaks(name)
     print(f"tail (count-only): {len(rest) - len(tail_bad)}/{len(rest)} OK")
 
     if red or tail_bad:

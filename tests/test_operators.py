@@ -132,6 +132,56 @@ def test_substring_dedup_full_cover_and_within_doc(spark):
         D.substring_dedup(df, "doc_id", "text", k=1)
 
 
+def test_dedup_intermediates_end_with_the_call(spark):
+    """The dedup operators' materialized intermediates live exactly as long
+    as their result: none registers in the session's CacheManager (which
+    only an explicit unpersist clears), and once the collected result is
+    dropped the ContextCleaner removes every storage block they wrote."""
+    import gc
+    import time
+
+    from aliyun_maxcompute_data_collectors_spark.operators.corpus import (
+        boilerplate_scores)
+
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def stored():
+        # ids of RDDs holding at least one cached or checkpointed partition
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    spark.catalog.clearCache()
+    base = stored()
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    texts = [" ".join(words[i:] + words[:i]) for i in range(6)]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts + texts[:3] + [texts[0] + " x"])],
+        "doc_id long, text string")
+    results = [
+        D.ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.5,
+                              max_df=5),
+        D.ngram_containment_pairs(df, "doc_id", "text", n=3),
+        D.minhash_lsh_pairs(df, "doc_id", "text", threshold=0.5),
+        D.substring_dedup(df, "doc_id", "text", k=3),
+        boilerplate_scores(df, "doc_id", "text", n=3),
+    ]
+    assert all(r.collect() for r in results)
+    assert cache.isEmpty(), f"{cache.cachedData().size()} cached relations"
+    # the intermediates were materialized and are held by the results
+    assert stored() - base
+    del results
+    for _ in range(20):
+        # Python's collector first, so py4j proxies release their JVM
+        # objects, then the JVM's; the cleaner thread drops blocks after
+        # the collection, so poll until they are gone
+        gc.collect()
+        sc._jvm.java.lang.System.gc()
+        if not stored() - base:
+            break
+        time.sleep(0.5)
+    assert not stored() - base
+
+
 def test_bm25_scores_match_reference_formula(spark):
     import math
 
