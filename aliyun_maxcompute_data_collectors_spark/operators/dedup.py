@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
-from aliyun_maxcompute_data_collectors_spark.operators.text import normalized
+from aliyun_maxcompute_data_collectors_spark.operators.text import bind, normalized
 
 # deterministic permutation constants (generated once from a fixed LCG seed;
 # odd multipliers, distinct offsets)
@@ -65,14 +65,18 @@ DEFAULT_MAX_BUCKET = 100
 def word_shingles(col: Column | str, n: int = 5) -> Column:
     """Distinct word n-gram shingles of normalized text as array<string>.
     Documents shorter than n words get a single whole-text shingle."""
-    c = normalized(col)
-    words = F.split(c, r"\s+")
-    k = F.size(words)
-    grams = F.transform(
-        F.sequence(F.lit(0), k - F.lit(n)),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-    )
-    return F.array_distinct(F.when(k >= n, grams).otherwise(F.array(c)))
+    def of_text(c: Column) -> Column:
+        def of_words(words: Column) -> Column:
+            k = F.size(words)
+            grams = F.transform(
+                F.sequence(F.lit(0), k - F.lit(n)),
+                lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
+            )
+            return F.array_distinct(F.when(k >= n, grams).otherwise(F.array(c)))
+
+        return bind(F.split(c, r"\s+"), of_words)
+
+    return bind(normalized(col), of_text)
 
 
 def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:

@@ -26,6 +26,16 @@ WS = r"\s+"
 BPE_ISH = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
 
 
+def bind(value: Column, body) -> Column:
+    """``body(v)`` with ``v`` bound to ``value``, evaluated once per row.
+    Spark evaluates a higher-order function's lambda body per element and
+    shares no subexpression into it, so a per-document column referenced
+    inside one (the split words of a text, say) is rebuilt for every
+    element: O(n^2) per document.  A one-element ``transform`` binds it to
+    a lambda variable instead."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def tokens(col: Column | str) -> Column:
     """Whitespace tokens of trimmed text."""
     c = F.col(col) if isinstance(col, str) else col
@@ -112,31 +122,35 @@ def dup_token_ratio(col: Column | str) -> Column:
 def dup_bigram_ratio(col: Column | str) -> Column:
     """Same ratio over adjacent-token bigrams - catches phrase-level loops
     that unigram dedup misses."""
-    toks = _norm_tokens(col)
-    n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.concat_ws(" ", F.element_at(toks, i), F.element_at(toks, i + 1)),
-    )
-    ng = F.size(grams)
-    return F.when(
-        n > 1, F.round((ng - F.size(F.array_distinct(grams))).cast("double") / ng, 4)
-    ).otherwise(F.lit(0.0))
+    def ratio(toks: Column) -> Column:
+        n = F.size(toks)
+        grams = F.transform(
+            F.sequence(F.lit(1), n - 1),
+            lambda i: F.concat_ws(" ", F.element_at(toks, i), F.element_at(toks, i + 1)),
+        )
+        ng = F.size(grams)
+        return F.when(
+            n > 1, F.round((ng - F.size(F.array_distinct(grams))).cast("double") / ng, 4)
+        ).otherwise(F.lit(0.0))
+
+    return bind(_norm_tokens(col), ratio)
 
 
 def top_token_ratio(col: Column | str) -> Column:
     """Frequency share of the single most common token.  O(n x n_distinct)
     interpreted array work per document - fine for documents (n ~ 10^2-10^4);
     for book-length inputs chunk first (corpus.chunk_documents)."""
-    toks = _norm_tokens(col)
-    n = F.size(toks)
-    top = F.array_max(
-        F.transform(
-            F.array_distinct(toks),
-            lambda t: F.size(F.filter(toks, lambda x: x == t)),
+    def ratio(toks: Column) -> Column:
+        n = F.size(toks)
+        top = F.array_max(
+            F.transform(
+                F.array_distinct(toks),
+                lambda t: F.size(F.filter(toks, lambda x: x == t)),
+            )
         )
-    )
-    return F.when(n > 0, F.round(top.cast("double") / n, 4)).otherwise(F.lit(0.0))
+        return F.when(n > 0, F.round(top.cast("double") / n, 4)).otherwise(F.lit(0.0))
+
+    return bind(_norm_tokens(col), ratio)
 
 
 def repetition_ok(
@@ -300,16 +314,18 @@ def rolling_window_fingerprints(col: Column | str, window: int = 8) -> Column:
     sharing any span hash share a verbatim ``window``-token run.  O(n·w)
     interpreted expression work per doc; for chunk-boundary detection at
     scale prefer sampling positions (e.g. spans where hash % 64 == 0)."""
-    hs = _token_hashes(col)
-    starts = F.sequence(F.lit(1), F.greatest(F.size(hs) - window + 1, F.lit(1)))
-    return F.transform(
-        starts,
-        lambda i: F.aggregate(
-            F.slice(hs, i, window),
-            F.lit(0).cast("long"),
-            lambda a, h: (a * F.lit(ROLL_B) + h) % F.lit(ROLL_M),
-        ),
-    )
+    def spans(hs: Column) -> Column:
+        starts = F.sequence(F.lit(1), F.greatest(F.size(hs) - window + 1, F.lit(1)))
+        return F.transform(
+            starts,
+            lambda i: F.aggregate(
+                F.slice(hs, i, window),
+                F.lit(0).cast("long"),
+                lambda a, h: (a * F.lit(ROLL_B) + h) % F.lit(ROLL_M),
+            ),
+        )
+
+    return bind(_token_hashes(col), spans)
 
 
 # ---------------------------------------------------------------------------

@@ -61,6 +61,9 @@ from aliyun_maxcompute_data_collectors_spark.manifest_store import (  # noqa: F4
     _seg_cache_clear,
     _stat_from_json,
     _stat_to_json,
+    bloom_bitmap,
+    bloom_entry,
+    bloom_may_contain,
     resolve_stats,
     retry_on_conflict,
 )
@@ -373,17 +376,22 @@ def _columnar_exclude(lo, hi, op: str, value):
     return excl.to_numpy(zero_copy_only=False)
 
 
-def _bloom_excludes(fblooms: dict, col: str, value) -> bool:
+def _bloom_excludes(fblooms: dict, col: str, value, decoded: dict) -> bool:
+    """Does the file's bloom on ``col`` prove ``value`` absent?
+    ``decoded`` memoizes this file's bitmaps by column, so an entry is
+    decompressed at most once however many conjuncts probe it.  An
+    entry of unknown shape never excludes."""
     bl = fblooms.get(col)
-    if bl is None:
+    m = bl.get("m") if isinstance(bl, dict) else None
+    if not isinstance(m, int) or isinstance(m, bool) or m <= 0:
         return False
-    pos = _bloom_position(value, bl["m"])
+    pos = _bloom_position(value, m)
     if pos is None:
         return False
-    byte = bytes.fromhex(bl["hex"])[pos >> 3]
-    return not (byte >> (pos & 7)) & 1
-
-
+    if col not in decoded:
+        decoded[col] = bloom_bitmap(bl)
+    bits = decoded[col]
+    return bits is not None and not bloom_may_contain(bits, pos)
 
 
 def _interval_may_match(lo, hi, op: str, value) -> bool:
@@ -451,6 +459,7 @@ def prune_manifest_files(manifest: dict, conjuncts: list) -> list[str]:
     for f in manifest["files"]:
         fstats = stats.get(f) or {}
         fblooms = blooms.get(f) or {}
+        decoded: dict = {}
         keep = True
         for col, op, value in conjuncts:
             iv = fstats.get(col)
@@ -459,7 +468,8 @@ def prune_manifest_files(manifest: dict, conjuncts: list) -> list[str]:
                 if not _interval_may_match(lo, hi, op, value):
                     keep = False
                     break
-            if op in ("==", "=") and _bloom_excludes(fblooms, col, value):
+            if op in ("==", "=") and _bloom_excludes(fblooms, col, value,
+                                                     decoded):
                 keep = False  # definitely absent from this file
                 break
         if keep:
@@ -515,8 +525,9 @@ def _prune_segmented(manifest: dict, fsegs: list[str],
             if f in removed:
                 continue
             if bloom_conjs:
-                fb = blooms.get(f) or {}
-                if any(_bloom_excludes(fb, c, v) for c, v in bloom_conjs):
+                fb, decoded = blooms.get(f) or {}, {}
+                if any(_bloom_excludes(fb, c, v, decoded)
+                       for c, v in bloom_conjs):
                     continue
             kept.append(f)
     return kept
@@ -642,17 +653,9 @@ class SnapshotTable:
             F.md5(F.col(c).cast("string")), 1, 8), 16, 10).cast("long"),
             F.lit(m))
 
-    @staticmethod
-    def _bloom_hex(positions, m: int) -> dict:
-        ba = bytearray(m // 8)
-        for p in positions:
-            p = int(p)
-            ba[p >> 3] |= 1 << (p & 7)
-        return {"m": m, "hex": ba.hex()}
-
     def _collect_blooms(self, files: list[str], cols: list[str],
                         m: int) -> dict:
-        """{file: {col: {m, hex-bitmap}}} built in ONE grouped Spark job
+        """{file: {col: bloom entry}} built in ONE grouped Spark job
         over the new files (the read-back path; commits whose write this
         module plans itself ride :meth:`_write_files_bloom` instead and
         never pay this second pass).  Restrict ``cols`` to integral/
@@ -666,7 +669,7 @@ class SnapshotTable:
         out: dict = {}
         for r in rows:
             path = _strip_file_scheme(r["__f"])
-            out[path] = {c: self._bloom_hex(r[c] or [], m) for c in cols}
+            out[path] = {c: bloom_entry(r[c] or [], m) for c in cols}
         # map back onto the manifest's exact file strings
         by_real = {os.path.realpath(f): f for f in files}
         return {by_real.get(os.path.realpath(p), p): e
@@ -719,20 +722,22 @@ class SnapshotTable:
             return files, n, stats, {}
         if obs is not None:
             try:
+                import numpy as np
+
                 row = obs.get
-                bypid: dict = {c: {} for c in bloom_cols}
-                seen = set()
+                bypid: dict = {}
                 for c in bloom_cols:
-                    for e in (row[c] or []):
-                        p, v = divmod(int(e), bloom_bits)
-                        seen.add(p)
-                        bypid[c].setdefault(p, []).append(v)
+                    p, v = np.divmod(np.sort(np.asarray(
+                        row[c] or [], dtype=np.int64)), bloom_bits)
+                    pids, starts = np.unique(p, return_index=True)
+                    bypid[c] = dict(zip(pids.tolist(),
+                                        np.split(v, starts[1:])))
                 idx = {f: int(os.path.basename(f).split("-")[1])
                        for f in files}
+                seen = {p for g in bypid.values() for p in g}
                 if seen <= set(idx.values()):
                     return files, n, stats, {
-                        f: {c: self._bloom_hex(bypid[c].get(i, ()),
-                                               bloom_bits)
+                        f: {c: bloom_entry(bypid[c].get(i, ()), bloom_bits)
                             for c in bloom_cols}
                         for f, i in idx.items()}
             except Exception:  # pragma: no cover - defensive fallback
@@ -836,10 +841,12 @@ class SnapshotTable:
         ``bloom_cols`` (opt-in, integral/string columns): build an
         m=``bloom_bits`` bloom bitmap per (new file, column) so EQUALITY
         predicates prune files whose value ranges overlap (the point-
-        lookup case [min, max] intervals can never prune).  One extra
-        grouped pass over the new data per commit; size ``bloom_bits``
-        >= ~10x the expected distinct values per file or the bitmap
-        saturates into uselessness."""
+        lookup case [min, max] intervals can never prune).  The bit
+        positions ride the write job; size ``bloom_bits`` >= ~10x the
+        expected distinct values per file or the bitmap saturates into
+        uselessness.  Entries are stored compressed, so one costs about
+        its distinct values (n*log2(m/n) bits, ~1 KB for 500 keys at the
+        default m), not ``bloom_bits / 8`` bytes: a generous m is cheap."""
         pm = self.manifest()
         unified = unify_schemas(pm.get("schema"), df.schema)
         files, n, stats, wblooms = self._write_files_bloom(
@@ -1159,6 +1166,33 @@ class SnapshotTable:
                 .withColumn("__graft_fp", F.col("__graft_r"))
                 .drop("__graft_r"))
 
+    @staticmethod
+    def _position_join(scan: DataFrame, pos: DataFrame,
+                       how: str) -> DataFrame:
+        """``scan`` joined with the deletion-vector positions ``pos`` on
+        (``__graft_fp``, ``__graft_ri``), which both carry.  The hash
+        key is ONE long, ``xxhash64`` of the pair, and the pair itself
+        is compared in the join condition, so the join stays exact.  A
+        single long key makes a broadcast build side a
+        ``LongHashedRelation``; a (string, long) key would build an
+        ``UnsafeHashedRelation``, whose copy on every executor holds a
+        whole Tungsten page (8-64 MB) however few positions it has,
+        until the context cleaner drops the broadcast."""
+        key = F.xxhash64("__graft_fp", "__graft_ri")
+        p = pos.select(key.alias("__graft_pk"),
+                       F.col("__graft_fp").alias("__graft_pfp"),
+                       F.col("__graft_ri").alias("__graft_pri"))
+        # inside coalesce the pair check stays a join condition; bare
+        # equalities would be planned as two more hash keys
+        same = F.coalesce((F.col("__graft_fp") == F.col("__graft_pfp"))
+                          & (F.col("__graft_ri") == F.col("__graft_pri")),
+                          F.lit(False))
+        return (scan.withColumn("__graft_k", key)
+                .join(p, (F.col("__graft_k") == F.col("__graft_pk")) & same,
+                      how)
+                .drop("__graft_k", "__graft_pk", "__graft_pfp",
+                      "__graft_pri"))
+
     def _dv_build_side(self, dv_paths: list[str],
                        rendered: dict | None = None) -> DataFrame:
         """The (file, row_index) build side for a DV anti-join, with
@@ -1235,19 +1269,18 @@ class SnapshotTable:
             rendered = None if want_pos else \
                 self._rendered_paths(scan, dirty)
             if rendered is None:
-                df = _meta(scan).join(
-                    self._dv_build_side(dv_paths),
-                    ["__graft_fp", "__graft_ri"], "left_anti")
+                df = self._position_join(
+                    _meta(scan), self._dv_build_side(dv_paths),
+                    "left_anti")
                 if not want_pos:
                     df = df.drop("__graft_fp", "__graft_ri")
             else:
-                df = (scan
-                      .withColumns(
-                          {"__graft_fp": F.col("_metadata.file_path"),
-                           "__graft_ri": F.col("_metadata.row_index")})
-                      .join(self._dv_build_side(dv_paths, rendered),
-                            ["__graft_fp", "__graft_ri"], "left_anti")
-                      .drop("__graft_fp", "__graft_ri"))
+                df = self._position_join(
+                    scan.withColumns(
+                        {"__graft_fp": F.col("_metadata.file_path"),
+                         "__graft_ri": F.col("_metadata.row_index")}),
+                    self._dv_build_side(dv_paths, rendered),
+                    "left_anti").drop("__graft_fp", "__graft_ri")
         if clean:
             c = self._reader_for(m).parquet(*clean)
             if want_pos:
@@ -1426,8 +1459,8 @@ class SnapshotTable:
               else self._norm_meta_path())
         df = df.withColumns({"__graft_fp": fp,
                              "__graft_ri": F.col("_metadata.row_index")})
-        return (df.join(self._dv_build_side(dv_paths, rendered),
-                        ["__graft_fp", "__graft_ri"], "left_anti")
+        return (self._position_join(
+            df, self._dv_build_side(dv_paths, rendered), "left_anti")
                 .drop("__graft_fp", "__graft_ri"))
 
     def _logical_rows(self, m: dict, files: list[str]) -> int:
@@ -2308,9 +2341,7 @@ class SnapshotTable:
                     # count - bound the hint like every other dv join
                     if dv.get("n", 0) <= DV_BROADCAST_MAX_POSITIONS:
                         pos = F.broadcast(pos)
-                    dels = (old_df.join(pos,
-                                        ["__graft_fp", "__graft_ri"],
-                                        "inner")
+                    dels = (self._position_join(old_df, pos, "inner")
                             .drop("__graft_fp", "__graft_ri"))
                     parts.append(_tag(dels, "delete", v, ts))
                     if not added:

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import random
 import shutil
 import sys
 import tempfile
@@ -35,6 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from aliyun_maxcompute_data_collectors_spark.manifest_store import (  # noqa: E402
     ManifestStore,
     _seg_cache_clear,
+    bloom_entry,
 )
 from aliyun_maxcompute_data_collectors_spark.snapshots import (  # noqa: E402
     SnapshotTable,
@@ -49,8 +51,11 @@ def synth_stats(path: str, i: int) -> dict:
             "bucket": [i % 32, i % 32]}
 
 
-def synth_bloom(m: int = 1 << 15) -> dict:
-    return {"code": {"m": m, "hex": "ab" * (m // 8)}}
+def synth_bloom(i: int, m: int = 1 << 15, keys: int = 500) -> dict:
+    # realistic shape: ~500 distinct keys per file at the default width
+    # (the lakehouse_dml set-up append), built by the package encoder
+    pos = random.Random(i).sample(range(m), keys)
+    return {"code": bloom_entry(pos, m)}
 
 
 def build_table(root: str, n_files: int, blooms: bool) -> ManifestStore:
@@ -58,7 +63,8 @@ def build_table(root: str, n_files: int, blooms: bool) -> ManifestStore:
     files = [os.path.join(root, "_snapshots", "files", f"seed/{i:07d}.parquet")
              for i in range(n_files)]
     stats = {f: synth_stats(f, i) for i, f in enumerate(files)}
-    bl = {f: synth_bloom() for f in files} if blooms else None
+    bl = ({f: synth_bloom(i) for i, f in enumerate(files)} if blooms
+          else None)
     tab.commit(tab.manifest(), "append", rows=n_files * 1000, add=files,
                stats=stats, blooms=bl)
     return tab
@@ -73,7 +79,8 @@ def bench_one(n_files: int, blooms: bool) -> dict:
                             f"new/{i:05d}.parquet") for i in range(100)]
         new_stats = {f: synth_stats(f, n_files + i)
                      for i, f in enumerate(new)}
-        new_bl = ({f: synth_bloom() for f in new} if blooms else None)
+        new_bl = ({f: synth_bloom(n_files + i) for i, f in enumerate(new)}
+                  if blooms else None)
         t0 = time.perf_counter()
         tab.commit(pm, "append", rows=pm["rows"] + 100 * 1000, add=new,
                    stats=new_stats, blooms=new_bl)
@@ -152,6 +159,6 @@ if __name__ == "__main__":
     # 1e6 files ~ 128 TB at 128 MB/file: the file-list segmentation
     # target point (VERDICT r8 #1 done-criteria)
     sizes = ([1_000, 10_000, 100_000, 1_000_000] if not blooms
-             else [1_000, 10_000])
+             else [1_000, 10_000, 100_000])
     for n in sizes:
         print(json.dumps(bench_one(n, blooms)), flush=True)

@@ -1,6 +1,7 @@
 """ManifestStore without Spark: a model-based state machine over every
 manifest layout, crash injection at each durable step of a commit, the
-directory-fsync durability pin and the pyspark-free import.
+directory-fsync durability pin, the bloom-entry codec and the
+pyspark-free import.
 
 Nothing here starts a JVM.  Hypothesis budgets follow the suite's
 tiers: quarter by default, ``SPARK_GRAFT_TEST_TIER=full`` for all
@@ -8,12 +9,17 @@ examples."""
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
+import random
 import shutil
 import subprocess
 import sys
 import tempfile
+from unittest import mock
 
+import numpy as np
 import pytest
 from hypothesis import HealthCheck, settings
 from hypothesis import strategies as st
@@ -25,8 +31,12 @@ from hypothesis.stateful import (
     rule,
 )
 
+import aliyun_maxcompute_data_collectors_spark.manifest_store as S
 from aliyun_maxcompute_data_collectors_spark.manifest_store import (
     ManifestStore,
+    bloom_bitmap,
+    bloom_entry,
+    bloom_may_contain,
     resolve_stats,
 )
 
@@ -35,6 +45,51 @@ _FULL_TIER = os.environ.get("SPARK_GRAFT_TEST_TIER", "").lower() == "full"
 
 def _ex(n: int) -> int:
     return n if _FULL_TIER else max(5, n // 4)
+
+
+# ---------------------------------------------------------------------------
+# bloom entries: legacy form and codec helpers
+# ---------------------------------------------------------------------------
+
+_REAL_PARQUET_SEGMENT = S._write_parquet_segment
+
+
+def _hex_entry(entry: dict) -> dict:
+    """The ``{"m", "hex"}`` form tables written before compression hold."""
+    return {"m": entry["m"], "hex": bloom_bitmap(entry).hex()}
+
+
+def _legacy_parquet_segment(path: str, payload: dict) -> str:
+    """The parquet segment writer before compression: ``b_m:``/``b_hex:``
+    bloom columns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _REAL_PARQUET_SEGMENT(path, {**payload, "blooms": {}})
+    table = pq.read_table(path)
+    blooms = payload.get("blooms") or {}
+    for c in sorted({c for b in blooms.values() for c in b}):
+        es = [(blooms.get(f) or {}).get(c) for f in payload["files"]]
+        table = table.append_column(
+            f"b_m:{c}", pa.array([e and e["m"] for e in es], pa.int64()))
+        table = table.append_column(
+            f"b_hex:{c}",
+            pa.array([e and bloom_bitmap(e).hex() for e in es], pa.string()))
+    pq.write_table(table, path)
+    return path
+
+
+def _legacy_writer():
+    """Patches that make commits store blooms as the pre-compression
+    code did: entries verbatim, parquet segments with hex columns."""
+    return [mock.patch.object(S, "_compress_blooms", lambda b: b),
+            mock.patch.object(S, "_write_parquet_segment",
+                              _legacy_parquet_segment)]
+
+
+def _bits(bitmap: bytes, m: int) -> np.ndarray:
+    return np.unpackbits(np.frombuffer(bitmap, np.uint8),
+                         bitorder="little")[:m].astype(bool)
 
 
 # ---------------------------------------------------------------------------
@@ -47,7 +102,10 @@ class StoreModel(RuleBasedStateMachine):
     map and the file diff against the parent (None when the commit
     records none).  Thresholds are drawn small so inline, stats-
     segmented, file-segmented, removal-list, fold and parquet layouts
-    all occur."""
+    all occur.  Every added file carries a bloom; a commit drawn
+    ``legacy`` stores its blooms as the pre-compression writer did, so
+    hex and compressed entries mix in every layout and every live
+    file's bloom must decode to its own bit set."""
 
     def __init__(self):
         super().__init__()
@@ -84,10 +142,31 @@ class StoreModel(RuleBasedStateMachine):
     def _stats(files) -> dict:
         return {f: {"x": [int(f[7:12]), int(f[7:12]) + 1]} for f in files}
 
-    def _commit(self, operation, live, live_dvs, diff, **kw) -> None:
-        v = self.store.commit(self.store.manifest(), operation,
-                              rows=len(live), **kw)
-        self.versions[v] = {"files": live, "dvs": live_dvs, "delta": diff}
+    @staticmethod
+    def _bloom_bits(f: str) -> tuple[int, list[int]]:
+        i = int(f[7:12])
+        m = 1 << (10 + i % 3)
+        return m, sorted(random.Random(i).sample(range(m), i % 40))
+
+    def _blooms(self, files, legacy: bool) -> dict:
+        out = {}
+        for f in files:
+            m, positions = self._bloom_bits(f)
+            e = bloom_entry(positions, m)
+            out[f] = {"c": _hex_entry(e) if legacy else e}
+        return out
+
+    def _commit(self, operation, live, live_dvs, diff, legacy=False,
+                **kw) -> None:
+        if "add" in kw:
+            kw["blooms"] = self._blooms(kw["add"], legacy)
+        with contextlib.ExitStack() as stack:
+            for p in _legacy_writer() if legacy else []:
+                stack.enter_context(p)
+            v = self.store.commit(self.store.manifest(), operation,
+                                  rows=len(live), **kw)
+        self.versions[v] = {"files": live, "dvs": live_dvs, "delta": diff,
+                            "legacy": legacy}
 
     def _pick(self, data, live) -> list[str]:
         picked = data.draw(st.lists(st.sampled_from(live), unique=True,
@@ -95,37 +174,37 @@ class StoreModel(RuleBasedStateMachine):
         return [f for f in live if f in picked]
 
     # -- rules ---------------------------------------------------------------
-    @rule(k=st.integers(1, 3))
-    def append(self, k):
+    @rule(k=st.integers(1, 3), legacy=st.booleans())
+    def append(self, k, legacy):
         head, add = self.head, self._new(k)
         self._commit("append", head["files"] + add, head["dvs"],
-                     (add, []), add=add, stats=self._stats(add))
+                     (add, []), legacy, add=add, stats=self._stats(add))
 
     @precondition(lambda self: self.versions and self.head["files"])
-    @rule(data=st.data(), k=st.integers(0, 2))
-    def cow(self, data, k):
+    @rule(data=st.data(), k=st.integers(0, 2), legacy=st.booleans())
+    def cow(self, data, k, legacy):
         head, add = self.head, self._new(k)
         gone = self._pick(data, head["files"])
         live = [f for f in head["files"] if f not in gone] + add
         dvs = {f: d for f, d in head["dvs"].items() if f not in gone}
-        self._commit("delete", live, dvs, (add, gone), add=add,
+        self._commit("delete", live, dvs, (add, gone), legacy, add=add,
                      stats=self._stats(add), remove=gone)
 
-    @rule(k=st.integers(0, 3))
-    def replace(self, k):
+    @rule(k=st.integers(0, 3), legacy=st.booleans())
+    def replace(self, k, legacy):
         head, add = self.head, self._new(k)
-        self._commit("overwrite", add, {}, (add, head["files"]), add=add,
-                     stats=self._stats(add), shape="replace")
+        self._commit("overwrite", add, {}, (add, head["files"]), legacy,
+                     add=add, stats=self._stats(add), shape="replace")
 
     @precondition(lambda self: self.versions and self.head["files"])
-    @rule(data=st.data(), k=st.integers(0, 2))
-    def fold(self, data, k):
+    @rule(data=st.data(), k=st.integers(0, 2), legacy=st.booleans())
+    def fold(self, data, k, legacy):
         head, add = self.head, self._new(k)
         gone = (self._pick(data, head["files"])
                 if data.draw(st.booleans()) else [])
         live = [f for f in head["files"] if f not in gone] + add
         dvs = {f: d for f, d in head["dvs"].items() if f not in gone}
-        self._commit("compact", live, dvs, (add, gone), add=add,
+        self._commit("compact", live, dvs, (add, gone), legacy, add=add,
                      stats=self._stats(add), remove=gone, shape="fold")
 
     @precondition(lambda self: self.versions and self.head["files"])
@@ -172,9 +251,25 @@ class StoreModel(RuleBasedStateMachine):
                 new = set(want["files"])
                 assert set(delta[0]) == new - old, v
                 assert set(delta[1]) == old - new, v
-            stats, _ = resolve_stats(m)
+            stats, blooms = resolve_stats(m)
             assert {f: stats.get(f) for f in m["files"]} == \
                 self._stats(m["files"]), v
+            for f in m["files"]:
+                want_m, want_bits = self._bloom_bits(f)
+                e = blooms[f]["c"]
+                assert e["m"] == want_m, (v, f)
+                got = np.flatnonzero(_bits(bloom_bitmap(e), want_m))
+                assert got.tolist() == want_bits, (v, f)
+            if not want.get("legacy"):
+                # a commit stores every entry it writes compressed: the
+                # inline ones and those of the segments it writes
+                written = [m.get("blooms") or {}] + [
+                    S._load_segment(p).blooms
+                    for p in (m.get("segments") or [])
+                    + (m.get("file_segments") or [])
+                    if os.path.basename(p).startswith(f"seg-{v:08d}-")]
+                assert all("z" in e for b in written for per in b.values()
+                           for e in per.values()), v
             dvs = m.get("dvs") or {}
             assert set(dvs) <= set(m["files"]), v
             assert dvs == want["dvs"], v
@@ -184,6 +279,79 @@ StoreModel.TestCase.settings = settings(
     max_examples=_ex(120), stateful_step_count=20, deadline=None,
     suppress_health_check=[HealthCheck.too_slow])
 TestStoreModel = StoreModel.TestCase
+
+
+# ---------------------------------------------------------------------------
+# bloom codec
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("log2m", [12, 15, 18, 22])
+@pytest.mark.parametrize("density", [0.0, 0.001, 0.01, 0.1, 0.5, 1.0])
+def test_bloom_codec_round_trips(log2m, density):
+    """The compressed entry decodes to exactly the reference bit array,
+    and membership answers match it, from empty to saturated bitmaps;
+    the legacy hex form of the same bitmap answers identically."""
+    m = 1 << log2m
+    rng = np.random.default_rng(log2m * 1000 + int(density * 1000))
+    positions = rng.integers(0, m, int(m * density))
+    if density == 1.0:
+        positions = np.arange(m)
+    ref_bytes = bytearray(m // 8)  # the per-position loop numpy replaced
+    for p in positions.tolist():
+        ref_bytes[p >> 3] |= 1 << (p & 7)
+    ref = _bits(bytes(ref_bytes), m)
+    e = bloom_entry(positions, m)
+    assert set(e) == {"m", "z"} and e["m"] == m
+    json.loads(json.dumps(e))  # plain JSON
+    for form in (e, _hex_entry(e)):
+        raw = bloom_bitmap(form)
+        assert raw == ref_bytes
+        probe = np.concatenate([positions[:200],
+                                rng.integers(0, m, 200)]).tolist()
+        assert [bloom_may_contain(raw, p) for p in probe] == \
+            [bool(ref[p]) for p in probe]
+    # hex -> compressed re-encoding is lossless
+    again = S._compress_blooms({"f": {"c": _hex_entry(e)}})["f"]["c"]
+    assert again == e
+
+
+def test_bloom_entry_costs_its_content():
+    """500 keys in m = 2^15 (the default width) store in at most a sixth
+    of the 8,192-character hex bitmap."""
+    m = 1 << 15
+    e = bloom_entry(random.Random(0).sample(range(m), 500), m)
+    hex_len = len(_hex_entry(e)["hex"])
+    assert hex_len == 8192
+    assert len(json.dumps(e)) <= hex_len / 6
+
+
+@pytest.mark.parametrize("entry", [
+    None, "z", 7, [], {}, {"m": 64}, {"m": 64, "z": "!!not base64!!"},
+    {"m": 64, "z": "AAAA"}, {"m": 64, "z": 5}, {"m": 64, "hex": "zz"},
+    {"m": 64, "hex": None}])
+def test_unknown_bloom_entries_decode_to_none(entry):
+    assert bloom_bitmap(entry) is None
+    assert S._compress_blooms({"f": {"c": entry}}) == {"f": {"c": entry}}
+
+
+@pytest.mark.parametrize("thresholds", [
+    {}, {"inline_stats_files": 1}, {"inline_files": 1},
+    {"inline_files": 1, "parquet_seg_min_files": 1}],
+    ids=["inline", "stats-segments", "file-segments", "parquet"])
+def test_unknown_bloom_entries_commit(tmp_path, thresholds):
+    """Entries of unknown shape are carried or dropped, never raised on,
+    and never reach a parquet bloom column."""
+    store = ManifestStore.init(str(tmp_path / "t"), **thresholds)
+    good = bloom_entry([3, 9], 64)
+    odd = {"m": "x", "z": "??"}
+    store.commit(store.manifest(), "append", rows=2, add=["/a", "/b"],
+                 blooms={"/a": {"c": good, "d": odd}, "/b": {"c": odd}})
+    m = store.manifest()
+    store.commit(m, "compact", rows=2, remove=[], shape="fold")
+    _, blooms = resolve_stats(store.manifest())
+    assert blooms["/a"]["c"] == good
+    for e in (blooms["/a"].get("d"), blooms.get("/b", {}).get("c")):
+        assert e is None or bloom_bitmap(e) is None
 
 
 # ---------------------------------------------------------------------------

@@ -1687,3 +1687,88 @@ def test_bpe_pair_counts_feed_the_first_merge(spark):
     assert [t[0] for t in pc[:5]] == [r["pair_rank"] for r in
                                       bpe.adjacent_pair_counts(
                                           df, top_n=5).collect()]
+
+
+# The pre-binding expressions, kept as references: each re-evaluates the
+# per-document array inside its lambda (O(words^2) per document).
+def _ref_word_shingles(col, n):
+    from aliyun_maxcompute_data_collectors_spark.operators.text import normalized
+    c = normalized(col)
+    words = F.split(c, r"\s+")
+    k = F.size(words)
+    grams = F.transform(F.sequence(F.lit(0), k - F.lit(n)),
+                        lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)))
+    return F.array_distinct(F.when(k >= n, grams).otherwise(F.array(c)))
+
+
+def _ref_dup_bigram_ratio(col):
+    from aliyun_maxcompute_data_collectors_spark.operators.text import _norm_tokens
+    toks = _norm_tokens(col)
+    n = F.size(toks)
+    grams = F.transform(
+        F.sequence(F.lit(1), n - 1),
+        lambda i: F.concat_ws(" ", F.element_at(toks, i), F.element_at(toks, i + 1)))
+    ng = F.size(grams)
+    return F.when(n > 1, F.round(
+        (ng - F.size(F.array_distinct(grams))).cast("double") / ng, 4)
+    ).otherwise(F.lit(0.0))
+
+
+def _ref_top_token_ratio(col):
+    from aliyun_maxcompute_data_collectors_spark.operators.text import _norm_tokens
+    toks = _norm_tokens(col)
+    n = F.size(toks)
+    top = F.array_max(F.transform(
+        F.array_distinct(toks), lambda t: F.size(F.filter(toks, lambda x: x == t))))
+    return F.when(n > 0, F.round(top.cast("double") / n, 4)).otherwise(F.lit(0.0))
+
+
+def _ref_rolling_window_fingerprints(col, window):
+    from aliyun_maxcompute_data_collectors_spark.operators import text as X
+    hs = X._token_hashes(col)
+    starts = F.sequence(F.lit(1), F.greatest(F.size(hs) - window + 1, F.lit(1)))
+    return F.transform(starts, lambda i: F.aggregate(
+        F.slice(hs, i, window), F.lit(0).cast("long"),
+        lambda a, h: (a * F.lit(X.ROLL_B) + h) % F.lit(X.ROLL_M)))
+
+
+_HOF_TEXTS = [
+    None, "", "   ", "\t\n", "one", "Two Words", "a b c", "a b c d e",
+    "a b c d e f g h", "  Mixed\tCASE \n spacing  here  now ",
+    "héllo wörld ñandú 東京 東京 über", "spam spam spam spam spam spam",
+    "go go go stop stop north go stop",
+    " ".join(f"w{i % 7}" for i in range(40)),
+]
+
+
+def _regexp_replace_nodes(df) -> int:
+    return df._jdf.queryExecution().optimizedPlan().toString() \
+        .count("regexp_replace(")
+
+
+@pytest.mark.parametrize("n", [1, 3, 5, 8])
+def test_bound_lambdas_match_previous_expressions(spark, n):
+    """word_shingles, dup_bigram_ratio, top_token_ratio and
+    rolling_window_fingerprints bind their per-document array once
+    instead of re-deriving it inside each lambda: outputs equal the
+    previous expressions on edge-case texts, and each optimized
+    projection normalizes the text exactly once."""
+    from aliyun_maxcompute_data_collectors_spark.operators import text as X
+
+    df = spark.createDataFrame(list(enumerate(_HOF_TEXTS)),
+                               "id int, text string")
+    pairs = {
+        "shingles": (D.word_shingles("text", n), _ref_word_shingles("text", n)),
+        "bigram": (X.dup_bigram_ratio("text"), _ref_dup_bigram_ratio("text")),
+        "top": (X.top_token_ratio("text"), _ref_top_token_ratio("text")),
+        "spans": (X.rolling_window_fingerprints("text", n),
+                  _ref_rolling_window_fingerprints("text", n)),
+    }
+    for name, (new, old) in pairs.items():
+        got = df.select("id", new.alias("v"), old.alias("ref")).collect()
+        assert len(got) == len(_HOF_TEXTS)
+        for r in got:
+            assert r["v"] == r["ref"], (name, n, _HOF_TEXTS[r["id"]])
+        assert _regexp_replace_nodes(df.select(new.alias("v"))) == 1, name
+    assert _regexp_replace_nodes(
+        df.select(_ref_word_shingles("text", n).alias("v"))) == 4

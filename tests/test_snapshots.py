@@ -690,16 +690,30 @@ def test_bloom_stats_prune_string_equality(spark, table):
                              [("code", "==", "nope")]) == []
 
 
-def test_bloom_on_write_bitmaps_match_readback_pass(spark, table):
+def _bit_set(bitmap: bytes) -> set[int]:
+    return {i * 8 + b for i, byte in enumerate(bitmap) for b in range(8)
+            if byte >> b & 1}
+
+
+def test_bloom_on_write_bitmaps_match_readback_pass(spark, table,
+                                                   monkeypatch):
     """r13 fused bloom build: the positions now ride the WRITE job via
     observe() + partition-id -> part-file mapping instead of a second
-    read-back pass.  The bitmaps must be BYTE-identical to the read-back
-    pass on a multi-partition write with nulls and multiple columns."""
+    read-back pass, which the append must not fall back to.  The bitmaps
+    must be bit-identical to the read-back pass on a multi-partition
+    write with nulls and multiple columns (compared as decoded bit sets,
+    not as encoded strings)."""
+    from aliyun_maxcompute_data_collectors_spark.manifest_store import (
+        bloom_bitmap,
+    )
+
     rows = [(i, (f"c{i % 37:03d}" if i % 11 else None), i % 53)
             for i in range(500)]
     df = spark.createDataFrame(rows, "id long, code string, k int")
-    table.append(df.repartition(4), bloom_cols=["code", "k"],
-                 bloom_bits=1 << 12)
+    with monkeypatch.context() as mp:
+        mp.setattr(table, "_collect_blooms", None)  # no read-back pass
+        table.append(df.repartition(4), bloom_cols=["code", "k"],
+                     bloom_bits=1 << 12)
     m = table.manifest()
     blooms = m["blooms"]
     assert len(blooms) == 4  # one entry per written file
@@ -707,9 +721,83 @@ def test_bloom_on_write_bitmaps_match_readback_pass(spark, table):
                                      1 << 12)
     for f, entry in blooms.items():
         for c in ("code", "k"):
-            assert entry[c] == readback[f][c], (f, c)
+            assert entry[c]["m"] == readback[f][c]["m"] == 1 << 12
+            got = _bit_set(bloom_bitmap(entry[c]))
+            assert got and got == _bit_set(bloom_bitmap(readback[f][c])), \
+                (f, c)
     # and the bitmaps actually prune: an absent code scans zero files
     assert table.prune_files(m, [("code", "==", "zz")]) == []
+
+
+@pytest.mark.parametrize("thresholds", [
+    {}, {"inline_stats_files": 1}, {"inline_files": 1}],
+    ids=["inline", "stats-segments", "file-segments"])
+def test_legacy_hex_blooms_prune_like_compressed(spark, tmp_path,
+                                                 monkeypatch, thresholds):
+    """Tables written before bloom compression hold ``{"m", "hex"}``
+    entries.  Committed through the store as they were then, they must
+    keep exactly the files the compressed form keeps - in prune_files,
+    read(where=...) and the graft_snapshot pushdown - and the next
+    commit that rewrites them stores them compressed."""
+    import aliyun_maxcompute_data_collectors_spark.manifest_store as S
+    from pyspark.sql.datasource import EqualTo
+    from aliyun_maxcompute_data_collectors_spark.sources.pyds import (
+        GraftSnapshotDataSource,
+    )
+
+    t = SnapshotTable.init(spark, str(tmp_path / "t"), **thresholds)
+    rows = [(i, f"c{i * 7 % 500:04d}", i % 61) for i in range(400)]
+    t.append(spark.createDataFrame(rows, "id long, code string, k int")
+             .repartition(4), bloom_cols=["code", "k"], bloom_bits=1 << 12)
+    m = t.manifest()
+    v_z = m["version"]
+    _, blooms = S.resolve_stats(m)
+    assert len(blooms) == 4
+    assert all("z" in e for b in blooms.values() for e in b.values())
+    legacy = {f: {c: {"m": e["m"], "hex": S.bloom_bitmap(e).hex()}
+                  for c, e in b.items()} for f, b in blooms.items()}
+    with monkeypatch.context() as mp:
+        mp.setattr(S, "_compress_blooms", lambda b: b)  # the old writer
+        v_hex = t._store.commit(m, "legacy", rows=m["rows"], blooms=legacy,
+                                remove=[], shape="fold")
+    _, stored = S.resolve_stats(t.manifest(v_hex))
+    assert stored == legacy
+    probes = [("code", rows[3][1]), ("code", "c9999"), ("k", 7),
+              ("k", 1000), ("code", "")]
+    for col, val in probes:
+        conj = [(col, "==", val)]
+        kept = t.prune_files(t.manifest(v_z), conj)
+        assert t.prune_files(t.manifest(v_hex), conj) == kept, (col, val)
+        assert sorted(t.read(v_hex, where=conj).collect()) == \
+            sorted(t.read(v_z, where=conj).collect())
+        for v in (v_z, v_hex):
+            ds = GraftSnapshotDataSource({"path": t.path, "version": str(v)})
+            rdr = ds.reader(ds.schema())
+            rdr.pushFilters([EqualTo((col,), val)])
+            assert sorted(rdr._files) == sorted(kept), (col, val, v)
+    assert t.prune_files(t.manifest(v_hex), [("code", "==", "c9999")]) == []
+    # the next rewrite converges the table on the compressed form
+    mh = t.manifest()
+    t._store.commit(mh, "compact", rows=mh["rows"], remove=[], shape="fold")
+    _, again = S.resolve_stats(t.manifest())
+    assert again == blooms
+
+
+@pytest.mark.parametrize("entry", [
+    None, "z", [], {"m": 64}, {"m": 0, "hex": "ff" * 8},
+    {"m": "64", "hex": "ff" * 8}, {"m": True, "hex": "ff"},
+    {"m": 64, "z": "AAAA"}, {"m": 64, "hex": "zz"},
+    {"m": 1 << 12, "z": "eAEDAAAAAAE="}])  # an empty bitmap, m > 0
+def test_unknown_bloom_entries_never_prune(entry):
+    """A bloom entry the decoder cannot read keeps its file and never
+    raises."""
+    from aliyun_maxcompute_data_collectors_spark.snapshots import (
+        prune_manifest_files,
+    )
+
+    conj = [("c", "==", "v"), ("c", "==", 5)]
+    assert prune_manifest_files(
+        {"files": ["/a"], "blooms": {"/a": {"c": entry}}}, conj) == ["/a"]
 
 
 def test_nan_stats_never_prune(spark, table):
