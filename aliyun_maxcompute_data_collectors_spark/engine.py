@@ -523,9 +523,7 @@ class Engine:
                 # (there is no prior file set to stay consistent with)
                 tab.overwrite(df)
             else:
-                bcols, bbits = tab.bloom_columns()
-                tab.append(df, bloom_cols=bcols or None,
-                           bloom_bits=bbits or (1 << 15))
+                tab.append(df)
             return self._empty_result()
         static: dict[str, str] = {}
         if part:
@@ -550,8 +548,7 @@ class Engine:
             df = df.toDF(*expected)
         self.catalog.insert(name, df, overwrite=mode.upper() == "OVERWRITE",
                             static_partition=static or None)
-        from pyspark.sql import types as _T
-        return self.spark.createDataFrame([], _T.StructType([]))
+        return self._empty_result()
 
     def _snapshot_table(self, name: str):
         from aliyun_maxcompute_data_collectors_spark.snapshots import SnapshotTable
@@ -630,10 +627,7 @@ class Engine:
         else:
             df = self.sql(select)
         tab = self._snapshot_table(name)
-        bcols, bbits = tab.bloom_columns()
-        tab.replace_where(self._cast_to_snapshot_schema(tab, df), cond,
-                          bloom_cols=bcols or None,
-                          bloom_bits=bbits or (1 << 15))
+        tab.replace_where(self._cast_to_snapshot_schema(tab, df), cond)
         return self._empty_result()
 
     def _run_optimize(self, name: str, where: str | None,
@@ -844,17 +838,12 @@ class Engine:
                 raise ValueError(f"MERGE: unsupported MATCHED action {a!r}")
         if name in self._snapshot_tables:
             # transactional COPY-ON-WRITE merge: only files holding
-            # matches rewrite, one atomic commit, time travel preserved;
-            # blooms rebuild for the new files on bloom-maintained
-            # tables (ADVICE r9 follow-through - same as DELETE/UPDATE)
+            # matches rewrite, one atomic commit, time travel preserved
             tab = self._snapshot_table(name)
-            bcols, bbits = tab.bloom_columns()
             tab.merge(
                 source, on, matched=matched, not_matched=not_matched,
                 not_matched_by_source=by_source or None,
                 target_alias=talias, source_alias=salias,
-                bloom_cols=bcols or None,
-                bloom_bits=bbits or (1 << 15),
                 mor=self._snapshot_dml.get(name) == "mor")
             return self._empty_result()
         target = self.catalog.read_table(name)
@@ -871,8 +860,7 @@ class Engine:
         df = df.localCheckpoint(eager=True)
         self.catalog.truncate_table(name)
         self.catalog.insert(name, df)
-        from pyspark.sql import types as _T
-        return self.spark.createDataFrame([], _T.StructType([]))
+        return self._empty_result()
 
     def _parse_assignments(self, sets: str) -> dict[str, str]:
         assigns: dict[str, str] = {}
@@ -892,15 +880,10 @@ class Engine:
         pre-update version stays time-travelable."""
         from pyspark.sql import functions as F
         if name in self._snapshot_tables:
-            from aliyun_maxcompute_data_collectors_spark.snapshots import SnapshotTable
-            tab = SnapshotTable(self.spark, self._snapshot_tables[name])
-            bcols, bbits = tab.bloom_columns()
-            tab.update(self._parse_assignments(sets), where or "true",
-                       bloom_cols=bcols or None,
-                       bloom_bits=bbits or (1 << 15),
-                       mor=self._snapshot_dml.get(name) == "mor")
-            from pyspark.sql import types as _T
-            return self.spark.createDataFrame([], _T.StructType([]))
+            self._snapshot_table(name).update(
+                self._parse_assignments(sets), where or "true",
+                mor=self._snapshot_dml.get(name) == "mor")
+            return self._empty_result()
         target = self.catalog.read_table(name)
         cond = F.expr(where) if where else F.lit(True)
         assigns = self._parse_assignments(sets)
@@ -925,22 +908,13 @@ class Engine:
         pre-delete version stays time-travelable until vacuum."""
         from pyspark.sql import functions as F
         if name in self._snapshot_tables:
-            from aliyun_maxcompute_data_collectors_spark.snapshots import SnapshotTable
-            tab = SnapshotTable(self.spark, self._snapshot_tables[name])
-            # rebuild blooms for the rewritten files so SQL DML on a
-            # bloom-maintained table doesn't silently degrade equality
-            # pruning (ADVICE r9, low)
-            bcols, bbits = tab.bloom_columns()
-            tab.delete(where or "true", bloom_cols=bcols or None,
-                       bloom_bits=bbits or (1 << 15),
-                       mor=self._snapshot_dml.get(name) == "mor")
-            from pyspark.sql import types as _T
-            return self.spark.createDataFrame([], _T.StructType([]))
+            self._snapshot_table(name).delete(
+                where or "true", mor=self._snapshot_dml.get(name) == "mor")
+            return self._empty_result()
         target = self.catalog.read_table(name)
         if where is None:
             self.catalog.truncate_table(name)
-            from pyspark.sql import types as _T
-            return self.spark.createDataFrame([], _T.StructType([]))
+            return self._empty_result()
         keep = target.where(~F.coalesce(F.expr(where), F.lit(False)))
         return self._overwrite_snapshot(name, keep)
 

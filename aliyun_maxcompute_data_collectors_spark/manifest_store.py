@@ -663,6 +663,43 @@ def resolve_stats(manifest: dict) -> tuple[dict, dict]:
     return stats, blooms
 
 
+def live_bloom_columns(manifest: dict) -> tuple[list[str], int]:
+    """(columns carrying a bloom on any live file, their widest m; 0
+    when none does), from the entries' ``m`` alone: no stats dict is
+    built and no bitmap decoded.  A parquet segment answers from the
+    max of its ``b_m:`` columns over its files not in
+    ``removed_files``.  ``manifest`` has ``files`` materialized."""
+    widths: dict[str, int] = {}
+
+    def note(c: str, m) -> None:
+        if type(m) is int and m > widths.get(c, 0):
+            widths[c] = m
+
+    live = None
+    for src in [manifest] + [
+            _load_segment(p) for p in list(manifest.get("segments") or [])
+            + list(manifest.get("file_segments") or [])]:
+        if getattr(src, "_pq", None) is not None:
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
+            keep = pc.invert(pc.is_in(src._pq.column("file"), pa.array(
+                manifest.get("removed_files") or [], pa.string())))
+            for name in src._pq.schema.names:
+                if name.startswith("b_m:"):
+                    note(name[4:], pc.max(
+                        src._pq.column(name).filter(keep)).as_py())
+            continue
+        blooms = src.get("blooms") or {}
+        if blooms and live is None:
+            live = set(manifest["files"])
+        for f, per_col in blooms.items():
+            if f in live:
+                for c, b in (per_col or {}).items():
+                    note(c, b.get("m") if isinstance(b, dict) else None)
+    return sorted(widths), max(widths.values(), default=0)
+
+
 _BASE = object()  # commit(onto=...) default: the commit lands on base itself
 
 

@@ -9,6 +9,10 @@ lists through the real ``ManifestStore.commit`` / ``manifest()`` /
 - commit latency: append 100 new files to a table already holding N
   (parent manifest load + stats carry + json dump + fsync)
 - planning latency: manifest load + stats-based pruning of one conjunct
+- bloom policy resolution: the cold ``SnapshotTable.bloom_columns()``
+  every default-policy write resolves (manifest load + which columns
+  the live files bloom, at what width) - it must not cost more than
+  the cold plan
 - manifest size on disk
 
 Run:  python scripts/manifest_scale.py [--blooms]
@@ -100,6 +104,11 @@ def bench_one(n_files: int, blooms: bool) -> dict:
         prune_manifest_files(tab.manifest(), [("id", "between",
                                                (5_000, 9_000))])
         plan_warm_s = time.perf_counter() - t0
+        _seg_cache_clear()
+        t0 = time.perf_counter()
+        policy = SnapshotTable(None, root).bloom_columns()
+        policy_cold_s = time.perf_counter() - t0
+        assert policy == ((["code"], 1 << 15) if blooms else ([], 0))
         # COW DML commit (r9 removal lists): drop 10 files from the
         # table, as SnapshotTable's copy-on-write DML does.  On a
         # segmented parent the carried segments ride unchanged and the
@@ -147,6 +156,7 @@ def bench_one(n_files: int, blooms: bool) -> dict:
                 "dml_commit_s": round(dml_commit_s, 4),
                 "plan_s": round(plan_s, 4),
                 "plan_warm_s": round(plan_warm_s, 4),
+                "bloom_policy_cold_s": round(policy_cold_s, 4),
                 "cdf_plan_50v_s": round(cdf_plan_s, 4),
                 "manifest_bytes": size, "segment_bytes": seg_bytes,
                 "kept": len(kept)}

@@ -91,9 +91,8 @@ def prof_delete_mor_phases(spark, reps: int = 3):
             tab = SnapshotTable.init(spark, root)
             tab.append(li.coalesce(2))
             m = tab.manifest()
-            conjuncts, pred = tab._resolve_predicate(
+            _, pred, candidates = tab._dml_target(
                 "l_orderkey % 100 BETWEEN 0 AND 3")
-            candidates = m["files"]
             t = T()
             hits = (tab._scan_subset(m, candidates,
                                      file_col="__graft_file",
