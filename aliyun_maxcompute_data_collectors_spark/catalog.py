@@ -63,6 +63,17 @@ META_CACHE_SIZE = 100
 META_CACHE_TTL_SEC = 30.0
 
 
+def _declared_columns(meta: "TableMeta", df: DataFrame) -> DataFrame:
+    """The table's columns in declared order, partition values (strings
+    in directory names) cast to their declared types
+    (OdpsTableCatalog.scala:703-711).  A column added by ALTER reads
+    NULL from files written before it."""
+    return df.select(
+        [F.col(c) for c, _ in meta.columns]
+        + [F.col(p).cast(ot.parse_odps_type(t)).alias(p)
+           for p, t in meta.partition_columns])
+
+
 class CatalogError(Exception):
     pass
 
@@ -412,18 +423,19 @@ class OdpsCatalog:
         return str((meta.properties or {}).get("stored_as", "parquet")).lower()
 
     def _scan(self, meta: "TableMeta", ddir: str, base_path: bool = False) -> DataFrame:
-        """Format-generic scan of a table data dir.  parquet/orc scans carry
-        their own schema; csv/json scans get the CATALOG-declared schema
-        (types are never inferred - SURVEY 1.2) with partition/bucket columns
-        filled from directory names by Spark's partition discovery."""
+        """Format-generic scan of a table data dir under the CATALOG-
+        declared schema, whatever the format: declared column types,
+        partition columns as strings, ``__odps_bucket__`` as int, filled
+        from directory names by Spark's partition discovery.  Types are
+        never inferred (SURVEY 1.2), so planning reads no footer and
+        launches no Spark job, and a partition value such as ``01``
+        keeps its leading zero."""
         from pyspark.sql import types as T
 
         fmt = self.storage_format(meta)
         reader = self.spark.read
         if base_path:
             reader = reader.option("basePath", ddir)
-        if fmt in _FOOTER_FORMATS:
-            return reader.format(fmt).load(ddir)
         fields = [T.StructField(c, ot.parse_odps_type(t), True) for c, t in meta.columns]
         fields += [T.StructField(c, T.StringType(), True) for c, _ in meta.partition_columns]
         if meta.bucket:
@@ -451,18 +463,8 @@ class OdpsCatalog:
         ddir = self.data_dir(name)
         if not _has_data(ddir):
             return self.spark.createDataFrame([], meta.full_schema)
-        df = self._scan(meta, ddir, base_path=bool(meta.partition_columns))
-        # partition values live in dir names as strings; cast to declared
-        # types (OdpsTableCatalog.scala:703-711) and order columns per schema
-        cols = []
-        for f_name, f_type in meta.columns:
-            if f_name in df.columns:
-                cols.append(F.col(f_name).cast(ot.parse_odps_type(f_type)).alias(f_name))
-            else:  # column added by ALTER after old files were written
-                cols.append(F.lit(None).cast(ot.parse_odps_type(f_type)).alias(f_name))
-        for p_name, p_type in meta.partition_columns:
-            cols.append(F.col(p_name).cast(ot.parse_odps_type(p_type)).alias(p_name))
-        return df.select(cols)
+        return _declared_columns(
+            meta, self._scan(meta, ddir, base_path=bool(meta.partition_columns)))
 
     def table_exists(self, name: str) -> bool:
         return os.path.exists(self._meta_path(name))
@@ -562,9 +564,8 @@ class OdpsCatalog:
             raise CatalogError(f"{name} is not bucketed")
         ddir = self.data_dir(name)
         df = self._scan(meta, ddir, base_path=True)
-        out = df.where(F.col(BUCKET_COL).isin([int(b) for b in bucket_ids]))
-        cols = [c for c, _ in meta.columns] + [c for c, _ in meta.partition_columns]
-        return out.select(*cols)
+        return _declared_columns(
+            meta, df.where(F.col(BUCKET_COL).isin([int(b) for b in bucket_ids])))
 
     def lookup_by_key(self, name: str, key_values: dict) -> DataFrame:
         """Point lookup on the bucket columns: the ODPS hash of the key is

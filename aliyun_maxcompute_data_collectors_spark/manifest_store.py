@@ -386,22 +386,62 @@ class _Segment:
     (``seg["files"]`` / ``seg.get("stats")``) so every existing consumer
     keeps working, but the expensive forms - the 1e6-entry stats dict,
     the columnar arrays the vectorized prune wants - materialize only on
-    first use and are cached for the (process-lifetime) segment cache."""
+    first use and are cached for the (process-lifetime) segment cache.
 
-    __slots__ = ("_path", "_json", "_pq", "_files", "_stats", "_blooms",
-                 "_columnar")
+    A parquet segment reads only its ``file`` column up front; the
+    ``s_lo:``/``s_hi:`` stat columns and the ``b_m:``/``b_z:`` bloom
+    columns are read when first used, so listing a table's files never
+    loads its bloom bytes.  ``nbytes`` is what the segment holds in
+    memory (the on-disk size for JSON), and every column read later is
+    charged to the segment cache."""
+
+    __slots__ = ("_path", "_json", "_names", "_cols", "nbytes", "_files",
+                 "_stats", "_blooms", "_columnar")
 
     def __init__(self, path: str):
         self._path = path
         self._files = self._stats = self._blooms = self._columnar = None
+        self._cols: dict = {}
         if path.endswith(".parquet"):
             import pyarrow.parquet as pq
-            self._pq = pq.read_table(path)
+            with pq.ParquetFile(path) as pf:
+                self._names = pf.schema_arrow.names
+                t = pf.read(columns=["file"])
+            self._cols["file"] = t.column("file")
             self._json = None
+            self.nbytes = t.nbytes
         else:
             with open(path) as f:
                 self._json = json.load(f)
-            self._pq = None
+            self._names = None
+            self.nbytes = os.path.getsize(path)
+
+    @property
+    def is_parquet(self) -> bool:
+        return self._names is not None
+
+    def names(self, prefix: str) -> list[str]:
+        """Parquet column names starting with ``prefix``."""
+        return [n for n in self._names if n.startswith(prefix)]
+
+    def column(self, name: str):
+        """A parquet column, read on first use."""
+        if name not in self._cols:
+            self.load([name])
+        return self._cols[name]
+
+    def load(self, names: list[str]) -> None:
+        """Read the parquet columns of ``names`` not yet held, in one
+        pass, and charge their bytes to the segment cache."""
+        want = [n for n in names if n not in self._cols]
+        if not want:
+            return
+        import pyarrow.parquet as pq
+        t = pq.read_table(self._path, columns=want)
+        for n in want:
+            self._cols[n] = t.column(n)
+        self.nbytes += t.nbytes
+        _seg_cache_charge(self._path, self, t.nbytes)
 
     # -- dict compatibility --------------------------------------------
     def __getitem__(self, key):
@@ -429,7 +469,7 @@ class _Segment:
                 # to_numpy + list() is ~7x faster than to_pylist for 1e6
                 # paths (0.1s vs 0.7s) and yields exact python str objects
                 self._files = list(
-                    self._pq.column("file").to_numpy(zero_copy_only=False))
+                    self.column("file").to_numpy(zero_copy_only=False))
         return self._files
 
     @property
@@ -440,12 +480,11 @@ class _Segment:
             else:
                 files = self.files
                 out: dict[str, dict] = {}
-                for name in self._pq.schema.names:
-                    if not name.startswith("s_lo:"):
-                        continue
+                self.load(self.names("s_"))
+                for name in self.names("s_lo:"):
                     c = name[len("s_lo:"):]
-                    lo = self._pq.column(name).to_pylist()
-                    hi = self._pq.column(f"s_hi:{c}").to_pylist()
+                    lo = self.column(name).to_pylist()
+                    hi = self.column(f"s_hi:{c}").to_pylist()
                     for i, f in enumerate(files):
                         if lo[i] is None or hi[i] is None:
                             continue
@@ -461,21 +500,20 @@ class _Segment:
                 self._blooms = self._json.get("blooms") or {}
             else:
                 files = self.files
-                names = set(self._pq.schema.names)
+                names = set(self._names)
                 out: dict[str, dict] = {}
-                for name in self._pq.schema.names:
-                    if not name.startswith("b_m:"):
-                        continue
+                self.load(self.names("b_"))
+                for name in self.names("b_m:"):
                     c = name[len("b_m:"):]
-                    ms = self._pq.column(name).to_pylist()
+                    ms = self.column(name).to_pylist()
                     if f"b_z:{c}" in names:
-                        zs = self._pq.column(f"b_z:{c}").to_pylist()
+                        zs = self.column(f"b_z:{c}").to_pylist()
                         entries = [None if z is None else _bloom_z_entry(m, z)
                                    for m, z in zip(ms, zs)]
                     else:  # legacy segment: hex strings
                         entries = [None if h is None else {"m": m, "hex": h}
                                    for m, h in zip(
-                                       ms, self._pq.column(f"b_hex:{c}")
+                                       ms, self.column(f"b_hex:{c}")
                                        .to_pylist())]
                     for f, m, e in zip(files, ms, entries):
                         if m is not None and e is not None:
@@ -495,15 +533,13 @@ class _Segment:
             files = self.files
             cols: dict[str, tuple] = {}
             bloom_cols: set[str] = set()
-            if self._pq is not None:
-                for name in self._pq.schema.names:
-                    if name.startswith("s_lo:"):
-                        c = name[len("s_lo:"):]
-                        cols[c] = (
-                            self._pq.column(name).combine_chunks(),
-                            self._pq.column(f"s_hi:{c}").combine_chunks())
-                    elif name.startswith("b_m:"):
-                        bloom_cols.add(name[len("b_m:"):])
+            if self.is_parquet:
+                self.load(self.names("s_"))
+                for name in self.names("s_lo:"):
+                    c = name[len("s_lo:"):]
+                    cols[c] = (self.column(name).combine_chunks(),
+                               self.column(f"s_hi:{c}").combine_chunks())
+                bloom_cols = {n[len("b_m:"):] for n in self.names("b_m:")}
             else:
                 stats = self.stats
                 names = {c for s in stats.values() for c in (s or {})}
@@ -534,16 +570,34 @@ def _load_segment(path: str) -> _Segment:
         if hit is not None:
             _SEG_CACHE.move_to_end(path)
             return hit[0]
-    size = os.path.getsize(path)
     data = _Segment(path)
     with _SEG_CACHE_LOCK:
         if path not in _SEG_CACHE:
-            _SEG_CACHE[path] = (data, size)
-            _SEG_CACHE_BYTES += size
-            while _SEG_CACHE_BYTES > SEG_CACHE_MAX_BYTES and len(_SEG_CACHE) > 1:
-                _, (_, sz) = _SEG_CACHE.popitem(last=False)
-                _SEG_CACHE_BYTES -= sz
+            _SEG_CACHE[path] = (data, data.nbytes)
+            _SEG_CACHE_BYTES += data.nbytes
+            _seg_cache_evict()
     return data
+
+
+def _seg_cache_charge(path: str, seg: _Segment, added: int) -> None:
+    """Charge ``added`` bytes, read after ``seg`` was cached, to its
+    entry (a segment already evicted is no longer counted)."""
+    global _SEG_CACHE_BYTES
+    with _SEG_CACHE_LOCK:
+        hit = _SEG_CACHE.get(path)
+        if hit is not None and hit[0] is seg:
+            _SEG_CACHE[path] = (seg, hit[1] + added)
+            _SEG_CACHE_BYTES += added
+            _seg_cache_evict()
+
+
+def _seg_cache_evict() -> None:
+    """Drop least-recently-used entries past the byte bound, keeping the
+    newest one.  Called with the lock held."""
+    global _SEG_CACHE_BYTES
+    while _SEG_CACHE_BYTES > SEG_CACHE_MAX_BYTES and len(_SEG_CACHE) > 1:
+        _, (_, sz) = _SEG_CACHE.popitem(last=False)
+        _SEG_CACHE_BYTES -= sz
 
 
 def _seg_cache_clear() -> None:
@@ -679,16 +733,14 @@ def live_bloom_columns(manifest: dict) -> tuple[list[str], int]:
     for src in [manifest] + [
             _load_segment(p) for p in list(manifest.get("segments") or [])
             + list(manifest.get("file_segments") or [])]:
-        if getattr(src, "_pq", None) is not None:
+        if getattr(src, "is_parquet", False):
             import pyarrow as pa
             import pyarrow.compute as pc
 
-            keep = pc.invert(pc.is_in(src._pq.column("file"), pa.array(
+            keep = pc.invert(pc.is_in(src.column("file"), pa.array(
                 manifest.get("removed_files") or [], pa.string())))
-            for name in src._pq.schema.names:
-                if name.startswith("b_m:"):
-                    note(name[4:], pc.max(
-                        src._pq.column(name).filter(keep)).as_py())
+            for name in src.names("b_m:"):
+                note(name[4:], pc.max(src.column(name).filter(keep)).as_py())
             continue
         blooms = src.get("blooms") or {}
         if blooms and live is None:

@@ -16,10 +16,13 @@ with N cores.
 
 from __future__ import annotations
 
+import logging
 import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -141,6 +144,13 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
 
     Returns {name: DataFrame}. Views let both the DataFrame API and
     ``spark.sql`` paths address the same tables.
+
+    Each scan is pinned to the schema of its parquet footer, read on the
+    driver with pyarrow (:func:`types.parquet_read_schema`), so loading
+    launches no Spark job; a footer type outside the pinned set, or a
+    partitioned directory, leaves the schema to Spark's inference and
+    the module logger says why.  TIMESTAMP(NANOS) columns surface as
+    NTZ micros.
     """
     ensure_runtime_confs(spark)
     all_names = [
@@ -160,8 +170,7 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
             ent = _DF_CACHE.get(key)
             df = ent[1] if ent is not None and ent[0] is spark else None
             if df is None:
-                df = spark.read.parquet(path)
-                df = _fix_nanos_timestamps(df, path)
+                df = _read_pinned(spark, path)
                 if len(_DF_CACHE) > 64:
                     _DF_CACHE.clear()
                     _SCAN_SPLIT_EST.clear()
@@ -296,29 +305,44 @@ def ensure_parallelism(df, min_partitions: int | None = None,
     return df
 
 
-def _fix_nanos_timestamps(df, path: str):
-    """TIMESTAMP(NANOS) parquet columns arrive as long (nanosAsLong); convert
-    to NTZ micros - truncation toward earlier, the same unit DuckDB reads."""
+def _footer_schema(spark: SparkSession, path: str):
+    """``types.parquet_read_schema`` of the table's first footer.  A
+    directory table's parts share one schema; a partitioned one also
+    carries partition columns only Spark's discovery knows."""
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
+
+    from aliyun_maxcompute_data_collectors_spark.types import \
+        parquet_read_schema
 
     if os.path.isdir(path):
-        # directory-style table (Spark-written, the realistic multi-file
-        # layout): all parts share one schema - read the first footer only
-        parts = sorted(
-            p for p in os.listdir(path)
-            if p.endswith(".parquet") and not p.startswith(("_", ".")))
+        names = sorted(p for p in os.listdir(path)
+                       if not p.startswith(("_", ".")))
+        if any(os.path.isdir(os.path.join(path, p)) for p in names):
+            return None, [], "a partitioned directory"
+        parts = [p for p in names if p.endswith(".parquet")]
         if not parts:
-            return df
+            return None, [], "no parquet part file"
         path = os.path.join(path, parts[0])
-    schema = pq.read_schema(path)
-    for f in schema:
-        if str(f.type) == "timestamp[ns]":
-            # integer `div`, NOT `/`: float division of epoch-nanos longs
-            # (~1.7e18) exceeds double precision and corrupts the low digits
-            df = df.withColumn(
-                f.name,
-                F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
-                .cast("timestamp_ntz"),
-            )
+    binary_as_string = spark.conf.get(
+        "spark.sql.parquet.binaryAsString", "false").lower() == "true"
+    return parquet_read_schema(pq.ParquetFile(path).schema, binary_as_string)
+
+
+def _read_pinned(spark: SparkSession, path: str):
+    """Parquet scan under its footer schema; TIMESTAMP(NANOS) columns,
+    which arrive as long (nanosAsLong), become NTZ micros - truncation
+    toward earlier, the same unit DuckDB reads."""
+    from pyspark.sql import functions as F
+
+    schema, nanos, why = _footer_schema(spark, path)
+    if why is not None:
+        _log.info("%s: schema left to Spark's inference: %s", path, why)
+    df = (spark.read if schema is None else spark.read.schema(schema)) \
+        .parquet(path)
+    for c in nanos:
+        # integer `div`, NOT `/`: float division of epoch-nanos longs
+        # (~1.7e18) exceeds double precision and corrupts the low digits
+        df = df.withColumn(
+            c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
+            .cast("timestamp_ntz"))
     return df

@@ -260,6 +260,11 @@ def _validate_source_keys(on: str, source_keys: list[str],
 # position the default keeps the build side comfortably O(100 MB).
 DV_BROADCAST_MAX_POSITIONS = 4_000_000
 
+# Every deletion-vector sidecar holds (file, row_index, new): ``new``
+# marks the positions its own commit added.  Sidecar scans are pinned
+# to it, so planning one reads no footer and launches no Spark job.
+SIDECAR_SCHEMA = "file string, row_index bigint, new boolean"
+
 # MOR ADMISSION BOUND (r12, VERDICT r11 #2): a deletion-vector commit
 # funnels its positions through ONE sidecar task (coalesce(1) - right
 # for sparse DML, wrong for bulk).  A mor=True DML matching more than
@@ -1055,8 +1060,7 @@ class SnapshotTable:
             return self._store.commit(
                 m, "merge", rows=n, add=files, stats=stats, blooms=wblooms,
                 schema=unified.json(), shape="replace")
-        src = source.localCheckpoint(eager=True)
-        candidates = self._source_key_candidates(m, src, source_keys)
+        src, candidates = self._checkpoint_candidates(m, source, source_keys)
         if candidates:
             tagged = (self._scan_subset(m, candidates,
                                         file_col="__graft_file")
@@ -1093,24 +1097,30 @@ class SnapshotTable:
             stats=stats, blooms=wblooms, remove=tfiles,
             schema=unified.json())
 
-    def _source_key_candidates(self, m: dict, src: DataFrame,
-                               source_keys: list[str] | None) -> list[str]:
-        """The files of ``m`` whose manifest stats overlap the source
-        batch's per-key [min, max] (one tiny agg over the checkpointed
-        ``src``); every file without ``source_keys`` or a non-null
-        bound."""
+    def _checkpoint_candidates(self, m: dict, source: DataFrame,
+                               source_keys: list[str] | None
+                               ) -> tuple[DataFrame, list[str]]:
+        """(``source`` checkpointed, the files of ``m`` whose manifest
+        stats overlap the source's per-key [min, max]).  The bounds ride
+        the checkpoint job as an ``observe()`` (r13 pattern), so the
+        pruning costs no job of its own.  Every file is a candidate
+        without ``source_keys`` or a non-null bound."""
         if not source_keys:
-            return m["files"]
+            return source.localCheckpoint(eager=True), m["files"]
+        from pyspark.sql import Observation
+
+        obs = Observation(f"merge_keys_{uuid.uuid4().hex}")
         aggs = []
         for k in source_keys:
             aggs += [F.min(k).alias(f"__lo_{k}"),
                      F.max(k).alias(f"__hi_{k}")]
-        row = src.agg(*aggs).collect()[0]
+        src = source.observe(obs, *aggs).localCheckpoint(eager=True)
+        row = obs.get
         conj = [(k, "between", (row[f"__lo_{k}"], row[f"__hi_{k}"]))
                 for k in source_keys
                 if row[f"__lo_{k}"] is not None
                 and row[f"__hi_{k}"] is not None]
-        return self.prune_files(m, conj) if conj else m["files"]
+        return src, self.prune_files(m, conj) if conj else m["files"]
 
     # -- copy-on-write row-level DML (r9) -----------------------------------
     def _reader_for(self, m: dict):
@@ -1273,7 +1283,7 @@ class SnapshotTable:
         AQE picks the strategy instead of a forced broadcast marching
         into the 8 GB hard cap on an uncompacted MOR-heavy table."""
         paths = sorted(set(dv_paths))
-        dvp = (self.spark.read.parquet(*paths)
+        dvp = (self.spark.read.schema(SIDECAR_SCHEMA).parquet(*paths)
                .select(F.col("file").alias("__graft_fp"),
                        F.col("row_index").alias("__graft_ri")))
         if rendered is not None:
@@ -1422,7 +1432,8 @@ class SnapshotTable:
         prior_paths = sorted({dvm[f]["path"] for f in candidates
                               if f in dvm})
         if prior_paths:
-            prior = (self.spark.read.parquet(*prior_paths)
+            prior = (self.spark.read.schema(SIDECAR_SCHEMA)
+                     .parquet(*prior_paths)
                      .select("file", "row_index")
                      .withColumn("new", F.lit(False)))
             new_pos = new_pos.unionByName(prior)
@@ -1908,12 +1919,11 @@ class SnapshotTable:
         # by a tiny id anti-join instead of a second full scan of the
         # target (r12 - the pre-r12 shape scanned the target once per
         # clause family, three times with NOT MATCHED BY SOURCE)
-        src = (source.withColumn("__graft_sid",
-                                 F.monotonically_increasing_id())
-               .localCheckpoint(eager=True))
         # unmatched rows (NOT MATCHED BY SOURCE) can live in ANY file
-        candidates = self._source_key_candidates(
-            m, src, None if not_matched_by_source else source_keys)
+        src, candidates = self._checkpoint_candidates(
+            m, source.withColumn("__graft_sid",
+                                 F.monotonically_increasing_id()),
+            None if not_matched_by_source else source_keys)
         tpos = self._scan_subset(m, candidates, file_col="__graft_file",
                                  row_col="__graft_row")
         data_cols = [c for c in tpos.columns
@@ -2154,7 +2164,7 @@ class SnapshotTable:
         files, n_new, stats, wblooms = self._write_files_bloom(
             df, m, bloom_cols, bloom_bits)
         if validate and files:
-            bad = (self.spark.read.parquet(*files)
+            bad = (self.spark.read.schema(df.schema).parquet(*files)
                    .where(~F.coalesce(pred, F.lit(False))).count())
             if bad:
                 raise SnapshotError(
@@ -2327,7 +2337,8 @@ class SnapshotTable:
                          if rendered is not None
                          else self._norm_meta_path(),
                          "__graft_ri": F.col("_metadata.row_index")})
-                    pos = (self.spark.read.parquet(dv["path"])
+                    pos = (self.spark.read.schema(SIDECAR_SCHEMA)
+                           .parquet(dv["path"])
                            .where(F.col("new"))
                            .select(F.col("file").alias("__graft_fp"),
                                    F.col("row_index").alias("__graft_ri")))

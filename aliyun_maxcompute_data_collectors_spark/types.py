@@ -171,6 +171,124 @@ def declared_char_varchar(field: T.StructField) -> str | None:
     return md.get(CHAR_VARCHAR_META_KEY)
 
 
+class _Unpinned(Exception):
+    """A parquet type outside the closed set ``parquet_read_schema`` maps."""
+
+
+_PARQUET_INTS = {(8, True): T.ByteType(), (16, True): T.ShortType(),
+                 (32, True): T.IntegerType(), (64, True): T.LongType()}
+
+
+def _logical(col) -> dict:
+    import json
+
+    return json.loads(col.logical_type.to_json())
+
+
+def _is_nanos(col) -> bool:
+    lt = _logical(col)
+    return col.physical_type == "INT64" and lt.get("Type") == "Timestamp" \
+        and lt["timeUnit"] == "nanoseconds"
+
+
+def _parquet_leaf_type(col, binary_as_string: bool) -> T.DataType:
+    """Spark type of one parquet leaf column (``pyarrow.parquet``
+    ``ColumnSchema``), decided on its PHYSICAL type and logical
+    annotation, as Spark's own footer converter does.  pyarrow shows
+    INT96 and INT64 TIMESTAMP(NANOS) alike as ``timestamp[ns]``; Spark
+    reads the first as TIMESTAMP and the second, under ``nanosAsLong``,
+    as BIGINT."""
+    phys = col.physical_type
+    lt = _logical(col)
+    kind = lt.get("Type", "None")
+    if kind == "Decimal" and 0 < col.precision <= 38:
+        return T.DecimalType(col.precision, col.scale)
+    if phys == "BOOLEAN" and kind == "None":
+        return T.BooleanType()
+    if phys in ("INT32", "INT64"):
+        if kind == "None":
+            return T.IntegerType() if phys == "INT32" else T.LongType()
+        if kind == "Int" and (lt["bitWidth"], lt["isSigned"]) in _PARQUET_INTS:
+            return _PARQUET_INTS[lt["bitWidth"], lt["isSigned"]]
+        if kind == "Date" and phys == "INT32":
+            return T.DateType()
+        if kind == "Timestamp" and phys == "INT64":
+            if lt["timeUnit"] == "nanoseconds":
+                return T.LongType()
+            # inferTimestampNTZ: a local-time timestamp reads as NTZ
+            return T.TimestampType() if lt["isAdjustedToUTC"] \
+                else T.TimestampNTZType()
+    if phys == "INT96" and kind == "None":
+        return T.TimestampType()
+    if phys == "FLOAT" and kind == "None":
+        return T.FloatType()
+    if phys == "DOUBLE" and kind == "None":
+        return T.DoubleType()
+    if phys == "BYTE_ARRAY" and kind == "String":
+        return T.StringType()
+    if phys in ("BYTE_ARRAY", "FIXED_LEN_BYTE_ARRAY") and kind == "None":
+        return T.StringType() if binary_as_string else T.BinaryType()
+    raise _Unpinned(f"{phys} {col.logical_type}")
+
+
+def _is_list(t) -> bool:
+    import pyarrow as pa
+
+    return pa.types.is_list(t) or pa.types.is_large_list(t) \
+        or pa.types.is_fixed_size_list(t)
+
+
+def _leaf_count(t) -> int:
+    import pyarrow as pa
+
+    if pa.types.is_struct(t):
+        return sum(_leaf_count(t.field(i).type) for i in range(t.num_fields))
+    if pa.types.is_map(t):
+        return _leaf_count(t.key_type) + _leaf_count(t.item_type)
+    if _is_list(t):
+        return _leaf_count(t.value_type)
+    return 1
+
+
+def parquet_read_schema(schema, binary_as_string: bool = False):
+    """``(StructType | None, nanos, why)`` for a parquet footer schema
+    (``pyarrow.parquet.ParquetFile(p).schema``): the schema
+    ``spark.read.parquet`` infers under the confs ``load_tables`` pins
+    (``inferTimestampNTZ``, ``nanosAsLong``), built without the Spark
+    job that inference launches.  ``nanos`` lists the top-level INT64
+    TIMESTAMP(NANOS) columns, which read as BIGINT.
+
+    The mapped set is closed: signed int8/16/32/64, float, double,
+    string, binary, boolean, date, decimal up to precision 38,
+    timestamps in ms/us (NTZ without a UTC adjustment), INT96
+    timestamps, nanos timestamps as BIGINT, and lists of these.  Any
+    other column (unsigned ints, time, float16, uuid, maps, structs,
+    nested lists) gives None and ``why`` names it, so the caller can
+    let Spark infer instead."""
+    import pyarrow as pa
+
+    fields, nanos, why = [], [], None
+    leaf = 0
+    for f in schema.to_arrow_schema():
+        col = schema.column(leaf)
+        leaf += _leaf_count(f.type)
+        listed = _is_list(f.type)
+        nested = pa.types.is_nested(f.type.value_type if listed else f.type)
+        if not listed and not nested and _is_nanos(col):
+            nanos.append(f.name)
+        if why is not None:
+            continue
+        try:
+            if nested or col.max_repetition_level != int(listed):
+                raise _Unpinned(str(f.type))
+            dt = _parquet_leaf_type(col, binary_as_string)
+        except _Unpinned as e:
+            why = f"column {f.name!r} has type {e}, outside the pinned set"
+            continue
+        fields.append(T.StructField(f.name, T.ArrayType(dt) if listed else dt))
+    return (None if why else T.StructType(fields)), nanos, why
+
+
 # fixed per-type width estimates (bytes), mirroring the reference's
 # column-width-scaled size stats (OdpsScan.scala:267-279: sizeInBytes =
 # rawSize * projectedWidths/totalWidths * compression factor)

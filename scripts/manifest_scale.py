@@ -8,6 +8,7 @@ lists through the real ``ManifestStore.commit`` / ``manifest()`` /
 
 - commit latency: append 100 new files to a table already holding N
   (parent manifest load + stats carry + json dump + fsync)
+- cold manifest load alone (segment cache cleared)
 - planning latency: manifest load + stats-based pruning of one conjunct
 - bloom policy resolution: the cold ``SnapshotTable.bloom_columns()``
   every default-policy write resolves (manifest load + which columns
@@ -89,6 +90,13 @@ def bench_one(n_files: int, blooms: bool) -> dict:
         tab.commit(pm, "append", rows=pm["rows"] + 100 * 1000, add=new,
                    stats=new_stats, blooms=new_bl)
         commit_s = time.perf_counter() - t0
+        # the cold file list alone: what every DML, read and bloom-policy
+        # resolution pays first (a parquet segment reads only its
+        # ``file`` column here, never the bloom bytes)
+        _seg_cache_clear()
+        t0 = time.perf_counter()
+        tab.manifest()
+        manifest_cold_s = time.perf_counter() - t0
         # planning: cold manifest load + one-conjunct prune.  Clear the
         # segment cache so "cold" really pays the segment decode (r10;
         # the r9 number was semi-warm - the preceding commit had loaded
@@ -154,6 +162,7 @@ def bench_one(n_files: int, blooms: bool) -> dict:
         return {"n_files": n_files, "blooms": blooms,
                 "commit_s": round(commit_s, 4),
                 "dml_commit_s": round(dml_commit_s, 4),
+                "manifest_cold_s": round(manifest_cold_s, 4),
                 "plan_s": round(plan_s, 4),
                 "plan_warm_s": round(plan_warm_s, 4),
                 "bloom_policy_cold_s": round(policy_cold_s, 4),

@@ -576,3 +576,43 @@ def test_manifest_store_imports_without_pyspark(tmp_path):
     assert out.returncode == 0, out.stderr
     assert out.stdout.strip() == "spark-free"
 
+
+
+def test_parquet_segment_reads_bloom_bytes_only_when_used(tmp_path):
+    """Listing a table's files reads only the segments' ``file`` column;
+    stats and bloom columns load on first use, and the segment cache
+    is charged exactly the bytes each segment holds."""
+    store = ManifestStore.init(str(tmp_path / "t"), inline_files=2,
+                               inline_stats_files=1,
+                               parquet_seg_min_files=1)
+    add = _files("p", 40)
+    blooms = {f: {"c": bloom_entry([i, i + 7], 1 << 12)}
+              for i, f in enumerate(add)}
+    _append(store, add, blooms=blooms)
+
+    def cached():
+        with S._SEG_CACHE_LOCK:
+            return {p: e for p, e in S._SEG_CACHE.items()}
+
+    S._seg_cache_clear()
+    m = store.manifest()
+    assert m["files"] == add
+    segs = cached()
+    assert segs and all(p.endswith(".parquet") for p in segs)
+    assert all(set(seg._cols) == {"file"} for seg, _ in segs.values())
+    assert S.live_bloom_columns(m) == (["c"], 1 << 12)
+    # the bloom policy reads the widths, never the bitmaps
+    assert not any(n.startswith("b_z:") for seg, _ in cached().values()
+                   for n in seg._cols)
+    stats, got = resolve_stats(m)
+    assert stats == _stats(add)
+    assert {f: got[f]["c"] for f in add} == {f: b["c"]
+                                             for f, b in blooms.items()}
+    loaded = cached()
+    assert any(n.startswith("b_z:") for seg, _ in loaded.values()
+               for n in seg._cols)
+    for seg, size in loaded.values():
+        assert size == seg.nbytes == sum(c.nbytes
+                                         for c in seg._cols.values())
+    assert S._SEG_CACHE_BYTES == sum(size for _, size in loaded.values())
+    S._seg_cache_clear()
