@@ -1216,7 +1216,6 @@ def snapshot_filelist_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     table).  The hash pins the row aggregate after the full lifecycle
     plus the metadata shape: inline path count (0), file-segment count
     after consolidation (1), and surviving version count after vacuum."""
-    import json as _json
     import os as _os
     import tempfile as _tf
 
@@ -1236,7 +1235,7 @@ def snapshot_filelist_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         tab.consolidate_metadata()                          # v6: one segment
         tab.vacuum(keep_last=2)
         mf = tab.manifest()
-        raw = _json.load(open(tab._store.manifest_path(mf["version"])))
+        raw = tab._store.manifest_json(mf["version"])
         out = tab.read().agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("o_orderkey").cast("long").alias("sum_key"),
@@ -1698,7 +1697,6 @@ def snapshot_parquet_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ``vacuum`` keeps the live segment.  The hash pins the post-DML
     aggregate plus the metadata shape: zero inline paths, ONE parquet
     file segment, one file kept by the prune, two surviving versions."""
-    import json as _json
     import os as _os
 
     root = tempfile.mkdtemp(prefix="snap_pqseg_")
@@ -1716,7 +1714,7 @@ def snapshot_parquet_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         tab.consolidate_metadata()                  # parquet -> parquet fold
         tab.vacuum(keep_last=2)
         mf = tab.manifest()
-        raw = _json.load(open(tab._store.manifest_path(mf["version"])))
+        raw = tab._store.manifest_json(mf["version"])
         fsegs = raw.get("file_segments") or []
         n_pruned = len(tab.prune_files(
             mf, [("o_orderkey", "==", int(

@@ -54,6 +54,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import sys
 import uuid
 from dataclasses import dataclass
 
@@ -95,6 +96,37 @@ _FILTER_OPS = {
     LessThan: "<",
     LessThanOrEqual: "<=",
 }
+
+
+_PUSHDOWN_PLANNER = "pyspark.sql.worker.data_source_pushdown_filters"
+
+
+def _pushdown_enabled() -> bool:
+    """Whether the read calling ``reader()`` will be offered filters.
+
+    A pushFilters-declaring Python reader FAILS to initialize under the
+    default conf, which would break every bare-session read, so the
+    pushdown variant is picked only when pushdown is on.  Spark calls
+    ``reader()`` inside a Python planner worker, where there is no
+    active session to ask; but it runs the pushdown planner module only
+    when ``spark.sql.python.filterPushdown.enabled`` is on, and the
+    plain read planner otherwise.  So the caller's module decides; a
+    direct call on the driver reads the active session's conf."""
+    f = sys._getframe(1)
+    while f is not None:
+        spec = f.f_globals.get("__spec__")
+        if getattr(spec, "name", None) == _PUSHDOWN_PLANNER:
+            return True
+        f = f.f_back
+    from pyspark.sql import SparkSession
+    active = SparkSession.getActiveSession()
+    if active is None:
+        return False
+    try:
+        return str(active.conf.get("spark.sql.python.filterPushdown.enabled",
+                                   "false")).lower() == "true"
+    except Exception:
+        return False
 
 
 def _pack_files(files: list[str], target_bytes: int) -> list[list[str]]:
@@ -919,23 +951,8 @@ class GraftSnapshotDataSource(DataSource):
         if self._cdf_enabled():
             return _SnapshotChangeReader(self._table_path(), self.options,
                                          schema)
-        # pick the pushdown variant only when the session allows it -
-        # a pushFilters-declaring Python reader FAILS to initialize
-        # under the default conf, which would break every bare-session
-        # read (CREATE TEMPORARY VIEW ... USING graft_snapshot on a
-        # session that never set the conf).  reader() runs at plan time
-        # on the driver, where the active session is available.
-        from pyspark.sql import SparkSession
-        active = SparkSession.getActiveSession()
-        enabled = False
-        if active is not None:
-            try:
-                enabled = str(active.conf.get(
-                    "spark.sql.python.filterPushdown.enabled",
-                    "false")).lower() == "true"
-            except Exception:
-                enabled = False
-        cls = _SnapshotReader if enabled else _SnapshotReaderNoPushdown
+        cls = (_SnapshotReader if _pushdown_enabled()
+               else _SnapshotReaderNoPushdown)
         return cls(self._resolve_manifest(), self.options, schema)
 
     def writer(self, schema: StructType, overwrite: bool):

@@ -14,10 +14,14 @@ lists through the real ``ManifestStore.commit`` / ``manifest()`` /
   every default-policy write resolves (manifest load + which columns
   the live files bloom, at what width) - it must not cost more than
   the cold plan
-- manifest size on disk
+- manifest and segment sizes, on disk and decoded (gzip'd JSON
+  inflated; a parquet segment's arrow table with every column loaded),
+  so the decode cost above shows next to the bytes it saves
 
-Run:  python scripts/manifest_scale.py [--blooms]
-Output: one JSON line per (N, variant) -> SCALE.md curve.
+Run:  python scripts/manifest_scale.py [--blooms] [--sizes N,N,...]
+Output: one JSON line per (N, variant) -> SCALE.md curve.  N is the
+table's size before the timed 100-file append: ``--sizes 3996`` times a
+table of 4,096 inline files.
 """
 
 from __future__ import annotations
@@ -40,6 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aliyun_maxcompute_data_collectors_spark.manifest_store import (  # noqa: E402
     ManifestStore,
+    _read_json,
     _seg_cache_clear,
     bloom_entry,
 )
@@ -61,6 +66,14 @@ def synth_bloom(i: int, m: int = 1 << 15, keys: int = 500) -> dict:
     # (the lakehouse_dml set-up append), built by the package encoder
     pos = random.Random(i).sample(range(m), keys)
     return {"code": bloom_entry(pos, m)}
+
+
+def on_disk_and_decoded(path: str) -> tuple[int, int]:
+    """(bytes on disk, bytes decoded) of one manifest or segment file."""
+    if path.endswith(".parquet"):
+        import pyarrow.parquet as pq
+        return os.path.getsize(path), pq.read_table(path).nbytes
+    return os.path.getsize(path), _read_json(path)[1]
 
 
 def build_table(root: str, n_files: int, blooms: bool) -> ManifestStore:
@@ -130,11 +143,12 @@ def bench_one(n_files: int, blooms: bool) -> dict:
         assert len(tab.manifest()["files"]) == len(m2["files"]) - 10
         # manifest/segment footprint of the steady-state table, captured
         # BEFORE the CDF-appends below inflate the inline variants
-        size = os.path.getsize(tab.manifest_path(tab.current_version()))
-        seg_bytes = sum(
-            os.path.getsize(os.path.join(tab.root, "manifests", f))
-            for f in os.listdir(os.path.join(tab.root, "manifests"))
-            if f.startswith("seg-"))
+        size, size_dec = on_disk_and_decoded(
+            tab.manifest_path(tab.current_version()))
+        seg_sizes = [on_disk_and_decoded(os.path.join(tab.root, "manifests",
+                                                      f))
+                     for f in os.listdir(os.path.join(tab.root, "manifests"))
+                     if f.startswith("seg-")]
         # CDF RANGE PLANNING over 50 commits (r11, VERDICT r10 #3): 49
         # more appends (100 files each, recording per-commit deltas as
         # SnapshotTable.append does) + the DML commit above, then plan
@@ -167,7 +181,9 @@ def bench_one(n_files: int, blooms: bool) -> dict:
                 "plan_warm_s": round(plan_warm_s, 4),
                 "bloom_policy_cold_s": round(policy_cold_s, 4),
                 "cdf_plan_50v_s": round(cdf_plan_s, 4),
-                "manifest_bytes": size, "segment_bytes": seg_bytes,
+                "manifest_bytes": size, "manifest_decoded_bytes": size_dec,
+                "segment_bytes": sum(disk for disk, _ in seg_sizes),
+                "segment_decoded_bytes": sum(dec for _, dec in seg_sizes),
                 "kept": len(kept)}
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -179,5 +195,8 @@ if __name__ == "__main__":
     # target point (VERDICT r8 #1 done-criteria)
     sizes = ([1_000, 10_000, 100_000, 1_000_000] if not blooms
              else [1_000, 10_000, 100_000])
+    if "--sizes" in sys.argv:
+        sizes = [int(n) for n in
+                 sys.argv[sys.argv.index("--sizes") + 1].split(",")]
     for n in sizes:
         print(json.dumps(bench_one(n, blooms)), flush=True)

@@ -266,6 +266,37 @@ def test_multilevel_partitions_and_typed_filter(cat, spark):
     assert cat.max_pt("ml") == "us"
 
 
+@pytest.mark.parametrize("physical,declared,rows", [
+    ("int32", "BIGINT", [1, 2, 3]),
+    ("float32", "DOUBLE", [1.5, 2.5, None]),
+    ("int64", "INT", None),
+    ("int64", "STRING", None),
+])
+def test_external_table_over_foreign_parquet_types(cat, tmp_path, physical,
+                                                   declared, rows):
+    """An EXTERNAL table reads its files under the declared schema: a
+    file type Spark widens to the declared one reads, any other fails
+    the read loudly - never a silent cast (a non-ANSI long->int cast
+    would wrap)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    loc = tmp_path / "foreign"
+    loc.mkdir()
+    values = rows or [1, 2 ** 40, 3]
+    pq.write_table(pa.table({"x": pa.array(values, getattr(pa, physical)())}),
+                   str(loc / "part-00000.parquet"))
+    cat.create_table("ext", [("x", declared)], external_location=str(loc))
+    df = cat.read_table("ext")
+    assert df.schema["x"].dataType.simpleString() == declared.lower()
+    if rows is not None:
+        assert [r["x"] for r in df.collect()] == rows
+    else:
+        with pytest.raises(Exception,
+                           match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+            df.collect()
+
+
 def test_orc_storage_format(cat, spark):
     # D1 'stored-as' parity: ORC tables flow through the same scan/write/
     # stats/compact paths as parquet

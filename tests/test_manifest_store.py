@@ -10,6 +10,7 @@ examples."""
 from __future__ import annotations
 
 import contextlib
+import gzip
 import json
 import os
 import random
@@ -615,4 +616,113 @@ def test_parquet_segment_reads_bloom_bytes_only_when_used(tmp_path):
         assert size == seg.nbytes == sum(c.nbytes
                                          for c in seg._cols.values())
     assert S._SEG_CACHE_BYTES == sum(size for _, size in loaded.values())
+    S._seg_cache_clear()
+
+
+# ---------------------------------------------------------------------------
+# on-disk encoding: gzip'd compact JSON, plain JSON still read
+# ---------------------------------------------------------------------------
+
+def _plain_json(obj, gzipped=True) -> bytes:
+    """What writers before gzip stored: plain JSON text."""
+    return json.dumps(obj, indent=1, allow_nan=False).encode()
+
+
+def _decoded(path: str) -> bytes:
+    with open(path, "rb") as f:
+        raw = f.read()
+    assert raw[:2] == b"\x1f\x8b", path
+    return gzip.decompress(raw)
+
+
+def test_manifest_and_json_segment_are_gzipped_compact_json(tmp_path):
+    """Manifests and JSON segments round-trip as gzip'd compact JSON; a
+    segment carrying bloom entries is written plain (its bitmaps are
+    already zlib'd) and reads the same."""
+    store = ManifestStore.init(str(tmp_path / "t"), inline_stats_files=1)
+    add = _files("g", 3)
+    blooms = {f: {"c": bloom_entry([i, 9], 64)} for i, f in enumerate(add)}
+    v = _append(store, add, blooms=blooms,
+                dvs={add[0]: {"path": "/dv/0", "n": 2}})
+    mj = store.manifest_json(v)
+    assert _decoded(store.manifest_path(v)) == json.dumps(
+        mj, separators=(",", ":")).encode()
+    assert mj["dvs"] == {add[0]: {"path": "/dv/0", "n": 2}}
+    (bloomed,) = mj["segments"]
+    with open(bloomed, "rb") as f:
+        assert json.loads(f.read()) == {"stats": _stats(add),
+                                        "blooms": blooms}
+    more = _files("h", 2)
+    v = _append(store, more)
+    seg = store.manifest_json(v)["segments"][-1]
+    assert seg.endswith(".json")
+    assert json.loads(_decoded(seg)) == {"stats": _stats(more),
+                                         "blooms": {}}
+    _, got = resolve_stats(store.manifest())
+    assert got == blooms
+    assert store.versions()[-1]["operation"] == "append"
+
+
+def test_repeated_commit_is_byte_identical(tmp_path, monkeypatch):
+    """Equal metadata gives equal bytes: no gzip mtime, no whitespace
+    that depends on anything but the content."""
+    monkeypatch.setattr(S.time, "time", lambda: 1_700_000_000.0)
+    path = str(tmp_path / "t")
+    runs = []
+    for _ in range(2):
+        shutil.rmtree(path, ignore_errors=True)
+        store = ManifestStore.init(path)
+        add = _files("b", 4)
+        _append(store, add, blooms={f: {"c": bloom_entry([1, 5], 64)}
+                                    for f in add})
+        runs.append([open(store.manifest_path(v), "rb").read()
+                     for v in (1, 2)])
+    assert runs[0] == runs[1]
+    assert runs[0][1][4:8] == b"\0\0\0\0"  # gzip header mtime
+
+
+def test_plain_json_table_reads_and_commits(tmp_path):
+    """A table written before gzip (plain-JSON manifests and segments)
+    reads, time-travels and gives its commit deltas unchanged, and a
+    commit on top writes gzip'd files beside the plain ones."""
+    path = str(tmp_path / "t")
+    with mock.patch.object(S, "_encode_json", _plain_json):
+        store = _seeded(path, {"inline_files": 3, "inline_stats_files": 1},
+                        3)
+    mdir = os.path.join(store.root, "manifests")
+    legacy = sorted(os.listdir(mdir))
+    assert any(n.startswith("seg-") for n in legacy)
+    for n in legacy:
+        with open(os.path.join(mdir, n), "rb") as f:
+            assert f.read(1) == b"{", n
+    S._seg_cache_clear()
+    store = ManifestStore(path)
+    want = [_files(f"s{i}_", 2) for i in range(3)]
+    for v in (2, 3, 4):
+        m = store.manifest(v)
+        assert m["files"] == [f for fs in want[:v - 1] for f in fs], v
+        assert store.commit_delta(v) == (want[v - 2], []), v
+        stats, _ = resolve_stats(m)
+        assert {f: stats[f] for f in m["files"]} == {
+            f: s for fs in want[:v - 1] for f, s in _stats(fs).items()}
+    assert [r["version"] for r in store.versions()] == [1, 2, 3, 4]
+    v5 = _do_cow(store)
+    assert store.manifest(v5)["files"] == want[1] + want[2] + _files("rw", 1)
+    assert store.commit_delta(v5) == (_files("rw", 1), want[0])
+    _decoded(store.manifest_path(v5))
+    assert store.manifest(4)["files"] == [f for fs in want for f in fs]
+
+
+def test_segment_cache_charges_decoded_json_bytes(tmp_path):
+    """A gzip'd JSON segment costs the cache its decoded bytes, the
+    in-memory proxy, not its 2-5x smaller file size."""
+    store = ManifestStore.init(str(tmp_path / "t"), inline_stats_files=1)
+    _append(store, _files("c", 50))
+    (seg,) = store.manifest()["segments"]
+    S._seg_cache_clear()
+    S._load_segment(seg)
+    with S._SEG_CACHE_LOCK:
+        (_, size), = S._SEG_CACHE.values()
+    assert size == len(_decoded(seg)) > 2 * os.path.getsize(seg)
+    assert S._SEG_CACHE_BYTES == size
     S._seg_cache_clear()

@@ -95,6 +95,30 @@ def test_snapshot_ds_filter_pushdown_prunes_files(spark, orders, root,
     assert got == orders.where(k <= b1 // 2).count()
 
 
+def test_snapshot_ds_pushdown_prunes_inside_the_planner(spark, root,
+                                                        pushdown):
+    """Spark calls ``reader()`` in its planner worker, with no active
+    session: the pruned read must still skip files there.  The file
+    that cannot match is deleted from disk, so a read that lists it
+    fails.  With the conf off the same source reads everything."""
+    tab = SnapshotTable.init(spark, root)
+    for lo in (0, 1000, 2000):
+        tab.append(spark.range(lo, lo + 1000).withColumnRenamed("id", "k")
+                   .coalesce(1))
+    k = F.col("k")
+
+    def load():
+        return spark.read.format("graft_snapshot").option("path", root).load()
+
+    with scoped_sql_conf(spark, "spark.sql.python.filterPushdown.enabled",
+                         "false"):
+        assert load().count() == 3000
+        assert load().where(k <= 10).count() == 11
+    (last,) = tab.prune_files(tab.manifest(), [("k", ">=", 2000)])
+    os.remove(last)
+    assert load().where(k <= 10).count() == 11
+
+
 def test_snapshot_ds_write_append_overwrite(spark, orders, root, pushdown):
     tab = SnapshotTable.init(spark, root)
     m = F.col("o_orderkey") % 10

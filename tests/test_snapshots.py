@@ -259,8 +259,7 @@ def test_changes_falls_back_without_deltas(spark, table):
     # strip the delta from the DML manifest, as a pre-r11 writer would
     import json as _json
     mp = table._store.manifest_path(table.current_version())
-    with open(mp) as f:
-        mj = _json.load(f)
+    mj = table._store.manifest_json(table.current_version())
     assert mj.pop("delta", None) is not None
     with open(mp, "w") as f:
         _json.dump(mj, f)
@@ -827,9 +826,7 @@ def test_nan_stats_never_prune(spark, table):
     assert fstats["id"] == [1, 3]     # clean columns still statted
     # the manifest stays strict JSON (no NaN token)
     import json as _json
-    _json.loads(open(table._store.manifest_path(m["version"])).read(),
-                parse_constant=lambda c: (_ for _ in ()).throw(
-                    ValueError(f"nonstandard JSON constant {c}")))
+    _json.dumps(table._store.manifest_json(m["version"]), allow_nan=False)
     # the file is NOT pruned and the matching rows come back (Spark
     # orders NaN greatest, so x > 1.5 matches the NaN row too)
     assert table.prune_files(m, [("x", ">", 1.5)]) == m["files"]
@@ -892,7 +889,6 @@ def test_stats_segmentation_end_to_end(spark, table, monkeypatch):
     manifest carries only their paths - append metadata is O(new files).
     Threshold patched low so the transition, pruning-through-segments,
     compact carry, rollback, and vacuum cleanup all run cheap."""
-    import json as _json
 
     import aliyun_maxcompute_data_collectors_spark.manifest_store as S
 
@@ -904,7 +900,7 @@ def test_stats_segmentation_end_to_end(spark, table, monkeypatch):
     m = table.manifest()
     assert m["stats"] == {} and len(m["segments"]) == 1
     # the segment holds the FULL migrated stats (old + new files)
-    seg = _json.loads(open(m["segments"][0]).read())
+    seg = S._load_segment(m["segments"][0])
     assert set(seg["stats"]) == set(m["files"])
     # pruning resolves through segments: only the id<=2 file scans
     assert len(table.prune_files(m, [("id", "<=", 2)])) == 1
@@ -914,7 +910,7 @@ def test_stats_segmentation_end_to_end(spark, table, monkeypatch):
     table.append(_df(spark, [(20, "d")]).coalesce(1))
     m2 = table.manifest()
     assert len(m2["segments"]) == 2
-    seg2 = _json.loads(open(m2["segments"][1]).read())
+    seg2 = S._load_segment(m2["segments"][1])
     assert len(seg2["stats"]) == 1
     # compact CONSOLIDATES metadata (r9, VERDICT r8 #5): carried segments
     # are resolved and re-committed fresh - the single rewritten file's
@@ -1009,7 +1005,6 @@ def test_file_list_segmentation_end_to_end(spark, table, monkeypatch):
     (+ stats), manifest() materializes the full list from immutable
     segments, and every consumer (read/time travel/prune/rollback/
     changes/vacuum) behaves identically to the inline layout."""
-    import json as _json
 
     import aliyun_maxcompute_data_collectors_spark.manifest_store as S
 
@@ -1024,7 +1019,7 @@ def test_file_list_segmentation_end_to_end(spark, table, monkeypatch):
     m = table.manifest()
     assert m.get("file_segments") and len(m["file_segments"]) == 1
     # the ON-DISK manifest carries no path list; manifest() materializes
-    raw = _json.load(open(table._store.manifest_path(m["version"])))
+    raw = table._store.manifest_json(m["version"])
     assert raw["files"] == [] and len(m["files"]) == 3
     assert sorted(r["id"] for r in table.read().collect()) == [1, 2, 10, 11]
     v_seg1 = m["version"]
@@ -1032,7 +1027,7 @@ def test_file_list_segmentation_end_to_end(spark, table, monkeypatch):
     table.append(_df(spark, [(20, "d")]).coalesce(1))
     m2 = table.manifest()
     assert len(m2["file_segments"]) == 2
-    seg2 = _json.load(open(m2["file_segments"][1]))
+    seg2 = S._load_segment(m2["file_segments"][1])
     assert len(seg2["files"]) == 1 and len(m2["files"]) == 4
     # stats ride the file segments: interval pruning still resolves -
     # every file carries stats now, so the point read prunes to 1 of 4
@@ -1130,7 +1125,7 @@ def test_legacy_nan_stats_do_not_brick_commits(spark, table):
 
     table.append(_df(spark, [(1, "a")]).coalesce(1))
     mpath = table._store.manifest_path(table.current_version())
-    raw = _json.load(open(mpath))
+    raw = table._store.manifest_json(table.current_version())
     f0 = raw["files"][0]
     raw["stats"].setdefault(f0, {})["poison"] = [float("nan"), float("inf")]
     with open(mpath, "w") as fh:
@@ -1138,7 +1133,7 @@ def test_legacy_nan_stats_do_not_brick_commits(spark, table):
     # append must succeed and the poisoned column must be gone
     table.append(_df(spark, [(2, "b")]).coalesce(1))
     m = table.manifest()
-    dumped = open(table._store.manifest_path(m["version"])).read()
+    dumped = _json.dumps(table._store.manifest_json(m["version"]))
     assert "NaN" not in dumped and "Infinity" not in dumped
     assert "poison" not in (m["stats"].get(f0) or {})
     assert sorted(r["id"] for r in table.read().collect()) == [1, 2]
@@ -1182,7 +1177,6 @@ def test_long_lived_table_segment_growth_bounded(tmp_path):
     real commit path; cold planning reads a BOUNDED number of
     segments and the materialized list/stats stay exact.  No Spark -
     this isolates the metadata layer like scripts/manifest_scale.py."""
-    import json as _json
 
     import aliyun_maxcompute_data_collectors_spark.manifest_store as S
     from aliyun_maxcompute_data_collectors_spark.snapshots import (
@@ -1206,7 +1200,7 @@ def test_long_lived_table_segment_growth_bounded(tmp_path):
     n_segs = len(m.get("file_segments") or []) + len(m.get("segments") or [])
     assert 0 < n_segs <= S.MAX_SEGMENTS
     # the manifest on disk stays O(segments), not O(files)
-    raw = _json.load(open(tab.manifest_path(m["version"])))
+    raw = tab.manifest_json(m["version"])
     assert raw["files"] == [] and raw["stats"] == {}
     assert os.path.getsize(tab.manifest_path(m["version"])) < 64 * 1024
     # planning: the point prune hits exactly one file through segments
@@ -1551,7 +1545,6 @@ def test_segmented_dml_uses_removal_list_not_fold(spark, tmp_path,
     """COW DML on a file-list-segmented table must carry the parent's
     segments UNCHANGED and record dropped paths on the manifest's
     removal list - O(touched) commit metadata, no segment fold."""
-    import json as _json
 
     import aliyun_maxcompute_data_collectors_spark.manifest_store as S
     monkeypatch.setattr(S, "INLINE_FILES", 2)
@@ -1561,7 +1554,7 @@ def test_segmented_dml_uses_removal_list_not_fold(spark, tmp_path,
     pre = t.manifest()
     assert pre.get("file_segments")
     t.delete(("k", "between", (100, 199)))
-    raw = _json.load(open(t._store.manifest_path(t.current_version())))
+    raw = t._store.manifest_json(t.current_version())
     # parent's segments carried verbatim + exactly one new (the rewrite)
     assert set(pre["file_segments"]) <= set(raw["file_segments"])
     assert len(raw["file_segments"]) == len(pre["file_segments"]) + 1
@@ -1598,7 +1591,6 @@ def test_segmented_dml_no_resurrection_after_append(spark, tmp_path,
 def test_removal_list_bounded_by_fold(spark, tmp_path, monkeypatch):
     """Past REMOVED_FILES_MAX entries the next commit folds, applying
     and clearing the removals - amortized O(1) housekeeping."""
-    import json as _json
 
     import aliyun_maxcompute_data_collectors_spark.manifest_store as S
     monkeypatch.setattr(S, "INLINE_FILES", 2)
@@ -1608,7 +1600,7 @@ def test_removal_list_bounded_by_fold(spark, tmp_path, monkeypatch):
         t.append(_kv(spark, lo, lo + 200).coalesce(1))
     for lo in (0, 200, 400):  # 3 whole-file deletes -> removals 1,2,fold
         t.delete(("k", "between", (lo, lo + 199)))
-    raw = _json.load(open(t._store.manifest_path(t.current_version())))
+    raw = t._store.manifest_json(t.current_version())
     assert not raw.get("removed_files")  # fold applied + cleared
     assert t.read().count() == 400
     assert t.manifest()["rows"] == 400
@@ -1639,7 +1631,6 @@ def test_segmented_cdc_merge_commit_is_o_touched(spark, tmp_path,
                                                  monkeypatch):
     """The motivating case: a CDC merge batch on a segmented table must
     not fold the metadata."""
-    import json as _json
 
     from aliyun_maxcompute_data_collectors_spark.snapshots import cdc_apply_merge
 
@@ -1653,7 +1644,7 @@ def test_segmented_cdc_merge_commit_is_o_touched(spark, tmp_path,
     batch = spark.createDataFrame([(100, 9, 1, "U"), (2000, 9, 1, "I")],
                                   "k long, v long, ts long, op string")
     cdc_apply_merge(t, batch, ["k"], ["ts"])
-    raw = _json.load(open(t._store.manifest_path(t.current_version())))
+    raw = t._store.manifest_json(t.current_version())
     assert pre_segs <= set(raw["file_segments"])   # carried, not folded
     assert len(raw["removed_files"]) == 1          # only the touched file
     got = {r["k"]: r["v"] for r in t.read().where(
@@ -1954,8 +1945,7 @@ def test_per_instance_thresholds_no_global_mutation(spark, tmp_path):
     t = SnapshotTable.init(spark, str(tmp_path / "pi"), inline_files=2)
     for lo in range(0, 400, 100):
         t.append(_kv(spark, lo, lo + 100).coalesce(1))
-    import json as _json
-    raw = _json.load(open(t._store.manifest_path(t.current_version())))
+    raw = t._store.manifest_json(t.current_version())
     assert raw["files"] == [] and raw.get("file_segments")
     assert t.read().count() == 400
     # a FRESH instance on the same path uses the defaults for NEW
@@ -2013,7 +2003,7 @@ def test_cdc_fallback_tcols_exclude_order_cols(spark, tmp_path):
     t.append(_kv(spark, 0, 100).coalesce(1))
     # simulate a legacy manifest with no recorded schema
     mp = t._store.manifest_path(t.current_version())
-    raw = _json.load(open(mp))
+    raw = t._store.manifest_json(t.current_version())
     raw.pop("schema", None)
     with open(mp, "w") as f:
         _json.dump(raw, f)
@@ -2046,7 +2036,6 @@ def test_parquet_segments_roundtrip(spark, tmp_path, monkeypatch):
     patched to 1 so small tables exercise the path) and every consumer
     - materialize, read, time travel, prune, DML removal lists, fold,
     vacuum - behaves identically to the JSON layout."""
-    import json as _json
 
     import aliyun_maxcompute_data_collectors_spark.manifest_store as S
 
@@ -2057,7 +2046,7 @@ def test_parquet_segments_roundtrip(spark, tmp_path, monkeypatch):
     m = t.manifest()
     assert m.get("file_segments")
     assert all(s.endswith(".parquet") for s in m["file_segments"])
-    raw = _json.load(open(t._store.manifest_path(m["version"])))
+    raw = t._store.manifest_json(m["version"])
     assert raw["files"] == [] and len(m["files"]) == 4
     # stats round-trip: interval prune hits exactly one file; bloom
     # round-trip: equality prune on a present/absent value
