@@ -61,12 +61,14 @@ every carried field from ``base``, the parent's manifest, so no caller
 handles the layout:
 
 - the live list is base's list minus ``remove`` plus ``add``; a
-  segmented base keeps its segments and grows ``removed_files``, so a
-  removed file never comes back;
+  file-segmented base keeps its segments and grows ``removed_files``,
+  so a removed file never comes back;
 - stats and blooms of files that stay are carried, then the new
-  entries are merged in; entries of files that left are dropped
-  whenever the metadata is rewritten, and legacy hex blooms are
-  compressed then;
+  entries are merged in.  Segments are carried as they are, appends
+  and copy-on-write alike, and the commit writes one segment for its
+  new files' entries, so its metadata is O(new files + inline list);
+  entries of files that left are dropped whenever the metadata is
+  rewritten, and legacy hex blooms are compressed then;
 - deletion vectors of removed files go, the rest are carried;
 - segments never exceed ``max_segments`` and the removal list never
   exceeds ``removed_files_max``: the commit that would pass either bar
@@ -760,15 +762,16 @@ def live_bloom_columns(manifest: dict) -> tuple[list[str], int]:
     """(columns carrying a bloom on any live file, their widest m; 0
     when none does), from the entries' ``m`` alone: no stats dict is
     built and no bitmap decoded.  A parquet segment answers from the
-    max of its ``b_m:`` columns over its files not in
-    ``removed_files``.  ``manifest`` has ``files`` materialized."""
+    max of its ``b_m:`` columns over its files in the live list:
+    carried segments may still hold entries of files that left.
+    ``manifest`` has ``files`` materialized."""
     widths: dict[str, int] = {}
 
     def note(c: str, m) -> None:
         if type(m) is int and m > widths.get(c, 0):
             widths[c] = m
 
-    live = None
+    live = live_arr = None
     for src in [manifest] + [
             _load_segment(p) for p in list(manifest.get("segments") or [])
             + list(manifest.get("file_segments") or [])]:
@@ -776,8 +779,9 @@ def live_bloom_columns(manifest: dict) -> tuple[list[str], int]:
             import pyarrow as pa
             import pyarrow.compute as pc
 
-            keep = pc.invert(pc.is_in(src.column("file"), pa.array(
-                manifest.get("removed_files") or [], pa.string())))
+            if live_arr is None:
+                live_arr = pa.array(manifest["files"], pa.string())
+            keep = pc.is_in(src.column("file"), live_arr)
             for name in src.names("b_m:"):
                 note(name[4:], pc.max(src.column(name).filter(keep)).as_py())
             continue
@@ -789,6 +793,25 @@ def live_bloom_columns(manifest: dict) -> tuple[list[str], int]:
                 for c, b in (per_col or {}).items():
                     note(c, b.get("m") if isinstance(b, dict) else None)
     return sorted(widths), max(widths.values(), default=0)
+
+
+def _fold_entries(seg_paths: list[str], live: set, stats: dict,
+                  blooms: dict) -> tuple[dict, dict]:
+    """The stats and bloom entries of ``seg_paths`` for ``live`` files
+    (sanitized, blooms compressed), with ``stats``/``blooms`` - the
+    commit's own, already clean - merged on top: the payload of the one
+    segment a fold writes."""
+    folded_stats: dict = {}
+    folded_blooms: dict = {}
+    for p in seg_paths:
+        d = _load_segment(p)
+        folded_stats.update(d.get("stats") or {})
+        folded_blooms.update(d.get("blooms") or {})
+    folded_stats = _sanitize_stats(
+        {f: v for f, v in folded_stats.items() if f in live})
+    return ({**{f: v for f, v in folded_stats.items() if v}, **stats},
+            {**_compress_blooms({f: v for f, v in folded_blooms.items()
+                                 if f in live}), **blooms})
 
 
 _BASE = object()  # commit(onto=...) default: the commit lands on base itself
@@ -1153,17 +1176,21 @@ class ManifestStore:
         if shape == "replace":
             files, segs, fsegs, removed = add, [], [], set()
             stats, blooms = stats or {}, blooms or {}
-        elif shape == "append" and (fsegs or remove is None):
-            # segmented base: ONLY the new files - the base's list lives
-            # in immutable segments and the commit stays O(new files)
-            files = add if fsegs else list(base.get("files") or []) + add
+        elif shape == "append" and (fsegs or remove is None
+                                    or base.get("segments")):
+            # segmented base: ONLY the new files' entries - the base's
+            # live in immutable segments, carried as they are, and the
+            # commit stays O(new files + inline list)
+            files = add if fsegs else [
+                f for f in base.get("files") or [] if f not in gone] + add
             segs = list(base.get("segments") or [])
-            removed = set(base.get("removed_files") or []) | gone
+            removed = (set(base.get("removed_files") or []) | gone
+                       if fsegs else set())
             stats = {**(base.get("stats") or {}), **(stats or {})}
             blooms = {**(base.get("blooms") or {}), **(blooms or {})}
         else:
-            # fold, or copy-on-write on an inline base: resolve every
-            # carried segment and re-segment from scratch
+            # fold, or copy-on-write on an unsegmented base: resolve
+            # every entry and re-segment from scratch
             kept = [f for f in base.get("files") or [] if f not in gone]
             kset = set(kept)
             all_stats, all_blooms = resolve_stats(base)
@@ -1257,31 +1284,13 @@ class ManifestStore:
                 # segment.  Carried-segment entries for files no
                 # longer live are dropped here (the only point the
                 # full list is in hand anyway).
-                folded_files: list[str] = []
-                folded_stats: dict = {}
-                folded_blooms: dict = {}
-                for s in fsegs:
-                    d = _load_segment(s)
-                    folded_files.extend(
-                        f for f in (d.get("files") or []) if f not in removed)
-                    folded_stats.update(d.get("stats") or {})
-                    folded_blooms.update(d.get("blooms") or {})
+                folded_files = [f for s in fsegs
+                                for f in _load_segment(s).get("files") or []
+                                if f not in removed]
                 removed = set()  # applied by the fold
-                for s in segs:
-                    d = _load_segment(s)
-                    folded_stats.update(d.get("stats") or {})
-                    folded_blooms.update(d.get("blooms") or {})
                 seg_files = folded_files + seg_files
-                live = set(seg_files)
-                folded_stats = _sanitize_stats(
-                    {f: v for f, v in folded_stats.items() if f in live})
-                seg_stats = {
-                    **{f: v for f, v in folded_stats.items() if v},
-                    **seg_stats}
-                seg_blooms = {
-                    **_compress_blooms({f: v for f, v in folded_blooms.items()
-                                        if f in live}),
-                    **seg_blooms}
+                seg_stats, seg_blooms = _fold_entries(
+                    fsegs + segs, set(seg_files), seg_stats, seg_blooms)
                 fsegs, segs = [], []
             if seg_files or seg_stats or seg_blooms:
                 fresh_seg = self.write_segment(version, {
@@ -1297,6 +1306,11 @@ class ManifestStore:
             if segs:
                 manifest["segments"] = segs
         elif segs or len(stats_f) + len(blooms_f) > self.inline_stats_files:
+            # -- stats-segmented mode: the same carry/fold rule -------------
+            if len(segs) + 1 > self.max_segments:
+                stats_f, blooms_f = _fold_entries(segs, fset, stats_f,
+                                                  blooms_f)
+                segs = []
             if stats_f or blooms_f:
                 segs.append(self.write_segment(
                     version, {"stats": stats_f, "blooms": blooms_f}))

@@ -33,6 +33,7 @@ reduced to single-cluster needs.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import logging
 import os
@@ -573,10 +574,11 @@ def _prune_segmented(manifest: dict, fsegs: list[str],
 def _clause_codes(clauses: list, tag: str):
     """Per-row action code of the first applicable MERGE clause: "D"
     for a delete, ``tag`` + clause index for a SET, "K" (keep) when no
-    clause applies."""
+    clause applies.  A condition is a SQL string, a Column or None."""
     act = None
     for i, (cond, action) in enumerate(clauses):
-        branch = F.lit(True) if cond is None else F.expr(cond)
+        branch = (F.lit(True) if cond is None
+                  else F.expr(cond) if isinstance(cond, str) else cond)
         code = ("D" if isinstance(action, str)
                 and action.lower() == "delete" else f"{tag}{i}")
         act = (F.when(branch, F.lit(code)) if act is None
@@ -584,19 +586,71 @@ def _clause_codes(clauses: list, tag: str):
     return F.lit("K") if act is None else act.otherwise("K")
 
 
-def _clause_images(clauses: list, tag: str, data_cols: list[str],
-                   types: dict, alias: str) -> list:
-    """Row images of ``alias`` with each SET clause's assignments applied
-    where ``__act__`` names that clause, cast to the column types."""
+def _clause_images(families: list, data_cols: list[str], types: dict,
+                   alias: str | None) -> list:
+    """Row images of ``alias`` (the unqualified row when None) with
+    each SET clause's assignments applied where ``__act__`` names that
+    clause, cast to the column types.  ``families`` lists the (clauses,
+    tag) pairs :func:`_clause_codes` coded; a SET value is a SQL string
+    or a Column."""
     out = []
     for c in data_cols:
-        col = F.expr(f"{alias}.`{c}`")
-        for i, (_, action) in enumerate(clauses):
-            if isinstance(action, dict) and c in action:
-                col = F.when(F.col("__act__") == f"{tag}{i}",
-                             F.expr(action[c])).otherwise(col)
+        col = F.expr(f"{alias}.`{c}`" if alias else f"`{c}`")
+        for clauses, tag in families:
+            for i, (_, action) in enumerate(clauses):
+                if isinstance(action, dict) and c in action:
+                    v = action[c]
+                    col = F.when(F.col(_ACT) == f"{tag}{i}",
+                                 F.expr(v) if isinstance(v, str) else v
+                                 ).otherwise(col)
         out.append(col.cast(types[c]).alias(c))
     return out
+
+
+# reserved columns of a positional change set: the row's manifest-form
+# file path and row index, its action code, and (MERGE) its source row id
+_FP, _RI, _ACT, _SID = "__graft_fp", "__graft_ri", "__act__", "__graft_sid"
+
+# a copy-on-write rewrite packs the surviving rows of its touched files
+# into files of about this size (compact()'s default target)
+_REWRITE_FILE_BYTES = 128 * 1024 * 1024
+
+
+@dataclasses.dataclass
+class _ChangeSet:
+    """What one row-level DML changes in manifest ``m``: ``rows`` holds
+    (``_FP``, ``_RI``, ``_ACT``, [``_SID``], row image) per changed
+    target row - a MERGE that inserts or validates cardinality keeps
+    its unchanged matched rows too, coded "K" - and ``inserts`` the new
+    rows.  ``n``/``d`` count changed/deleted rows and ``touched`` lists
+    the files holding a changed row, as the scan renders them; all
+    three ride the checkpoint job.  ``order`` (a MERGE's keys) sorts a
+    copy-on-write rewrite within each file, as a merge join would.  ``n`` is None for a lazy set (the
+    merge-on-read delete capture), which counts nothing up front."""
+    m: dict
+    candidates: list
+    rows: DataFrame | None = None
+    rows_kept: int = 0
+    data_cols: list = dataclasses.field(default_factory=list)
+    n: int | None = 0
+    d: int = 0
+    touched: list = dataclasses.field(default_factory=list)
+    inserts: DataFrame | None = None
+    ins_obs: object = None
+    ins_bound: int | None = None
+    order: list = dataclasses.field(default_factory=list)
+
+    def images(self) -> DataFrame | None:
+        """The changed rows' new images (SET results), None when every
+        changed row is deleted."""
+        if self.rows is None or not self.n or self.n == self.d:
+            return None
+        return (self.rows.where(~F.col(_ACT).isin("K", "D"))
+                .select(*self.data_cols))
+
+    def n_inserted(self) -> int:
+        """Rows ``inserts`` produced; valid once a write has run it."""
+        return 0 if self.ins_obs is None else int(self.ins_obs.get["n"])
 
 
 def _manifest_schema(m: dict):
@@ -971,156 +1025,150 @@ class SnapshotTable:
               matched=None, not_matched=None, not_matched_by_source=None,
               target_alias: str = "t", source_alias: str = "s",
               validate_cardinality: bool = True,
-              cow: bool = True,
               mor: bool = False,
               source_keys: list[str] | None = None,
               bloom_cols: list[str] | None = None,
               bloom_bits: int | None = None) -> int:
-        """Transactional ANSI MERGE INTO this table (r7): read one pinned
-        snapshot, apply ``operators.merge.merge_into`` (same clause
-        surface - WHEN MATCHED update/delete, WHEN NOT MATCHED insert,
-        WHEN NOT MATCHED BY SOURCE), publish the result as ONE commit.
+        """Transactional ANSI MERGE INTO this table, published as ONE
+        commit.  Clauses as in ``operators.merge.merge_into``: ordered
+        first-match WHEN MATCHED update/delete, WHEN NOT MATCHED insert
+        (``"*"`` or a ``{col: expr}`` map; unlisted columns NULL), and
+        WHEN NOT MATCHED BY SOURCE update/delete; results are cast to
+        the table schema.  A matched row whose clause conditions all
+        fail is untouched.
 
-        COPY-ON-WRITE (r9, default): a CDC batch touching 0.1% of a
-        100 TB table must not rewrite the table.  Phase 1 runs ONE
-        left-semi join of the target (tagged with input_file_name)
-        against the source on the merge condition - a scan of the
-        target with no target-side shuffle (AQE broadcasts a small
-        source) - to find the files that hold ANY matching row.  Every
-        match lives in those files by construction, so phase 2 runs
-        ``merge_into`` over ONLY them: matched rows update/delete,
-        not-matched source rows insert (their anti-join against the
-        touched subset equals the anti-join against the full table),
-        and every other file carries into the commit verbatim with its
-        stats/blooms.  Write cost is O(touched files + inserts).  The
-        source is localCheckpointed once so phases 1 and 2 read the
-        same rows.  ``WHEN NOT MATCHED BY SOURCE`` clauses touch every
-        unmatched target row, so under COW they fall back to the full
-        rewrite (``cow=False`` forces it; the pre-r9 shape) - use
-        ``mor=True`` (r12) to resolve the unmatched rows to
-        deletion-vector positions instead: one full scan, but the
-        WRITE stays O(changed rows + positions).  NOTE (ADVICE r12
-        #2): under ``mor=True`` those conditions and SET expressions
-        evaluate over the single-pass JOINED relation (null-extended
-        source side), matching COW ``merge_into`` semantics - when
-        target and source share column names, qualify references with
-        the target alias (``t.col``); an unqualified shared name
-        raises an ambiguous-reference AnalysisException instead of
-        silently resolving to the target as a target-only anti-join
-        would.
+        ONE PLANNER, TWO PUBLISHERS (like every row-level DML here):
+
+        1. the source is localCheckpointed once, each row tagged with a
+           unique id;
+        2. ONE scan of the candidate files, with their (file, row_index)
+           positions, joins the source on ``on`` - an inner join, or a
+           left outer join when NOT MATCHED BY SOURCE clauses need the
+           unmatched target rows - and the clauses turn each joined row
+           into an action code and a row image.  That positional change
+           set is checkpointed once; its changed/deleted counts and the
+           set of touched files ride the same job as an ``observe()``.
+           ``validate_cardinality`` (ANSI) then refuses a target row
+           matching several source rows;
+        3. the WHEN NOT MATCHED inserts are the source rows whose id is
+           not in the change set - a source-sized anti-join, never a
+           second pass over the target;
+        4. COPY-ON-WRITE (default) rewrites ONLY the touched files as
+           their scan minus the changed positions plus the images and
+           inserts (a file whose every row is deleted just drops), and
+           carries every other file verbatim with its stats/blooms;
+           ``mor=True`` (MERGE-ON-READ) writes the positions to a
+           deletion-vector sidecar and appends the images and inserts,
+           rewriting no data file.
+
+        Write cost is O(touched files + inserts) under COW, O(changed
+        rows + positions) under MOR.  Unmatched target rows can live in
+        any file, so NOT MATCHED BY SOURCE clauses scan every file, but
+        COW still rewrites only the files holding a changed row.  Those
+        clauses' conditions and SET expressions evaluate over the
+        joined relation with a null-extended source side, as in
+        ``merge_into``: when target and source share column names,
+        qualify references with the target alias (``t.col``); an
+        unqualified shared name raises an ambiguous-reference error.
 
         ``source_keys`` (names of equi-join key columns, when the
-        caller knows them - the CDC writer always does): phase 1 first
-        computes the source's per-key [min, max] (one tiny agg over the
-        checkpointed batch) and prunes candidate files from MANIFEST
-        stats with zero data IO, so the semi-join reads only files
-        whose key ranges overlap the batch - on a range-clustered
-        table a localized batch scans a handful of files, not the
-        table.  Scattered batches degrade gracefully to the full scan
-        (the prune keeps everything).  Purely an optimization: touched
-        files are always re-derived exactly by the semi-join.
+        caller knows them - the CDC writer always does): the source's
+        per-key [min, max] rides the source checkpoint and prunes the
+        candidate files from MANIFEST stats with zero data IO, so the
+        scan reads only files whose key ranges overlap the batch.
+        Purely an optimization (the join finds the exact rows), and
+        ignored with NOT MATCHED BY SOURCE clauses.
 
-        Written files keep the table's blooms (COW and MOR; defaults as
-        in :meth:`append`).
+        Written files keep the table's blooms (defaults as in
+        :meth:`append`).  Returns the new version, or the current one
+        when no clause changed a row and nothing was inserted.
 
-        The parent version is pinned BEFORE the merge plan reads the
-        table, so a concurrent commit between read and publish fails the
+        The parent version is pinned BEFORE the plan reads the table,
+        so a concurrent commit between read and publish fails the
         parent-is-still-HEAD check and raises SnapshotConflict with
-        nothing published - re-calling re-reads the new HEAD (optimistic
-        retry).  Pinned readers of older snapshots are undisturbed; this
-        is the lakehouse MERGE the plain-parquet path can't make atomic
-        (reference parity: Sqoop MergeJob / OGG CDC apply composed with
-        OdpsBatchWrite's publish-on-commit, J2 + W1)."""
-        from aliyun_maxcompute_data_collectors_spark.operators.merge import merge_into
-
+        nothing published - re-calling re-reads the new HEAD
+        (optimistic retry).  Reference parity: Sqoop MergeJob / OGG CDC
+        apply composed with OdpsBatchWrite's publish-on-commit (J2 +
+        W1)."""
+        if _SID in source.columns:
+            raise SnapshotError(
+                f"merge: source column name {_SID} is reserved by the "
+                "merge machinery")
         if source_keys:
             _validate_source_keys(on, source_keys, target_alias,
                                   source_alias)
-        parent = self.current_version()
-        m = self.manifest(parent)
-        if mor:
-            if m["files"]:
-                return self._merge_mor(
-                    parent, m, source, on, list(matched or []),
-                    not_matched, list(not_matched_by_source or []),
-                    target_alias, source_alias,
-                    validate_cardinality, source_keys,
-                    bloom_cols, bloom_bits)
-            # empty table: fall through (plain insert-only rewrite)
-        if not cow or not_matched_by_source or not m["files"]:
-            merged = merge_into(
-                self.read(parent), source, on, matched=matched,
-                not_matched=not_matched,
-                not_matched_by_source=not_matched_by_source,
-                target_alias=target_alias, source_alias=source_alias,
-                validate_cardinality=validate_cardinality)
-            unified = unify_schemas(m.get("schema"), merged.schema)
-            files, n, stats, wblooms = self._write_files_bloom(
-                merged, m, bloom_cols, bloom_bits)
-            return self._store.commit(
-                m, "merge", rows=n, add=files, stats=stats, blooms=wblooms,
-                schema=unified.json(), shape="replace")
-        src, candidates = self._checkpoint_candidates(m, source, source_keys)
-        if candidates:
-            tagged = (self._scan_subset(m, candidates,
-                                        file_col="__graft_file")
-                      .alias(target_alias)
-                      if self._dvs(m) else
-                      self._reader_for(m).parquet(*candidates)
-                      .withColumn("__graft_file", F.input_file_name())
-                      .alias(target_alias))
-            hits = (tagged.join(src.alias(source_alias), F.expr(on),
-                                "left_semi")
-                    .select("__graft_file").distinct().collect())
-        else:
-            hits = []
-        touched = set(self._map_hits_to_manifest(
-            [r["__graft_file"] for r in hits], candidates, "merge").values())
-        tfiles = [f for f in m["files"] if f in touched]
-        if tfiles:
-            sub = self._scan_subset(m, tfiles)
-            n_touched = self._logical_rows(m, tfiles)
-        else:
-            schema = _manifest_schema(m) or self.read(parent).schema
-            sub = self.spark.createDataFrame([], schema)
-            n_touched = 0
-        merged = merge_into(
-            sub, src, on, matched=matched, not_matched=not_matched,
-            not_matched_by_source=None,
-            target_alias=target_alias, source_alias=source_alias,
-            validate_cardinality=validate_cardinality)
-        unified = unify_schemas(m.get("schema"), merged.schema)
-        files, n_new, stats, wblooms = self._write_files_bloom(
-            merged, m, bloom_cols, bloom_bits)
-        return self._store.commit(
-            m, "merge", rows=m["rows"] - n_touched + n_new, add=files,
-            stats=stats, blooms=wblooms, remove=tfiles,
-            schema=unified.json())
+        m = self.manifest()
+        types = {f.name: f.dataType for f in self._table_schema(m).fields}
+        nmbs = list(not_matched_by_source or [])
+        # unmatched rows (NOT MATCHED BY SOURCE) can live in ANY file
+        src, candidates, n_src = self._checkpoint_candidates(
+            m, source.withColumn(_SID, F.monotonically_increasing_id()),
+            None if nmbs else source_keys)
+        cs = self._change_set(
+            m, candidates, list(matched or []), source=src, on=on,
+            not_matched_by_source=nmbs, target_alias=target_alias,
+            source_alias=source_alias,
+            keep_matched=not_matched is not None or validate_cardinality)
+        cs.order = list(source_keys or [])
+        matched_rows = (None if cs.rows is None
+                        else cs.rows.where(F.col(_SID).isNotNull()))
+        if validate_cardinality and matched_rows is not None:
+            dup = (matched_rows.groupBy(_FP, _RI)
+                   .agg(F.count(F.lit(1)).alias("__n__"))
+                   .where(F.col("__n__") > 1))
+            if dup.take(1):
+                raise ValueError(
+                    "MERGE cardinality violation: a target row matches "
+                    "multiple source rows; make the ON condition "
+                    "key-unique or pre-aggregate the source "
+                    "(e.g. newest_wins)")
+        if not_matched is not None:
+            icond, ins = not_matched
+            s_only = src.alias(source_alias)
+            if matched_rows is not None:
+                sids = matched_rows.select(_SID)
+                if cs.rows_kept <= DV_BROADCAST_MAX_POSITIONS:
+                    sids = F.broadcast(sids)
+                s_only = s_only.join(sids, _SID, "left_anti")
+            if icond is not None:
+                s_only = s_only.where(F.expr(icond))
+            if ins == "*":
+                missing = [c for c in types if c not in set(src.columns)]
+                if missing:
+                    raise ValueError(
+                        f"INSERT *: source lacks target columns {missing}")
+                imap = {c: f"{source_alias}.`{c}`" for c in types}
+            else:
+                imap = dict(ins)
+            self._set_inserts(cs, s_only.select(*[
+                (F.expr(imap[c]) if c in imap else F.lit(None))
+                .cast(t).alias(c) for c, t in types.items()]), bound=n_src)
+        return self._publish(cs, "merge", mor, bloom_cols, bloom_bits)
 
     def _checkpoint_candidates(self, m: dict, source: DataFrame,
                                source_keys: list[str] | None
-                               ) -> tuple[DataFrame, list[str]]:
+                               ) -> tuple[DataFrame, list[str], int]:
         """(``source`` checkpointed, the files of ``m`` whose manifest
-        stats overlap the source's per-key [min, max]).  The bounds ride
-        the checkpoint job as an ``observe()`` (r13 pattern), so the
-        pruning costs no job of its own.  Every file is a candidate
-        without ``source_keys`` or a non-null bound."""
-        if not source_keys:
-            return source.localCheckpoint(eager=True), m["files"]
+        stats overlap the source's per-key [min, max], the source's row
+        count).  The count and bounds ride the checkpoint job as an
+        ``observe()`` (r13 pattern), so the pruning costs no job of its
+        own.  Every file is a candidate without ``source_keys`` or a
+        non-null bound."""
         from pyspark.sql import Observation
 
         obs = Observation(f"merge_keys_{uuid.uuid4().hex}")
-        aggs = []
-        for k in source_keys:
+        aggs = [F.count(F.lit(1)).alias("__n")]
+        for k in source_keys or []:
             aggs += [F.min(k).alias(f"__lo_{k}"),
                      F.max(k).alias(f"__hi_{k}")]
         src = source.observe(obs, *aggs).localCheckpoint(eager=True)
         row = obs.get
         conj = [(k, "between", (row[f"__lo_{k}"], row[f"__hi_{k}"]))
-                for k in source_keys
+                for k in source_keys or []
                 if row[f"__lo_{k}"] is not None
                 and row[f"__hi_{k}"] is not None]
-        return src, self.prune_files(m, conj) if conj else m["files"]
+        return (src, self.prune_files(m, conj) if conj else m["files"],
+                int(row["__n"]))
 
     # -- copy-on-write row-level DML (r9) -----------------------------------
     def _reader_for(self, m: dict):
@@ -1598,32 +1646,6 @@ class SnapshotTable:
             out[p] = mapped
         return out
 
-    def _touched_files(self, m: dict, candidates: list[str],
-                       pred) -> dict[str, int]:
-        """Phase-1 scan of copy-on-write DML: per-file matched-row
-        counts over the candidate files.  The predicate reaches the
-        parquet scan (Catalyst pushdown), so row groups whose footer
-        stats exclude it are never decoded - cost is O(candidate
-        files), usually far less.  Returns {manifest file: n_matched}
-        for files holding at least one matching row."""
-        if self._dvs(m):
-            # deletion vectors: count only LIVE matches - physical scans
-            # would count already-MOR-deleted rows, and the file-drop
-            # fast path (n_touched == n_matched) could then drop a file
-            # whose live rows do NOT all match (r11)
-            rows = (self._scan_subset(m, candidates, file_col="__f")
-                    .where(pred)
-                    .groupBy("__f")
-                    .agg(F.count(F.lit(1)).alias("n")).collect())
-        else:
-            rows = (self._reader_for(m).parquet(*candidates)
-                    .where(pred)
-                    .groupBy(F.input_file_name().alias("__f"))
-                    .agg(F.count(F.lit(1)).alias("n")).collect())
-        mapped = self._map_hits_to_manifest([r["__f"] for r in rows],
-                                            candidates, "dml-scan")
-        return {mapped[r["__f"]]: r["n"] for r in rows}
-
     def _check_rows(self, operation: str, expected: int,
                     written: int) -> None:
         """A rewrite that wrote other than ``expected`` rows aborts before
@@ -1634,144 +1656,266 @@ class SnapshotTable:
                 f"expected, {written} written) - aborting before commit; "
                 "staged files are unreferenced garbage for vacuum")
 
-    def _commit_cow(self, m: dict, touched: list[str],
-                    new_df: DataFrame, expected_rows: int,
-                    total_rows: int, operation: str,
-                    bloom_cols: list[str] | None,
-                    bloom_bits: int | None) -> int:
-        """Write a copy-on-write rewrite of ``touched`` files as
-        ``new_df`` (fresh footer stats; fresh blooms under the table's
-        policy, see :meth:`_write_files_bloom`), guard it with a
-        row-count check, and publish it: ``touched`` files leave the
-        table with their deletion vectors (the rewrite MATERIALIZED
-        them), everything else carries verbatim - O(touched + new)
-        commit metadata on a segmented table (the removal list)."""
-        files, n_new, stats, wblooms = self._write_files_bloom(
-            new_df, m, bloom_cols, bloom_bits)
-        self._check_rows(operation, expected_rows, n_new)
-        return self._store.commit(m, operation, rows=total_rows, add=files,
-                                  stats=stats, blooms=wblooms, remove=touched)
+    # -- row-level DML: one change-set planner, two publishers -------------
+    # delete, update, merge (hence mirror and cdc_apply_merge),
+    # replace_where and scd2_apply_cow all build ONE positional change
+    # set (_change_set) and publish it copy-on-write (_publish_cow) or
+    # merge-on-read (_publish_mor), so both modes share one
+    # implementation of the clause semantics.
+
+    def _table_schema(self, m: dict):
+        """The table's schema: the manifest's, else a read's (which
+        raises on an empty table that never recorded one)."""
+        return _manifest_schema(m) or self.read(m["version"]).schema
+
+    def _change_set(self, m: dict, candidates: list[str], clauses: list,
+                    *, where=None, source: DataFrame | None = None,
+                    on: str | None = None,
+                    not_matched_by_source: list | None = None,
+                    target_alias: str | None = None,
+                    source_alias: str = "s", keep_matched: bool = False,
+                    keep_dead: bool = False) -> _ChangeSet:
+        """The positional change set of ``clauses`` (``(condition,
+        "delete" | {col: expr})``, first applicable wins) over ONE scan
+        of ``candidates`` with their (file, row_index) positions, rows
+        filtered by ``where`` (a Column; NULL keeps the row, ANSI).
+        With ``source`` the scan joins it on ``on`` (left outer when
+        ``not_matched_by_source`` clauses code the unmatched rows, else
+        inner); ``keep_matched`` keeps every matched row, changed or
+        not, for the insert anti-join and the cardinality check.
+
+        The set is checkpointed once, with its changed/deleted counts
+        and touched files observed on that job.  ``keep_dead`` (the
+        merge-on-read DELETE capture only) leaves it lazy over a scan
+        that skips the deletion-vector anti-join: the sidecar fold
+        re-marks the dead rows it captures (:meth:`_stage_dv_sidecar`
+        ``dedup_priors``), so the capture is the sidecar's single
+        write job."""
+        cs = _ChangeSet(m, candidates)
+        if not candidates:
+            return cs
+        scan = self._scan_subset(m, candidates, file_col=_FP, row_col=_RI,
+                                 apply_dvs=not keep_dead)
+        cs.data_cols = [c for c in scan.columns if c not in (_FP, _RI)]
+        types = dict(scan.dtypes)
+        rel = scan if target_alias is None else scan.alias(target_alias)
+        if where is not None:
+            rel = rel.where(F.coalesce(where, F.lit(False)))
+        act = _clause_codes(clauses, "U")
+        families = [(clauses, "U")]
+        keep = None
+        if source is not None:
+            nmbs = not_matched_by_source or []
+            rel = rel.join(source.alias(source_alias), F.expr(on),
+                           "left_outer" if nmbs else "inner")
+            if nmbs:
+                act = F.when(F.col(_SID).isNotNull(), act) \
+                    .otherwise(_clause_codes(nmbs, "S"))
+                families.append((nmbs, "S"))
+            if keep_matched:
+                keep = F.col(_SID).isNotNull()
+        changed = F.col(_ACT) != "K"
+        rel = rel.withColumn(_ACT, act)
+        rel = rel.where(changed if keep is None else keep | changed)
+        sid = ([F.col(_SID)] if source is not None
+               and _SID in source.columns else [])
+        rows = rel.select(
+            F.col(_FP), F.col(_RI), F.col(_ACT), *sid,
+            *_clause_images(families, cs.data_cols, types, target_alias))
+        if keep_dead:
+            cs.rows, cs.n = rows, None
+            return cs
+        from pyspark.sql import Observation
+
+        obs = Observation(f"changes_{uuid.uuid4().hex}")
+        cs.rows = (rows.observe(
+            obs, F.count(F.lit(1)).alias("k"),
+            F.count(F.when(changed, 1)).alias("n"),
+            F.count(F.when(F.col(_ACT) == "D", 1)).alias("d"),
+            F.collect_set(F.when(changed, F.col(_FP))).alias("f"))
+            .localCheckpoint(eager=True))
+        r = obs.get
+        cs.rows_kept, cs.n, cs.d = int(r["k"]), int(r["n"]), int(r["d"])
+        cs.touched = list(r["f"])
+        return cs
+
+    @staticmethod
+    def _set_inserts(cs: _ChangeSet, inserts: DataFrame, *aggs,
+                     bound: int | None = None) -> None:
+        """Attach ``inserts`` to ``cs``; their count (and ``aggs``) ride
+        the publisher's write job as an ``observe()``.  ``bound`` caps
+        their rows when known (a MERGE inserts at most its source), so
+        a copy-on-write rewrite may pack them with its own rows."""
+        from pyspark.sql import Observation
+
+        cs.ins_bound = bound
+        cs.ins_obs = Observation(f"inserts_{uuid.uuid4().hex}")
+        cs.inserts = inserts.observe(
+            cs.ins_obs, F.count(F.lit(1)).alias("n"), *aggs)
+
+    def _publish(self, cs: _ChangeSet, operation: str, mor: bool,
+                 bloom_cols: list[str] | None, bloom_bits: int | None) -> int:
+        publish = self._publish_mor if mor else self._publish_cow
+        return publish(cs, operation, bloom_cols, bloom_bits)
+
+    def _publish_cow(self, cs: _ChangeSet, operation: str,
+                     bloom_cols: list[str] | None, bloom_bits: int | None,
+                     schema: str | None = None, guard=None) -> int:
+        """COPY-ON-WRITE: the touched files leave the table (their
+        deletion vectors with them - the rewrite MATERIALIZES them) and
+        their surviving rows - the scan minus the change set's
+        positions - come back with the images and inserts in ONE write,
+        packed into about one file per ``_REWRITE_FILE_BYTES`` (inserts
+        of known bound count at the touched files' bytes per row).
+        When every live row of the touched files is
+        deleted they just drop (the partition-delete fast path).
+        Untouched files carry verbatim with their stats/blooms: commit
+        metadata is O(touched + new).  ``guard`` runs after the write,
+        before the commit."""
+        m = cs.m
+        touched = set(self._map_hits_to_manifest(
+            cs.touched, cs.candidates, operation).values())
+        tfiles = [f for f in m["files"] if f in touched]
+        n_touched = self._logical_rows(m, tfiles)
+        new = inserts = cs.inserts
+        if n_touched > cs.d:
+            pos = cs.rows.where(F.col(_ACT) != "K").select(_FP, _RI)
+            if cs.n <= DV_BROADCAST_MAX_POSITIONS:
+                pos = F.broadcast(pos)
+            new = self._position_join(
+                self._scan_subset(m, tfiles, file_col=_FP, row_col=_RI),
+                pos, "left_anti").drop(_FP, _RI)
+            images = cs.images()
+            if images is not None:
+                new = new.unionByName(images)
+            # inserts of known bound pack with the rewrite, sized by the
+            # touched files' bytes per row; unbounded ones keep their own
+            # partitioning
+            rows = n_touched
+            if inserts is not None and cs.ins_bound is not None:
+                new = new.unionByName(inserts, allowMissingColumns=True)
+                rows, inserts = rows + cs.ins_bound, None
+            n_out = -(-sum(os.path.getsize(f) for f in tfiles) * rows
+                      // (n_touched * _REWRITE_FILE_BYTES))
+            new = new.coalesce(max(1, n_out))
+            if cs.order:
+                new = new.sortWithinPartitions(*cs.order)
+            if inserts is not None:
+                new = new.unionByName(inserts, allowMissingColumns=True)
+        files, stats, wblooms, n_ins = [], {}, {}, 0
+        if new is not None:
+            files, n_new, stats, wblooms = self._write_files_bloom(
+                new, m, bloom_cols, bloom_bits)
+            n_ins = cs.n_inserted()
+            self._check_rows(operation, n_touched - cs.d + n_ins, n_new)
+            if guard is not None:
+                guard()
+        if not files and not tfiles:
+            return m["version"]  # nothing changed, nothing inserted
+        return self._store.commit(
+            m, operation, rows=m["rows"] - cs.d + n_ins, add=files,
+            stats=stats, blooms=wblooms, remove=tfiles, schema=schema)
+
+    def _publish_mor(self, cs: _ChangeSet, operation: str,
+                     bloom_cols: list[str] | None,
+                     bloom_bits: int | None) -> int:
+        """MERGE-ON-READ: the change set's positions - plus the
+        candidate files' prior positions, folded forward - go to ONE
+        deletion-vector sidecar, and the images and inserts append as
+        new files, in ONE commit whose data files are otherwise
+        unchanged: write cost O(changed rows + positions).  A lazy set
+        (pure delete) streams its capture straight into the sidecar
+        write and is refused past ``MOR_MAX_DV_FRACTION``; images
+        always come with written rows of their own, so the bound does
+        not apply to them (``MOR_MAX_NEW_POSITIONS`` does).  A crashed
+        attempt leaves an unreferenced sidecar for vacuum."""
+        m, op, lazy = cs.m, f"{operation}-mor", cs.n is None
+        stage = per_file = None
+        if cs.rows is not None and (lazy or cs.n):
+            pos = cs.rows.where(F.col(_ACT) != "K").select(
+                F.col(_FP).alias("file"), F.col(_RI).alias("row_index"),
+                F.lit(True).alias("new"))
+            stage, per_file = self._stage_dv_sidecar(
+                m, cs.candidates, pos, single_task=not lazy,
+                dedup_priors=lazy)
+        new = cs.images() if not lazy else None
+        if cs.inserts is not None:
+            new = cs.inserts if new is None else new.unionByName(cs.inserts)
+        files, stats, wblooms, n_ins = [], {}, {}, 0
+        if new is not None:
+            files, n_new, stats, wblooms = self._write_files_bloom(
+                new, m, bloom_cols, bloom_bits)
+            n_ins = cs.n_inserted()
+            self._check_rows(op, cs.n - cs.d + n_ins, n_new)
+        if not per_file and not files:
+            return m["version"]  # nothing changed, nothing inserted
+        dvs = delta_dv = None
+        n_del = cs.d
+        if per_file:
+            mapped = self._map_hits_to_manifest(list(per_file),
+                                                cs.candidates, op)
+            dvs, delta_dv = self._dv_entries(m, cs.candidates, stage,
+                                             per_file, mapped,
+                                             enforce_fraction=lazy)
+            if lazy:
+                n_del = sum(per_file.values())
+        return self._store.commit(
+            m, op, rows=m["rows"] - n_del + n_ins, add=files, stats=stats,
+            blooms=wblooms, dvs=dvs, delta_dv=delta_dv)
 
     def delete(self, where,
                bloom_cols: list[str] | None = None,
                bloom_bits: int | None = None,
                mor: bool = False) -> int:
-        """Row-level ``DELETE FROM`` - COPY-ON-WRITE by default, or
-        MERGE-ON-READ with ``mor=True`` (r11: Delta deletion vectors /
-        Iceberg positional deletes - record the matching (file,
-        row_index) positions in a tiny parquet sidecar instead of
-        rewriting data files; a 1-row delete in a 1 GB file costs
-        O(positions) bytes).  Every read subtracts positions with one
-        broadcast anti-join; ``compact()`` MATERIALIZES deletion
-        vectors (rewrites the files, drops the sidecars), and any COW
-        rewrite of a file does the same for that file.  The COW shape:
+        """Row-level ``DELETE FROM``: the change set of ONE ``(where,
+        "delete")`` clause (ANSI: a row is deleted when the predicate IS
+        TRUE; NULL keeps it), published COPY-ON-WRITE by default or
+        MERGE-ON-READ with ``mor=True``.
 
         1. manifest [min,max]/bloom stats prune candidate files with
            ZERO data IO when ``where`` uses the ``(col, op, value)``
            conjunct grammar (a SQL string predicate skips manifest
            pruning but still pushes down to the parquet scan);
-        2. ONE pushdown scan over the candidates finds the files that
-           actually hold matching rows;
-        3. only those files are rewritten without the matching rows
-           (ANSI semantics: a row is deleted when the predicate IS
-           TRUE; NULL keeps it);
+        2. ONE pushdown scan over the candidates captures the matching
+           (file, row_index) positions;
+        3. COW rewrites only the files holding a match, without the
+           matched rows - or drops a file whose every live row matches;
+           MOR (Delta deletion vectors / Iceberg positional deletes)
+           records the positions in a tiny parquet sidecar instead, so
+           a 1-row delete in a 1 GB file costs O(positions) bytes, in a
+           single Spark job.  Every read subtracts the positions with
+           one broadcast anti-join; ``compact()`` and any COW rewrite
+           of a file MATERIALIZE its vector;
         4. one atomic commit carries every untouched file and its
            stats/blooms verbatim.
 
         Rewritten files keep the table's blooms (defaults as in
-        :meth:`append`).  Cost is proportional to the files containing
-        matches, never the table.  The pre-delete version stays
-        time-travelable until vacuum, and ``changes()`` reports the
-        removed rows as ``delete`` rows through its exact-diff path.
-        Returns the new version - or the CURRENT version unchanged when
-        nothing matches (no empty commit).
+        :meth:`append`).  The pre-delete version stays time-travelable
+        until vacuum, and ``changes()`` reports the removed rows as
+        ``delete`` rows.  Returns the new version - or the CURRENT
+        version unchanged when nothing matches (no empty commit).
 
         Reference parity: row-level DML is what the reference's
         append-only tunnel writers structurally lack
         (OdpsTableCatalog.scala rejects deletes); expressible here
         because snapshots make file replacement atomic."""
         m, pred, candidates = self._dml_target(where)
-        parent = m["version"]
-        if not candidates:
-            return parent
-        if mor:
-            return self._delete_mor(parent, m, candidates, pred)
-        touched = self._touched_files(m, candidates, pred)
-        if not touched:
-            return parent
-        tfiles = [f for f in m["files"] if f in touched]
-        n_del = sum(touched.values())
-        # metadata-only count of the rows being rewritten (deletion
-        # vectors subtracted - footers over-count MOR-deleted rows)
-        n_touched = self._logical_rows(m, tfiles)
-        if n_touched == n_del:
-            # every row in every touched file matches: pure file drop,
-            # no rewrite at all (the partition-delete fast path)
-            return self._store.commit(m, "delete", rows=m["rows"] - n_del,
-                                      remove=tfiles)
-        remaining = (self._scan_subset(m, tfiles)
-                     .where(~F.coalesce(pred, F.lit(False))))
-        return self._commit_cow(m, tfiles, remaining,
-                                n_touched - n_del, m["rows"] - n_del,
-                                "delete", bloom_cols, bloom_bits)
-
-    def _delete_mor(self, parent: int, m: dict, candidates: list[str],
-                    pred) -> int:
-        """MERGE-ON-READ delete: capture the matching (file, row_index)
-        positions in one pushdown scan and write them (plus the
-        candidate files' folded prior positions) as ONE immutable
-        parquet sidecar - a SINGLE Spark job (r13: the scan feeds the
-        staged write directly; per-file counts come off the staged
-        footers driver-side), then commit a manifest whose file list is
-        UNCHANGED - write cost is O(matching positions), zero data-file
-        IO.  The capture scan is NOT DV-applied (r13, second pass):
-        already-deleted rows matching the predicate are re-marked
-        ``new=false`` by the fold's min(new) dedup against the prior
-        sidecars - see :meth:`_stage_dv_sidecar` - which drops the
-        capture's broadcast anti-join (a whole extra job reading the
-        priors a second time).  The read-path anti-join and the
-        per-commit CDF (``new=true`` rows) both stay exact.  A crashed
-        attempt leaves an unreferenced sidecar for vacuum - the
-        staged-data contract."""
-        # reserved capture names: a user column literally named
-        # 'file'/'row_index' must not collide (review r11 #6)
-        hits = (self._scan_subset(m, candidates,
-                                  file_col="__graft_file",
-                                  row_col="__graft_row",
-                                  apply_dvs=False)
-                .where(F.coalesce(pred, F.lit(False)))
-                .select(F.col("__graft_file").alias("file"),
-                        F.col("__graft_row").alias("row_index"))
-                .withColumn("new", F.lit(True)))
-        stage, per_file = self._stage_dv_sidecar(m, candidates, hits,
-                                                 dedup_priors=True)
-        if stage is None:
-            return parent
-        mapped = self._map_hits_to_manifest(list(per_file), candidates,
-                                            "delete-mor")
-        dvs, delta_dv = self._dv_entries(m, candidates, stage,
-                                         per_file, mapped,
-                                         enforce_fraction=True)
-        n_del = sum(per_file.values())
-        return self._store.commit(m, "delete-mor", rows=m["rows"] - n_del,
-                                  dvs=dvs, delta_dv=delta_dv)
+        cs = self._change_set(m, candidates, [(None, "delete")],
+                              where=pred, keep_dead=mor)
+        return self._publish(cs, "delete", mor, bloom_cols, bloom_bits)
 
     def update(self, assignments: dict, where,
                bloom_cols: list[str] | None = None,
                bloom_bits: int | None = None,
                mor: bool = False) -> int:
-        """``UPDATE ... SET`` - COPY-ON-WRITE by default: two-phase file
-        targeting as in :meth:`delete`, matched rows get the new values,
-        the other rows in touched files are rewritten verbatim, and
-        untouched files carry over with their stats/blooms.
-
-        ``mor=True`` (r11, MERGE-ON-READ): the matched rows' OLD
-        positions land on a deletion-vector sidecar and their UPDATED
-        copies append as new files in the SAME commit - write cost is
-        O(matched rows), no touched-file rewrite (a 10-row update in a
-        1 GB file writes ~10 rows + a tiny sidecar).  Reads compose the
-        anti-join + the new files; ``changes()`` reports exactly the
-        delete+insert pairs; ``compact()``/any COW rewrite materializes.
+        """``UPDATE ... SET``: the change set of ONE ``(where,
+        assignments)`` clause, published as :meth:`delete` publishes
+        its set.  COPY-ON-WRITE (default) rewrites the touched files
+        with the new values; ``mor=True`` (MERGE-ON-READ) puts the
+        matched rows' OLD positions on a deletion-vector sidecar and
+        appends their UPDATED copies in the SAME commit - write cost
+        O(matched rows), no touched-file rewrite.  ``changes()``
+        reports delete+insert pairs either way.
 
         ``assignments`` maps column name -> SQL expression string (or
         Column); every expression is evaluated against the PRE-update
@@ -1784,304 +1928,15 @@ class SnapshotTable:
         Returns the new version, or the current one unchanged when no
         row matches."""
         m, pred, candidates = self._dml_target(where)
-        parent = m["version"]
-        if not candidates:
-            return parent
-        if mor:
-            return self._update_mor(parent, m, candidates, pred,
-                                    assignments, bloom_cols, bloom_bits)
-        touched = self._touched_files(m, candidates, pred)
-        if not touched:
-            return parent
-        tfiles = [f for f in m["files"] if f in touched]
-        df = self._scan_subset(m, tfiles)
-        out = df.select(*self._assigned(df, df.columns, assignments,
-                                        F.coalesce(pred, F.lit(False))))
-        n_touched = self._logical_rows(m, tfiles)
-        return self._commit_cow(m, tfiles, out, n_touched,
-                                m["rows"], "update", bloom_cols,
-                                bloom_bits)
-
-    def _assigned(self, df: DataFrame, cols: list[str], assignments: dict,
-                  hit=None) -> list:
-        """``cols`` of ``df`` as UPDATE leaves them: each assigned column
-        becomes its expression (SQL string or Column) cast back to the
-        column's type - only where ``hit``, when given.  An assignment
-        to a column outside ``cols`` raises."""
-        unknown = [c for c in assignments if c not in cols]
-        if unknown:
-            raise SnapshotError(
-                f"{self.path}: UPDATE of unknown columns {unknown}")
-        types = dict(df.dtypes)
-        out = []
-        for c in cols:
-            v = assignments.get(c)
-            if v is None:
-                out.append(F.col(c))
-                continue
-            new = (F.expr(v) if isinstance(v, str) else v).cast(types[c])
-            if hit is not None:
-                new = F.when(hit, new).otherwise(F.col(c))
-            out.append(new.alias(c))
-        return out
-
-    def _update_mor(self, parent: int, m: dict, candidates: list[str],
-                    pred, assignments: dict,
-                    bloom_cols: list[str] | None,
-                    bloom_bits: int | None) -> int:
-        """MERGE-ON-READ update: one DV-applied capture scan yields the
-        matched rows WITH their positions; the old positions land on a
-        deletion-vector sidecar (prior positions of the touched files
-        folded forward, same contract as :meth:`_delete_mor`) and the
-        updated copies append as new files - ONE commit, write cost
-        O(matched rows + positions), zero touched-file rewrite."""
-        df = self._scan_subset(m, candidates, file_col="__graft_file",
-                               row_col="__graft_row")
-        data_cols = [c for c in df.columns
-                     if c not in ("__graft_file", "__graft_row")]
-        images = self._assigned(df, data_cols, assignments)
-        matched = (df.where(F.coalesce(pred, F.lit(False)))
-                   .localCheckpoint(eager=True))
-        # sidecar staged straight off the checkpoint; per-file counts
-        # come from the staged footers (r13) - the separate groupBy
-        # collect job is gone
-        stage, per_file = self._stage_dv_sidecar(
-            m, candidates,
-            matched.select(F.col("__graft_file").alias("file"),
-                           F.col("__graft_row").alias("row_index"))
-            .withColumn("new", F.lit(True)), single_task=True)
-        if stage is None:
-            return parent
-        mapped = self._map_hits_to_manifest(list(per_file), candidates,
-                                            "update-mor")
-        updated = matched.select(*images)
-        files, n_new, stats, wblooms = self._write_files_bloom(
-            updated, m, bloom_cols, bloom_bits)
-        n_matched = sum(per_file.values())
-        self._check_rows("update-mor", n_matched, n_new)
-        dvs, delta_dv = self._dv_entries(m, candidates, stage,
-                                         per_file, mapped)
-        return self._store.commit(
-            m, "update-mor", rows=m["rows"], add=files, stats=stats,
-            blooms=wblooms, dvs=dvs, delta_dv=delta_dv)
-
-    def _merge_mor(self, parent: int, m: dict, source: DataFrame,
-                   on: str, matched: list, not_matched,
-                   not_matched_by_source: list,
-                   target_alias: str, source_alias: str,
-                   validate_cardinality: bool,
-                   source_keys: list[str] | None,
-                   bloom_cols: list[str] | None,
-                   bloom_bits: int | None) -> int:
-        """MERGE-ON-READ MERGE INTO (r11): WHEN MATCHED update/delete
-        clauses resolve to deletion-vector positions (+ the updated
-        rows' new images), WHEN NOT MATCHED inserts append - ONE commit,
-        write cost O(matched + inserted rows), zero touched-file
-        rewrite.  This is the streaming-CDC upsert shape at its true
-        per-trigger cost: a batch touching 0.1% of one file's rows
-        writes those rows and a sidecar, not the file.
-
-        SINGLE-PASS SCAN (r12): every clause family resolves from ONE
-        pass over the target - an inner join when only matched/insert
-        clauses exist, a left outer join when NOT MATCHED BY SOURCE
-        needs the unmatched rows too (pre-filtered by their clause
-        codes, so the checkpoint stays O(matched + changed)); the
-        WHEN NOT MATCHED insert set is the source minus the matched
-        source ids, a source-sized anti-join.  The pre-r12 shape
-        re-scanned the target once per clause family (three full
-        passes with NOT MATCHED BY SOURCE, and the source-vs-target
-        anti-join could not broadcast its big build side).
-
-        ``WHEN NOT MATCHED BY SOURCE`` (r12, VERDICT r11 missing #2):
-        unmatched target rows resolve to DV positions too - delete
-        clauses cost O(positions) in bytes, update clauses re-emit
-        only the changed rows.  The scan necessarily covers every file
-        (an unmatched row can live anywhere), so source-key pruning is
-        forfeited for the scan - but the WRITE stays O(changed rows +
-        positions), which is the amplification that mattered (COW
-        rewrote every touched FILE).  Per ANSI (and Delta/Spark),
-        these clause conditions and SET expressions may reference only
-        the TARGET row.
-
-        Clause semantics mirror ``operators.merge.merge_into`` exactly
-        (ordered first-match WHEN MATCHED, ANSI cardinality validation,
-        ``"*"``/map inserts, casts to the table schema); parity is
-        pinned by tests comparing mor vs cow results on identical
-        inputs.  A matched row whose clause conditions all fail is
-        UNTOUCHED (no position recorded, nothing re-emitted)."""
-        if "__graft_sid" in source.columns:
-            raise SnapshotError(
-                "merge(mor=True): source column name __graft_sid is "
-                "reserved by the merge machinery")
-        # every source row gets a materialized unique id: it marks
-        # "source side present" after the outer join below AND lets the
-        # WHEN NOT MATCHED insert set be derived from the join output
-        # by a tiny id anti-join instead of a second full scan of the
-        # target (r12 - the pre-r12 shape scanned the target once per
-        # clause family, three times with NOT MATCHED BY SOURCE)
-        # unmatched rows (NOT MATCHED BY SOURCE) can live in ANY file
-        src, candidates = self._checkpoint_candidates(
-            m, source.withColumn("__graft_sid",
-                                 F.monotonically_increasing_id()),
-            None if not_matched_by_source else source_keys)
-        tpos = self._scan_subset(m, candidates, file_col="__graft_file",
-                                 row_col="__graft_row")
-        data_cols = [c for c in tpos.columns
-                     if c not in ("__graft_file", "__graft_row")]
-        # WHEN NOT MATCHED BY SOURCE clause codes, built up front: the
-        # single-pass scan below evaluates them on unmatched rows BEFORE
-        # checkpointing so the materialized set stays O(matched +
-        # changed), never O(table).  Per ANSI these clauses see only
-        # the target row, so the conditions resolve on the outer join's
-        # null-extended source side too.
-        act_s = _clause_codes(not_matched_by_source or [], "S")
-        # ONE pass over the target finds every clause family's rows:
-        # an inner join when only matched/insert clauses exist, a left
-        # outer join when NOT MATCHED BY SOURCE needs the unmatched
-        # target rows as well - either way the big side streams through
-        # a single scan (broadcastable small source), where the pre-r12
-        # shape re-scanned the target per family.
-        matched_flag = F.col("__graft_sid").isNotNull()
-        joined = (tpos.alias(target_alias)
-                  .join(src.alias(source_alias), F.expr(on),
-                        "left_outer" if not_matched_by_source
-                        else "inner"))
-        if not_matched_by_source:
-            joined = joined.where(matched_flag | (act_s != "K"))
-        joined = joined.localCheckpoint(eager=True)
-        j = joined.where(matched_flag) if not_matched_by_source \
-            else joined
-        if validate_cardinality:
-            dup = (j.groupBy("__graft_file", "__graft_row")
-                   .agg(F.count(F.lit(1)).alias("__n__"))
-                   .where(F.col("__n__") > 1))
-            if dup.take(1):
-                raise ValueError(
-                    "MERGE cardinality violation: a target row matches "
-                    "multiple source rows; make the ON condition "
-                    "key-unique or pre-aggregate the source "
-                    "(e.g. newest_wins)")
-        act = _clause_codes(matched, "U")
-        # total/deleted counts ride the checkpoint job via observe()
-        # (r13) - the separate count() jobs per clause family are gone
-        from pyspark.sql import Observation
-        obs_c = Observation("merge_mor_changed")
-        changed = (j.withColumn("__act__", act)
-                    .where(F.col("__act__") != "K")
-                    .observe(obs_c, F.count(F.lit(1)).alias("n"),
-                             F.count(F.when(F.col("__act__") == "D", 1))
-                             .alias("d"))
-                    .localCheckpoint(eager=True))
-        mc = obs_c.get
-        n_changed, n_deleted = int(mc["n"]), int(mc["d"])
-        types = dict(tpos.dtypes)
-        updates = changed.where(F.col("__act__") != "D").select(
-            *_clause_images(matched, "U", data_cols, types, target_alias))
-        # WHEN NOT MATCHED BY SOURCE (r12): target rows with NO source
-        # match, found by ONE anti-join of the positional scan against
-        # the source; first applicable clause wins, positions land on
-        # the same sidecar, SET images append with the updates.  Per
-        # ANSI these clauses see only the target row, so conditions/
-        # SETs resolve against the target alias alone.
-        changed_s = None
-        if not_matched_by_source:
-            img_cols = _clause_images(not_matched_by_source, "S",
-                                      data_cols, types, target_alias)
-            # the unmatched target rows already rode the single-pass
-            # scan (null-extended source side, clause pre-filter) -
-            # this re-derives their action codes from the checkpointed
-            # blocks, no second scan of the target; its counts ride the
-            # checkpoint job via observe() (r13)
-            obs_s = Observation("merge_mor_nmbs")
-            changed_s = (joined.where(~matched_flag)
-                         .withColumn("__act__", act_s)
-                         .where(F.col("__act__") != "K")
-                         .select(F.col("__graft_file"),
-                                 F.col("__graft_row"),
-                                 F.col("__act__"), *img_cols)
-                         .observe(obs_s, F.count(F.lit(1)).alias("n"),
-                                  F.count(F.when(F.col("__act__") == "D",
-                                                 1)).alias("d"))
-                         .localCheckpoint(eager=True))
-            ms = obs_s.get
-            n_changed += int(ms["n"])
-            n_deleted += int(ms["d"])
-            updates = updates.unionByName(
-                changed_s.where(F.col("__act__") != "D")
-                .select(*data_cols))
-        # WHEN NOT MATCHED inserts: source rows matching NO target row =
-        # source rows whose id never appears in the join output's
-        # matched rows.  The pre-r12 shape anti-joined the source
-        # against the WHOLE target scan - a second full pass, and one
-        # Spark cannot broadcast (the big side is the build side of a
-        # left anti), so at scale it shuffled the table; the id
-        # anti-join touches only the checkpointed source and the
-        # checkpointed matched ids.  (Candidate pruning stays sound for
-        # the same reason as before: non-candidate files cannot hold
-        # matches, so the join output sees every match.)
-        inserts = None
-        n_inserted = 0
-        if not_matched is not None:
-            icond, ins = not_matched
-            s_only = (src.alias(source_alias)
-                      .join(j.select("__graft_sid"),
-                            "__graft_sid", "left_anti"))
-            if icond is not None:
-                s_only = s_only.where(F.expr(icond))
-            if ins == "*":
-                missing = [c for c in data_cols
-                           if c not in set(src.columns)]
-                if missing:
-                    raise ValueError(
-                        f"INSERT *: source lacks target columns {missing}")
-                imap = {c: f"{source_alias}.`{c}`" for c in data_cols}
-            else:
-                imap = dict(ins)
-            inserts = s_only.select(*[
-                (F.expr(imap[c]) if c in imap else F.lit(None))
-                .cast(types[c]).alias(c) for c in data_cols])
-            # materialized once (checkpoint) so _write_files reuses the
-            # blocks; the exact insert count rides the same job (r13)
-            obs_i = Observation("merge_mor_inserts")
-            inserts = (inserts.observe(obs_i,
-                                       F.count(F.lit(1)).alias("n"))
-                       .localCheckpoint(eager=True))
-            n_inserted = int(obs_i.get["n"])
-        # positions sidecar staged off the checkpoints in one job;
-        # per-file counts come from the staged footers (r13)
-        stage = per_file = None
-        if n_changed:
-            pos_df = changed.select(
-                F.col("__graft_file").alias("file"),
-                F.col("__graft_row").alias("row_index"))
-            if changed_s is not None:
-                pos_df = pos_df.unionByName(changed_s.select(
-                    F.col("__graft_file").alias("file"),
-                    F.col("__graft_row").alias("row_index")))
-            stage, per_file = self._stage_dv_sidecar(
-                m, candidates, pos_df.withColumn("new", F.lit(True)),
-                single_task=True)
-        new_rows = updates if inserts is None \
-            else updates.unionByName(inserts)
-        files, n_new, stats, wblooms = self._write_files_bloom(
-            new_rows, m, bloom_cols, bloom_bits)
-        n_updated = n_changed - n_deleted
-        # mirror the update-mor guard (ADVICE r11 #3): a write anomaly
-        # must abort BEFORE the commit, not silently skew rows/n_inserted
-        # and drop updated images
-        self._check_rows("merge-mor", n_updated + n_inserted, n_new)
-        if not per_file and not files:
-            return parent  # nothing matched a clause, nothing inserted
-        dvs = delta_dv = None
-        if per_file:
-            mapped = self._map_hits_to_manifest(
-                list(per_file), candidates, "merge-mor")
-            dvs, delta_dv = self._dv_entries(m, candidates, stage,
-                                             per_file, mapped)
-        return self._store.commit(
-            m, "merge-mor", rows=m["rows"] - n_deleted + n_inserted,
-            add=files, stats=stats, blooms=wblooms, dvs=dvs,
-            delta_dv=delta_dv)
+        if candidates:
+            cols = self._table_schema(m).fieldNames()
+            unknown = [c for c in assignments if c not in cols]
+            if unknown:
+                raise SnapshotError(
+                    f"{self.path}: UPDATE of unknown columns {unknown}")
+        cs = self._change_set(m, candidates, [(None, assignments)],
+                              where=pred)
+        return self._publish(cs, "update", mor, bloom_cols, bloom_bits)
 
     def mirror(self, source: DataFrame, key_cols: list[str], *,
                mor: bool = False,
@@ -2095,14 +1950,16 @@ class SnapshotTable:
         CDC full-refresh / dimension-snapshot shape: a nightly extract
         replaces the table's CONTENT while history, time travel and
         the change feed keep working (``overwrite`` would too, but its
-        change feed is a full delete+insert of every row; mirror's is
-        proportional to what actually changed... under COW file-wise,
-        under ``mor=True`` (r12) row-wise - unmatched rows become DV
-        positions, updates re-emit only matched rows).
+        change feed is a full delete+insert of every row).
+
+        It is one :meth:`merge`, so one change set: only rows whose
+        values differ change.  Copy-on-write rewrites only the files
+        holding a changed row; ``mor=True`` turns unmatched rows into
+        deletion-vector positions and appends only the changed rows.
 
         ``source`` must carry every table column (it IS the new truth).
-        Returns the new version (or current when the table was empty
-        and the source inserts everything via the plain merge path)."""
+        Returns the new version, or the current one when nothing
+        differs."""
         m = self.manifest(self.current_version())
         if m.get("schema"):
             cols = _manifest_schema(m).fieldNames()
@@ -2140,32 +1997,37 @@ class SnapshotTable:
                       bloom_bits: int | None = None) -> int:
         """ATOMIC predicate-scoped overwrite (Delta's ``replaceWhere`` -
         the backfill shape: replace one day/region of a 100 TB table in
-        ONE commit without touching the rest):
+        ONE commit without touching the rest): the change set of a
+        ``(where, "delete")`` clause, as :meth:`delete` builds it,
+        published COPY-ON-WRITE with ``df`` as its inserts:
 
         - rows matching ``where`` are removed - files matched in FULL
           drop with no rewrite, partially-matched files rewrite keeping
-          their non-matching rows (same two-phase targeting as
-          :meth:`delete`);
-        - ``df``'s rows are appended in the same commit;
+          their non-matching rows;
+        - ``df``'s rows are written in the same job and land in the same
+          commit;
         - with ``validate`` (default), every input row must satisfy
-          ``where`` - one cheap count over the new files' data catches
-          the classic backfill bug (writing day X+1 into day X's slot)
-          BEFORE the commit publishes; staged files become vacuum
-          garbage.
+          ``where``: the count of those that do not rides the write job,
+          and catches the classic backfill bug (writing day X+1 into
+          day X's slot) BEFORE the commit publishes; staged files become
+          vacuum garbage.
 
         ``where`` takes the ``read(where=)`` conjunct grammar (manifest
         pruning applies) or a SQL string.  Unlike two delete+append
         commits, a reader never observes the gap state; a crash between
         phases publishes nothing.  Schema evolution follows append's
         additive contract; written files keep the table's blooms
-        (defaults as in :meth:`append`).  Returns the new version."""
+        (defaults as in :meth:`append`).  Returns the new version, or
+        the current one when nothing matched and ``df`` is empty."""
         m, pred, candidates = self._dml_target(where)
         unified = unify_schemas(m.get("schema"), df.schema)
-        files, n_new, stats, wblooms = self._write_files_bloom(
-            df, m, bloom_cols, bloom_bits)
-        if validate and files:
-            bad = (self.spark.read.schema(df.schema).parquet(*files)
-                   .where(~F.coalesce(pred, F.lit(False))).count())
+        cs = self._change_set(m, candidates, [(None, "delete")],
+                              where=pred)
+        self._set_inserts(cs, df, *[F.count(F.when(
+            ~F.coalesce(pred, F.lit(False)), 1)).alias("bad")] * validate)
+
+        def _validate() -> None:
+            bad = cs.ins_obs.get.get("bad")
             if bad:
                 raise SnapshotError(
                     f"{self.path}: replace_where input holds {bad} rows "
@@ -2173,29 +2035,10 @@ class SnapshotTable:
                     "(rows outside the replaced scope would silently "
                     "coexist with the data they were meant to replace); "
                     "staged files are unreferenced garbage for vacuum")
-        touched = (self._touched_files(m, candidates, pred)
-                   if candidates else {})
-        tfiles = [f for f in m["files"] if f in touched]
-        n_matched = sum(touched.values())
-        rewritten: list[str] = []
-        rw_stats: dict = {}
-        rw_blooms: dict = {}
-        if tfiles:
-            n_touched = self._logical_rows(m, tfiles)
-            if n_touched > n_matched:
-                # partially-matched files keep their non-matching rows
-                remaining = (self._scan_subset(m, tfiles)
-                             .where(~F.coalesce(pred, F.lit(False))))
-                rewritten, n_kept, rw_stats, rw_blooms = \
-                    self._write_files_bloom(remaining, m, bloom_cols,
-                                            bloom_bits)
-                self._check_rows("replace_where", n_touched - n_matched,
-                                 n_kept)
-        return self._store.commit(
-            m, "replace-where", rows=m["rows"] - n_matched + n_new,
-            add=rewritten + files, stats={**rw_stats, **stats},
-            blooms={**rw_blooms, **wblooms}, remove=tfiles,
-            schema=unified.json())
+
+        return self._publish_cow(cs, "replace-where", bloom_cols,
+                                 bloom_bits, schema=unified.json(),
+                                 guard=_validate)
 
     def _plan_change_range(self, since: int, until: int) \
             -> list[tuple[int, int, list[str], list[str]]] | None:
@@ -2897,62 +2740,42 @@ def scd2_apply_cow(table: SnapshotTable, batch: DataFrame,
     ``operators.scd.scd2_apply_batch`` COMPUTE was already
     batch-proportional; this makes the WRITE match it).
 
-    Phase 1 prunes candidate files from the batch's per-key [min, max]
-    (manifest stats, zero IO) then pins exact touched files with one
-    semi-join on the key columns.  Phase 2 rewrites those files as
-    (their non-touched-key rows) UNION (the touched keys' history
-    rebuilt through scd2_apply_batch - so LATE rows splice correctly
-    and replay stays idempotent, the same guarantees as the full
-    rebuild).  A batch of entirely NEW keys appends without touching
-    any file.  Returns the committed version."""
+    It is the snapshot DML planner with one ``delete`` clause: the batch
+    is checkpointed with its per-key [min, max] observed on that job
+    (manifest stats prune the candidate files, zero IO), then ONE scan
+    of the candidates joined to the batch's distinct keys captures
+    every row of a touched key as the change set.  The copy-on-write
+    publisher rewrites the touched files as (their other rows) UNION
+    (the touched keys' history rebuilt through scd2_apply_batch - so
+    LATE rows splice correctly and replay stays idempotent, the same
+    guarantees as the full rebuild), keeping the table's blooms.  A
+    batch of entirely NEW keys appends without touching any file.
+    Returns the committed version."""
     from aliyun_maxcompute_data_collectors_spark.operators.scd import (
         scd2_apply_batch,
         scd2_build,
     )
 
-    parent = table.current_version()
-    m = table.manifest(parent)
+    m = table.manifest()
     if not m["files"]:
         return table.overwrite(
             scd2_build(batch, keys, time_col, attr_cols),
             operation="scd2-init")
-    batch = batch.localCheckpoint(eager=True)
-    tkeys = batch.select(*keys).distinct()
-    aggs = []
-    for k in keys:
-        aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
-    row = batch.agg(*aggs).collect()[0]
-    conj = [(k, "between", (row[f"__lo_{k}"], row[f"__hi_{k}"]))
-            for k in keys if row[f"__lo_{k}"] is not None]
-    candidates = table.prune_files(m, conj) if conj else m["files"]
-    touched: list[str] = []
-    if candidates:
-        tagged = (table._scan_subset(m, candidates,
-                                     file_col="__graft_file")
-                  if table._dvs(m) else
-                  table._reader_for(m).parquet(*candidates)
-                  .withColumn("__graft_file", F.input_file_name()))
-        hits = (tagged.join(tkeys, keys, "left_semi")
-                .select("__graft_file").distinct().collect())
-        # raises on an unmappable hit (ADVICE r9 medium): SCD2 has no
-        # row-count guard, so a dropped file would duplicate history
-        tset = set(table._map_hits_to_manifest(
-            [r["__graft_file"] for r in hits], candidates,
-            "scd2-merge").values())
-        touched = [f for f in m["files"] if f in tset]
-    if not touched:
+    batch, candidates, n_batch = table._checkpoint_candidates(m, batch,
+                                                              keys)
+    on = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
+    cs = table._change_set(m, candidates, [(None, "delete")],
+                           source=batch.select(*keys).distinct(), on=on,
+                           target_alias="t")
+    if not cs.n:
         # every key is new: pure append of its built history
         return table.append(scd2_build(batch, keys, time_col, attr_cols))
-    sub = table._scan_subset(m, touched)
-    n_touched = table._logical_rows(m, touched)
-    keep_rows = sub.join(tkeys, keys, "left_anti")
-    rebuilt = scd2_apply_batch(sub.join(tkeys, keys, "left_semi"),
-                               batch, keys, time_col, attr_cols)
-    out = keep_rows.unionByName(rebuilt)
-    files, n_new, stats = table._write_files(out)
-    return table._store.commit(m, "scd2-merge",
-                               rows=m["rows"] - n_touched + n_new,
-                               add=files, stats=stats, remove=touched)
+    cs.order = list(keys)
+    history = cs.rows.select(*cs.data_cols)
+    table._set_inserts(cs, scd2_apply_batch(history, batch, keys, time_col,
+                                            attr_cols),
+                       bound=cs.n + n_batch)
+    return table._publish_cow(cs, "scd2-merge", None, None)
 
 
 def scd2_foreach_batch_writer_versioned(table: SnapshotTable,
@@ -2998,24 +2821,22 @@ def scd2_foreach_batch_writer_versioned(table: SnapshotTable,
 def cdc_apply_merge(table: SnapshotTable, ops: DataFrame,
                     key_cols: list[str], order_cols: list[str],
                     op_col: str = "op", mor: bool = False) -> int:
-    """Apply one CDC ops batch onto a snapshot table as a COPY-ON-WRITE
-    MERGE: reduce the batch to its net effect per key (newest op in
-    ``order_cols`` order), then one ANSI merge - matched deletes drop
-    the row, matched upserts set the value columns, unmatched non-delete
-    ops insert.  Only files holding touched keys are rewritten, so the
-    per-batch cost is O(batch + touched files), never O(table) - the
-    Delta streaming-upsert shape, vs the pre-r9 read-merge-OVERWRITE
-    that rewrote the table every trigger.  Cardinality validation is
-    skipped: ``latest_ops`` leaves exactly one source row per key by
-    construction.  Returns the committed version (or the current one
-    for an all-noop batch).
-
-    ``mor=True`` (r11) applies the batch MERGE-ON-READ: matched
-    deletes/upserts become deletion-vector positions + appended new
-    images, unmatched inserts append - per-trigger WRITE cost is
-    O(batch), no touched-file rewrite at all; schedule compact() to
-    materialize accreted vectors.  Either way the written files keep
-    the table's blooms (:meth:`SnapshotTable.merge` defaults)."""
+    """Apply one CDC ops batch onto a snapshot table as ONE MERGE:
+    reduce the batch to its net effect per key (newest op in
+    ``order_cols`` order), then :meth:`SnapshotTable.merge` - matched
+    deletes drop the row, matched upserts set the value columns,
+    unmatched non-delete ops insert.  The merge plans one positional
+    change set over the files whose key ranges overlap the batch and
+    publishes it copy-on-write (default: only files holding touched
+    keys are rewritten, so the per-batch cost is O(batch + touched
+    files), never O(table) - the Delta streaming-upsert shape) or, with
+    ``mor=True``, merge-on-read (deletion-vector positions plus
+    appended images and inserts: per-trigger WRITE cost O(batch), no
+    file rewrite; schedule compact() to materialize accreted vectors).
+    Cardinality validation is skipped: ``latest_ops`` leaves exactly one
+    source row per key by construction.  Written files keep the table's
+    blooms.  Returns the committed version (or the current one for an
+    all-noop batch)."""
     from aliyun_maxcompute_data_collectors_spark.streaming.cdc import (
         OP_DELETE,
         latest_ops,

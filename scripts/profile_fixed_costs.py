@@ -79,10 +79,8 @@ def prof_mor(spark, reps: int = 3):
 
 
 def prof_delete_mor_phases(spark, reps: int = 3):
-    """Inside ONE MOR delete: scan/checkpoint vs per-file collect vs
-    sidecar write vs manifest commit."""
-    import aliyun_maxcompute_data_collectors_spark.snapshots as S
-
+    """Inside ONE MOR delete: planning the (lazy) change set vs its
+    merge-on-read publish (sidecar write + footer counts + commit)."""
     for rep in range(reps):
         root = tempfile.mkdtemp(prefix="prof_dmor_")
         try:
@@ -90,29 +88,14 @@ def prof_delete_mor_phases(spark, reps: int = 3):
                 "l_orderkey", "l_linenumber", "l_extendedprice")
             tab = SnapshotTable.init(spark, root)
             tab.append(li.coalesce(2))
-            m = tab.manifest()
-            _, pred, candidates = tab._dml_target(
+            m, pred, candidates = tab._dml_target(
                 "l_orderkey % 100 BETWEEN 0 AND 3")
             t = T()
-            hits = (tab._scan_subset(m, candidates,
-                                     file_col="__graft_file",
-                                     row_col="__graft_row")
-                    .where(F.coalesce(pred, F.lit(False)))
-                    .select(F.col("__graft_file").alias("file"),
-                            F.col("__graft_row").alias("row_index"))
-                    .withColumn("new", F.lit(True)))
-            stage, per_file = tab._stage_dv_sidecar(m, candidates, hits)
-            t.mark("stage sidecar (scan+write+footer counts)")
-            mapped = tab._map_hits_to_manifest(list(per_file), candidates,
-                                               "prof")
-            t.mark("map_hits_to_manifest")
-            dvs, delta_dv = tab._dv_entries(m, candidates, stage,
-                                            per_file, mapped)
-            t.mark("dv_entries")
-            n_del = sum(per_file.values())
-            tab._store.commit(m, "delete-mor", rows=m["rows"] - n_del,
-                              dvs=dvs, delta_dv=delta_dv)
-            t.mark("commit")
+            cs = tab._change_set(m, candidates, [(None, "delete")],
+                                 where=pred, keep_dead=True)
+            t.mark("plan change set (lazy, no job)")
+            tab._publish_mor(cs, "delete", None, None)
+            t.mark("publish: sidecar write + footer counts + commit")
             t.dump(f"delete_mor phases rep{rep}")
         finally:
             shutil.rmtree(root, ignore_errors=True)

@@ -359,3 +359,26 @@ def test_spark_and_python_bloom_positions_agree(spark, ints, strs, m):
             assert r["ps"] == _bloom_position(r["s"], m), repr(r["s"])
     for v in (True, False, 1.5, float("nan"), None):
         assert _bloom_position(v, m) is None
+
+
+def test_scd2_apply_cow_keeps_the_tables_blooms(spark, tmp_path):
+    """An SCD2 batch rewrites the files holding its keys under the
+    table's bloom policy, like every other write."""
+    from aliyun_maxcompute_data_collectors_spark.operators.scd import scd2_build
+    from aliyun_maxcompute_data_collectors_spark.snapshots import scd2_apply_cow
+
+    t = SnapshotTable.init(spark, str(tmp_path / "dim"))
+    log = spark.createDataFrame([(k, f"v{k}", 10) for k in range(400)],
+                                "k long, v string, ts long")
+    t.append(scd2_build(log, "k", "ts").repartitionByRange(4, "k"),
+             bloom_cols=["k"], bloom_bits=M)
+    before = set(t.manifest()["files"])
+    scd2_apply_cow(t, spark.createDataFrame(
+        [(5, "x", 20)], "k long, v string, ts long"), ["k"], "ts")
+    m = t.manifest()
+    assert m["operation"] == "scd2-merge"
+    assert len(before & set(m["files"])) == 3
+    assert not _unbloomed(t, cols=("k",))
+    assert t.bloom_columns() == (["k"], M)
+    assert sorted((r["v"], r["is_current"]) for r in t.read(
+        where=("k", "==", 5)).collect()) == [("v5", False), ("x", True)]

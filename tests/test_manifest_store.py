@@ -161,6 +161,7 @@ class StoreModel(RuleBasedStateMachine):
                 **kw) -> None:
         if "add" in kw:
             kw["blooms"] = self._blooms(kw["add"], legacy)
+        parent = self.store.manifest_json(self.store.current_version())
         with contextlib.ExitStack() as stack:
             for p in _legacy_writer() if legacy else []:
                 stack.enter_context(p)
@@ -168,6 +169,41 @@ class StoreModel(RuleBasedStateMachine):
                                   rows=len(live), **kw)
         self.versions[v] = {"files": live, "dvs": live_dvs, "delta": diff,
                             "legacy": legacy}
+        self._check_layout(v, parent, live, kw)
+
+    def _check_layout(self, v, parent, live, kw) -> None:
+        """Segments stay within ``max_segments``, and a commit on a
+        segmented base that hits no declared fold trigger carries every
+        segment as it is and writes entries for its added files only:
+        its metadata is O(added + inline list), never O(table)."""
+        st = self.store
+        mj = st.manifest_json(v)
+        segs = mj.get("segments") or []
+        fsegs = mj.get("file_segments") or []
+        assert len(segs) + len(fsegs) <= st.max_segments, v
+        p_segs = parent.get("segments") or []
+        p_fsegs = parent.get("file_segments") or []
+        if kw.get("shape", "append") != "append" or not (p_segs or p_fsegs):
+            return
+        if p_fsegs:
+            removed = set(parent.get("removed_files") or []) \
+                | set(kw.get("remove") or ())
+            fold = (len(p_fsegs) + len(p_segs) + 1 > st.max_segments
+                    or len(removed) > st.removed_files_max)
+        else:
+            fold = (len(live) > st.inline_files
+                    or len(p_segs) + 1 > st.max_segments)
+        if fold:
+            return
+        carried = p_segs + p_fsegs
+        assert set(carried) <= set(segs + fsegs), v
+        fresh = [p for p in segs + fsegs if p not in carried]
+        assert len(fresh) <= 1, v
+        for p in fresh:
+            d = S._load_segment(p)
+            written = (set(d.get("files") or []) | set(d.get("stats") or {})
+                       | set(d.get("blooms") or {}))
+            assert written <= set(kw.get("add") or ()), v
 
     def _pick(self, data, live) -> list[str]:
         picked = data.draw(st.lists(st.sampled_from(live), unique=True,

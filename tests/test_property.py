@@ -166,31 +166,61 @@ def _merge_ref(target, source, matched, not_matched, by_source):
     return sorted(out)
 
 
+def _snapshot_step(t, op, before: list) -> list:
+    """Run one snapshot DML over a table reading ``before``; check that
+    ``changes(v - 1, v)`` applied to ``before`` gives ``read(v)``, and
+    return ``read(v)`` sorted."""
+    import collections
+
+    v0 = t.current_version()
+    op()
+    after = sorted((r["k"], r["v"]) for r in t.read().collect())
+    if t.current_version() > v0:
+        got = collections.Counter(before)
+        for r in t.changes(v0, t.current_version()).collect():
+            got[(r["k"], r["v"])] += 1 if r["_change_type"] == "insert" else -1
+        assert sorted((+got).elements()) == after and not -got
+    else:
+        assert after == sorted(before)
+    return after
+
+
 @given(
     st.lists(st.tuples(st.integers(0, 9), st.integers(-50, 50)),
              max_size=8, unique_by=lambda t: t[0]),
     st.lists(st.tuples(st.integers(0, 9), st.integers(-50, 50)),
              max_size=8, unique_by=lambda t: t[0]),
+    st.integers(-50, 50),
+    st.integers(-50, 50),
 )
 @settings(max_examples=_ex(12), deadline=None)
-def test_merge_into_matches_reference(spark, tgt_rows, src_rows):
+def test_merge_into_matches_reference(spark, tmp_path_factory, tgt_rows,
+                                      src_rows, del_below, upd_above):
+    """``merge_into`` and ``SnapshotTable.merge`` in both publishing modes
+    (copy-on-write and merge-on-read) all equal the pure-Python
+    reference, on a 3-file snapshot table that already carries a
+    merge-on-read delete; so do a drawn ``delete`` and ``update``, and
+    every commit's ``changes(v - 1, v)`` takes ``read(v - 1)`` to
+    ``read(v)``."""
     # fixed clause set over random tables: conditional update, delete the
     # negatives, insert unmatched, flag-not-in-source via update
     # (spark is a session-scoped fixture - allowed inside @given)
+    from unittest import mock
+
+    import aliyun_maxcompute_data_collectors_spark.snapshots as S
     from aliyun_maxcompute_data_collectors_spark.operators.merge import merge_into
 
     target = spark.createDataFrame(tgt_rows or [(99999, 0)], "k long, v long")
     source = spark.createDataFrame(src_rows or [(99998, 0)], "k long, v long")
     tgt_list = tgt_rows or [(99999, 0)]
     src_list = src_rows or [(99998, 0)]
-
-    got = merge_into(
-        target, source, "t.k = s.k",
+    clauses = dict(
         matched=[("s.v < 0", "delete"), (None, {"v": "s.v + 1"})],
         not_matched=(None, "*"),
         not_matched_by_source=[("t.v < -25", "delete"),
-                               (None, {"v": "t.v * 2"})],
-    )
+                               (None, {"v": "t.v * 2"})])
+
+    got = merge_into(target, source, "t.k = s.k", **clauses)
     got_list = sorted((r["k"], r["v"]) for r in got.collect())
 
     want = _merge_ref(
@@ -202,6 +232,33 @@ def test_merge_into_matches_reference(spark, tgt_rows, src_rows):
                    (None, lambda tv: tv * 2)],
     )
     assert got_list == want
+    want_del = [r for r in want if not r[1] < del_below]
+    want_upd = sorted((k, v + 1 if k % 2 == 0 and v > upd_above else v)
+                      for k, v in want_del)
+
+    root = tmp_path_factory.mktemp("merge_modes")
+    for mor in (False, True):
+        t = S.SnapshotTable.init(spark, str(root / f"t{mor}"))
+        for i in range(3):
+            # one ghost row per file, deleted merge-on-read below
+            part = [r for j, r in enumerate(tgt_list) if j % 3 == i]
+            t.append(spark.createDataFrame(part + [(-1 - i, 0)],
+                                           "k long, v long").coalesce(1))
+        # tiny files: a merge-on-read delete may leave one mostly dead,
+        # which the read-tax bound would refuse
+        with mock.patch.object(S, "MOR_MAX_DV_FRACTION", 1.0):
+            t.delete("k < 0", mor=True)
+            assert len(t.manifest()["dvs"]) == 3
+            got = _snapshot_step(t, lambda: t.merge(
+                source, "t.k = s.k", mor=mor, **clauses), tgt_list)
+            assert got == want
+            got = _snapshot_step(t, lambda: t.delete(
+                ("v", "<", del_below), mor=mor), got)
+            assert got == want_del
+            got = _snapshot_step(t, lambda: t.update(
+                {"v": "v + 1"}, f"k % 2 = 0 AND v > {upd_above}",
+                mor=mor), got)
+            assert got == want_upd
 
 
 @given(

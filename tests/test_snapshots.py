@@ -1421,21 +1421,25 @@ def test_merge_cow_insert_only_touches_nothing(spark, dml_table):
 
 
 def test_merge_cow_matches_full_rewrite(spark, tmp_path):
-    """cow=True and cow=False must produce identical tables."""
+    """Copy-on-write and merge-on-read merges must both give the table
+    ``merge_into`` computes over the whole parent snapshot."""
+    from aliyun_maxcompute_data_collectors_spark.operators.merge import merge_into
+
     rows = [(i, i % 5) for i in range(200)]
     src_rows = [(i, 900 + i) for i in range(0, 300, 7)]
-    out = []
-    for cow in (True, False):
-        t = SnapshotTable.init(spark, str(tmp_path / f"m{cow}"))
+    clauses = dict(matched=[("s.k % 2 = 0", {"v": "s.v"}), (None, "delete")],
+                   not_matched=("s.k < 250", "*"))
+    for mor in (False, True):
+        t = SnapshotTable.init(spark, str(tmp_path / f"m{mor}"))
         for lo in (0, 100):
             t.append(spark.createDataFrame(rows[lo:lo + 100],
                                            "k long, v long").coalesce(1))
         src = spark.createDataFrame(src_rows, "k long, v long")
-        t.merge(src, "t.k = s.k",
-                matched=[("s.k % 2 = 0", {"v": "s.v"}), (None, "delete")],
-                not_matched=("s.k < 250", "*"), cow=cow)
-        out.append(sorted((r["k"], r["v"]) for r in t.read().collect()))
-    assert out[0] == out[1]
+        want = sorted(tuple(r) for r in merge_into(
+            t.read(t.current_version()), src, "t.k = s.k",
+            **clauses).collect())
+        t.merge(src, "t.k = s.k", mor=mor, **clauses)
+        assert sorted((r["k"], r["v"]) for r in t.read().collect()) == want
 
 
 def test_merge_by_source_falls_back_to_full_rewrite(spark, dml_table):
