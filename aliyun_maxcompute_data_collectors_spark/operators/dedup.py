@@ -991,6 +991,9 @@ def embedding_dup_pairs(
     """(id1, id2, cos) for pairs with cosine >= threshold.  ``block_col``
     (e.g. a cluster/label/LSH-bucket column) bounds the pair space - use
     lsh blocking from similarity.py (or SemDeDup's k-means cells) first.
+    Pairs score with the Arrow kernel similarity.cosine_fast, rounded to
+    6 decimals.  This is the one cosine pair join: det_semantic_dedup
+    runs it over its k-means cells.
 
     Without blocking this is an all-pairs O(n^2) join, which no cluster
     survives at corpus scale - so it RAISES unless the caller passes
@@ -1006,7 +1009,7 @@ def embedding_dup_pairs(
     rare by construction - same design as minhash_lsh_pairs' bucket cap);
     pairs inside a dropped block should come from a FINER blocking (IVF
     cells, LSH buckets) instead."""
-    from aliyun_maxcompute_data_collectors_spark.operators.similarity import cosine_expr
+    from aliyun_maxcompute_data_collectors_spark.operators.similarity import cosine_fast
     if block_col is None and not allow_quadratic:
         raise ValueError(
             "embedding_dup_pairs without block_col is an all-pairs O(n^2) "
@@ -1028,7 +1031,7 @@ def embedding_dup_pairs(
     return (
         a.join(b, cond)
         .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"),
-                F.round(cosine_expr(F.col("a.v"), F.col("b.v")), 6).alias("cos"))
+                F.round(cosine_fast(F.col("a.v"), F.col("b.v")), 6).alias("cos"))
         .where(F.col("cos") >= threshold)
     )
 

@@ -22,18 +22,19 @@ Spark-first shapes:
   state is the m x ksub x dsub codebook - metadata-scale.  Training runs
   deterministically (seeded literal init, decimal-exact sums, argmin ties
   to the lower cell), so a DuckDB oracle reproduces every code and distance
-  bit-for-bit - the same contract as similarity.det_kmeans.
+  bit-for-bit.  It is the package's one Lloyd's loop: similarity.det_kmeans
+  is this fit at m=1.
 - **Encoding** is one arrow-UDF map pass (no shuffle): each batch gathers
   into an (n, dim) float64 matrix straight off the arrow list buffers and
-  the per-subspace argmin runs vectorized with the same sequential
-  per-dimension accumulation as similarity.det_assign_fast, so distances
-  (and therefore codes) are bit-identical to the expression fold.
+  each subspace runs the argmin of similarity.det_assign_fast (one shared
+  loop body, similarity._argmin_sq), so distances (and therefore codes)
+  are bit-identical to the sequential fold.
 - **ADC top-k** stays entirely JVM-side: the per-query distance table
-  (n_queries * m * ksub rows - tiny) is built with the fold expressions of
-  similarity._sq_dist_expr, broadcast, and joined to long-format codes;
-  per-(query, candidate) sums accumulate in DECIMAL(38,15) so the total is
-  shuffle-order-independent (a double sum over m rows would depend on
-  partition order and never hash-match a second engine).
+  (n_queries * m * ksub rows - tiny) is built with a sequential
+  squared-distance fold expression over query rows only
+  (:func:`_adc_table`), broadcast, and joined to long-format codes; the m
+  looked-up distances per (query, candidate) are added in a fixed order
+  (see pq_topk) so the total is shuffle-order-independent.
 
 Scale caveat (documented, not hidden): brute-force ADC scores every
 (query, candidate) pair - n_docs * m * n_queries intermediate rows before
@@ -53,10 +54,13 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import _KM_DEC, _arrow_list_parts, det_kmeans_init
+from .similarity import _argmin_sq, _dim_rows, _probe_cells, det_kmeans_init
 
 __all__ = ["pq_train", "pq_assign_fast", "pq_encode", "pq_topk",
            "ivfpq_topk", "pq_code_hist"]
+
+
+_KM_DEC = "decimal(38,15)"
 
 
 def _subspace_codebooks_init(dim: int, m: int, ksub: int,
@@ -74,8 +78,8 @@ def _subspace_codebooks_init(dim: int, m: int, ksub: int,
 def pq_assign_fast(vec: Column, codebooks: list[list[list[float]]]) -> Column:
     """Vectorized per-subspace argmin: array<int> of m codes, ties to the
     lower code id (strict <), bit-identical distances to the sequential
-    per-dimension fold (the same accumulation order as
-    similarity.det_assign_fast, run per subspace).
+    per-dimension fold (similarity.det_assign_fast's loop body, run per
+    subspace).
 
     NULL vectors and dimension mismatches return NULL (the caller's
     training loop rejects them via the posexplode_outer guard; encode
@@ -83,7 +87,7 @@ def pq_assign_fast(vec: Column, codebooks: list[list[list[float]]]) -> Column:
     from pyspark.sql.functions import arrow_udf
 
     C = np.asarray(codebooks, dtype=np.float64)  # (m, ksub, dsub)
-    m, ksub, dsub = C.shape
+    m, _, dsub = C.shape
     dim = m * dsub
 
     @arrow_udf("array<int>")
@@ -91,27 +95,12 @@ def pq_assign_fast(vec: Column, codebooks: list[list[list[float]]]) -> Column:
         import pyarrow as pa
 
         n = len(arr)
-        null, starts, lens, flat = _arrow_list_parts(arr)
-        idx = np.nonzero((~null) & (lens == dim))[0]
+        idx, X = _dim_rows(arr, dim)
         codes = np.zeros((n, m), dtype=np.int32)
         if idx.size:
-            X = flat[starts[idx][:, None] + np.arange(dim)]
-            nr = idx.size
             for j in range(m):
-                best_d = None
-                best_c = np.zeros(nr, dtype=np.int32)
-                for ci in range(ksub):
-                    acc = np.zeros(nr)
-                    for i in range(dsub):
-                        t = X[:, j * dsub + i] - C[j, ci, i]
-                        acc += t * t
-                    if best_d is None:
-                        best_d = acc
-                    else:
-                        better = acc < best_d
-                        best_d = np.where(better, acc, best_d)
-                        best_c = np.where(better, np.int32(ci), best_c)
-                codes[idx, j] = best_c
+                _, codes[idx, j] = _argmin_sq(
+                    X[:, j * dsub:(j + 1) * dsub], C[j])
         mask = np.ones(n, dtype=bool)
         mask[idx] = False
         return pa.ListArray.from_arrays(
@@ -136,12 +125,20 @@ def pq_train(
 
     One Spark job per iteration for ALL subspaces: assignment is a single
     arrow-UDF pass producing the m-code array, and the centroid update is
-    ONE decimal aggregate keyed (subspace, cell, pos) - the same narrow
-    posexplode shape det_kmeans uses, so only m*ksub*dsub map-combined
-    partial rows per partition reach the shuffle.  Input contract matches
-    det_kmeans: every vector non-NULL with exactly ``dim`` elements, else
-    ValueError (NULL/empty surfaces as a pos=NULL aggregate row, ragged as
-    unequal per-pos counts)."""
+    ONE decimal aggregate keyed (subspace, cell, pos) - a narrow
+    posexplode rather than ``dim`` wide aggregate columns (compiled
+    decimal aggregates cost more in codegen than one generic loop), so
+    only m*ksub*dsub map-combined partial rows per partition reach the
+    shuffle.  ``m=1`` is plain k-means (similarity.det_kmeans).
+
+    Input contract: every vector non-NULL with exactly ``dim`` elements,
+    else ValueError - checked on the aggregate rows, so the validation
+    rides the centroid job (no extra pre-scan pass).  posexplode_OUTER
+    keeps a NULL or empty vector visible as a pos=NULL row; a vector of
+    any other length gets NULL codes from the kernel, so its rows arrive
+    with cell=NULL.  Every row that does get a code has all ``dim``
+    positions, so each (subspace, cell) sees equal counts at every
+    position."""
     dsub = dim // m
     books = _subspace_codebooks_init(dim, m, ksub, seed)
     src = df.select(F.col(vec_col).alias("__v"))
@@ -159,27 +156,20 @@ def pq_train(
         g = (ex.groupBy("j", "cell", "i")
              .agg(F.sum("xd").alias("s"), F.count(F.lit(1)).alias("n"))
              .collect())
+        if any(r["j"] is None for r in g):
+            raise ValueError(
+                "Lloyd's fit: NULL or empty vector(s); fixed "
+                f"dim={dim} input is required - audit with "
+                "embedding_quality first")
+        if any(r["cell"] is None for r in g):
+            raise ValueError(
+                "Lloyd's fit: ragged (non-dim-length) vector(s); fixed "
+                f"dim={dim} input is required - audit with "
+                "embedding_quality first")
         stats: dict[tuple[int, int], dict] = {}
         for r in g:
-            if r["j"] is None or r["cell"] is None:
-                # pos=NULL rows are NULL/empty vectors; cell=NULL rows are
-                # vectors whose length != dim (the kernel refuses a code)
-                raise ValueError(
-                    "pq_train: NULL, empty, or non-dim-length vector(s); "
-                    f"fixed dim={dim} input is required - audit with "
-                    "embedding_quality first")
             d = stats.setdefault((r["j"], r["cell"]), {"n": r["n"], "s": {}})
             d["s"][r["i"]] = r["s"]
-            if r["n"] != d["n"]:
-                raise ValueError(
-                    f"pq_train: ragged vectors (subspace {r['j']} cell "
-                    f"{r['cell']} pos {r['i']}: {r['n']} vs {d['n']} rows); "
-                    f"fixed dim={dim} input is required")
-        for (j, ci), d in stats.items():
-            if len(d["s"]) != dsub:
-                raise ValueError(
-                    f"pq_train: ragged vectors (subspace {j} cell {ci} has "
-                    f"{len(d['s'])} of dsub={dsub} positions)")
         books = [
             [
                 [float(stats[(j, ci)]["s"][i]) / stats[(j, ci)]["n"]
@@ -262,34 +252,38 @@ def pq_topk(
                 f"pair and the query side exceeds {max_query_rows} rows - "
                 "an unbounded corpus dies here; pass candidates= (e.g. an "
                 "IVF-cell prefilter) or opt in with max_query_rows=None")
-    C = np.asarray(codebooks, dtype=np.float64)
-    m, ksub, dsub = C.shape
-    spark = queries.sparkSession
-    cb_rows = [
-        (j, c, [float(x) for x in C[j, c]])
-        for j in range(m) for c in range(ksub)
-    ]
-    cb = spark.createDataFrame(cb_rows, "j int, code int, center array<double>")
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("qv"))
-    # subspace slice of the query vector vs the centroid: the same
-    # sequential fold _sq_dist_expr runs (zip_with + aggregate from 0.0),
-    # mirrored by the oracle's list_reduce - IEEE-identical
-    sub = F.slice("qv", F.col("j") * dsub + 1, dsub)
-    d = F.aggregate(
-        F.zip_with(sub, F.col("center"),
-                   lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)),
-        F.lit(0.0), lambda acc, x: acc + x)
-    dt = q.crossJoin(F.broadcast(cb)).select(
-        "query_id", "j", "code", d.alias("dd"))
+    dt = _adc_table(q, codebooks)
     cand = codes
     if candidates is not None:
         # prune BEFORE the m-fold explode: the semi-join runs over packed
         # one-row-per-doc codes, so only surviving candidates expand
         cand = cand.join(candidates.select(F.col("id")), "id", "left_semi")
-    lc = cand.select("id", F.posexplode("codes").alias("j", "code"))
-    return _adc_rank(lc.withColumnRenamed("id", "neighbor_id"), dt, m, k,
-                     ["j", "code"], exclude_self=True)
+    lc = _codes_long(cand).withColumnRenamed("id", "neighbor_id")
+    return _adc_rank(lc, dt, len(codebooks), k, ["j", "code"],
+                     exclude_self=True)
+
+
+def _adc_table(q: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
+    """The ADC distance table (query_id, j, code, dd): for each query row
+    (query_id, qv), the squared L2 between subspace j of ``qv`` and every
+    centroid of codebook j - n_queries * m * ksub rows.  The same
+    sequential fold (zip_with + aggregate from 0.0) the oracle's
+    list_reduce writes, so every entry is IEEE-identical."""
+    C = np.asarray(codebooks, dtype=np.float64)
+    m, ksub, dsub = C.shape
+    cb = q.sparkSession.createDataFrame(
+        [(j, c, [float(x) for x in C[j, c]])
+         for j in range(m) for c in range(ksub)],
+        "j int, code int, center array<double>")
+    sub = F.slice("qv", F.col("j") * dsub + 1, dsub)
+    d = F.aggregate(
+        F.zip_with(sub, F.col("center"),
+                   lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)),
+        F.lit(0.0), lambda acc, x: acc + x)
+    return q.crossJoin(F.broadcast(cb)).select(
+        "query_id", "j", "code", d.alias("dd"))
 
 
 def _adc_rank(lc_pairs: DataFrame, dt: DataFrame, m: int, k: int,
@@ -328,53 +322,27 @@ def ivfpq_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ: each query probes its ``n_probe`` nearest coarse cells
-    (centroid scoring over broadcast literals - the similarity.ivf_query
-    probe rule), and PQ-ADC scores ONLY the docs in probed cells.  This is
-    the unbounded-corpus composition: candidate count per query is
-    ~n_probe/n_clusters of the corpus, and the scan reads codes (8
-    bytes/vec), never float vectors.
+    (similarity._probe_cells, the probe rule of ivf_query), and PQ-ADC
+    scores ONLY the docs in probed cells.  This is the unbounded-corpus
+    composition: candidate count per query is ~n_probe/n_clusters of the
+    corpus, and the scan reads codes (8 bytes/vec), never float vectors.
 
-    ``cells`` is det_kmeans/ivf_build output (neighbor_id, …, cell);
+    ``cells`` is det_kmeans output (neighbor_id, …, cell);
     ``codes`` is pq_encode output; both are built once and reused across
     query batches (write them out bucketed by cell / id at scale)."""
-    from .similarity import dot_expr
-
-    C = np.asarray(codebooks, dtype=np.float64)
-    m, ksub, dsub = C.shape
-    center_lits = [(ci, F.array(*[F.lit(float(x)) for x in c]))
-                   for ci, c in enumerate(centers)]
-
-    def probe_cells(vec: Column) -> Column:
-        scored = F.array(*[
-            F.struct((-dot_expr(vec, arr)).alias("negdot"),
-                     F.lit(ci).alias("cell"))
-            for ci, arr in center_lits
-        ])
-        return F.slice(F.array_sort(scored), 1, n_probe).getField("cell")
-
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("qv"))
-    probes = q.select("query_id", "qv",
-                      F.explode(probe_cells(F.col("qv"))).alias("cell"))
+    probes = q.select("query_id", F.explode(
+        _probe_cells(F.col("qv"), centers, n_probe)).alias("cell"))
     # candidate pairs: docs living in a probed cell (each doc has exactly
     # one cell, so pairs are unique without a distinct)
     pairs = (
         cells.select(F.col("neighbor_id").alias("id"), "cell")
-        .join(F.broadcast(probes.select("query_id", "cell")), "cell")
+        .join(F.broadcast(probes), "cell")
         .where(F.col("id") != F.col("query_id"))
         .select("query_id", "id")
     )
-    cb_rows = [(j, c, [float(x) for x in C[j, c]])
-               for j in range(m) for c in range(ksub)]
-    cb = queries.sparkSession.createDataFrame(
-        cb_rows, "j int, code int, center array<double>")
-    sub = F.slice("qv", F.col("j") * dsub + 1, dsub)
-    d = F.aggregate(
-        F.zip_with(sub, F.col("center"),
-                   lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)),
-        F.lit(0.0), lambda acc, x: acc + x)
-    dt = q.crossJoin(F.broadcast(cb)).select(
-        "query_id", "j", "code", d.alias("dd"))
+    dt = _adc_table(q, codebooks)
     # candidate prefilter BEFORE the m-fold explode (VERDICT r6 #5): the
     # probed pairs join the PACKED codes (one row per doc), so posexplode
     # expands |pairs| rows (~n_probe/n_clusters of the corpus per query),
@@ -383,7 +351,8 @@ def ivfpq_topk(
     lc_pairs = (codes.join(pairs, "id")
                 .select("query_id", F.col("id").alias("neighbor_id"),
                         F.posexplode("codes").alias("j", "code")))
-    return _adc_rank(lc_pairs, dt, m, k, ["query_id", "j", "code"])
+    return _adc_rank(lc_pairs, dt, len(codebooks), k,
+                     ["query_id", "j", "code"])
 
 
 def pq_code_hist(codes: DataFrame) -> DataFrame:

@@ -502,7 +502,7 @@ ORDER BY g.user_id, g.bucket_start
 
 
 # ---------------------------------------------------------------------------
-# SemDeDup (semantic embedding dedup; rows-only - k-means is not SQL)
+# SemDeDup (semantic embedding dedup over the deterministic k-means)
 # ---------------------------------------------------------------------------
 
 def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -510,8 +510,7 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive groups, min-id representative kept).  Round 4: the blocking
     quantizer is the deterministic seeded Lloyd's (similarity.det_kmeans),
     so the full pipeline hash-matches a DuckDB oracle (upgraded from
-    rows-only; similarity.semantic_dedup keeps the Spark-ML fit for
-    production convergence)."""
+    rows-only)."""
     from aliyun_maxcompute_data_collectors_spark.operators.similarity import det_semantic_dedup
     from aliyun_maxcompute_data_collectors_spark.queries_llm import _coarse_centers
     t = load_tables(spark, sf_dir, ["embeddings"])

@@ -426,9 +426,8 @@ def ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (similarity.det_kmeans): seeded-literal init, fixed iterations,
     decimal-exact centroid sums, argmin ties to the lower cell - every
     number reproducible in DuckDB, so this query is hash-match
-    oracle-checked (upgraded from rows-only in round 4).  Production
-    callers wanting kmeans|| convergence keep similarity.ivf_topk
-    (Spark-ML fit, same query plan shape)."""
+    oracle-checked (upgraded from rows-only in round 4).  It is the
+    package's only k-means fit."""
     from aliyun_maxcompute_data_collectors_spark.operators.similarity import det_ivf_topk
     t = load_tables(spark, sf_dir, ["embeddings"])
     e = t["embeddings"]
@@ -454,7 +453,8 @@ def _cos_sql2(av: str, bv: str) -> str:
 
 def _km_dist_sql(ev: str, cv: str) -> str:
     """Squared L2 between a FLOAT[] and a DOUBLE[] - the same sequential
-    fold det_kmeans_assign_expr runs, so distances are IEEE-identical."""
+    fold the similarity._argmin_sq kernel runs, so distances are
+    IEEE-identical."""
     return (
         f"list_reduce(list_transform(list_zip({ev}, {cv}),"
         " x -> (CAST(x[1] AS DOUBLE) - x[2]) * (CAST(x[1] AS DOUBLE) - x[2])),"
@@ -1003,15 +1003,14 @@ ORDER BY id1, id2
 
 def semantic_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup semantics, exact: brute-force cosine pairs (n_clusters=1 =
-    one cell, no quantizer) -> transitive closure -> keep MIN-id
-    representative per group.  This is the oracle-checkable twin of
-    `semantic_dedup` (whose k-means blocking is centroid-dependent and
-    rows-only); the DuckDB oracle mirrors the full pipeline with a
+    one cell, no quantizer fit) -> transitive closure -> keep MIN-id
+    representative per group.  The unblocked twin of `semantic_dedup`
+    (k-means blocked); the DuckDB oracle mirrors the full pipeline with a
     recursive CTE."""
-    from aliyun_maxcompute_data_collectors_spark.operators.similarity import semantic_dedup
+    from aliyun_maxcompute_data_collectors_spark.operators.similarity import det_semantic_dedup
     t = load_tables(spark, sf_dir, ["embeddings"])
-    kept = semantic_dedup(t["embeddings"], "vec_id", "embedding",
-                          threshold=0.40, n_clusters=1)
+    kept = det_semantic_dedup(t["embeddings"], dim=64, threshold=0.40,
+                              n_clusters=1)
     return kept.select("vec_id")
 
 

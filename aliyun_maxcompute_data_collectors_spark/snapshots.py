@@ -1443,7 +1443,7 @@ class SnapshotTable:
         (``new=true``, pre-marked) plus EVERY row of the candidate
         files' current sidecars (``new=false``).  Per-file NEW counts
         then come from the staged parquet itself, read driver-side with
-        pyarrow (two tiny columns, bounded by MOR_MAX_NEW_POSITIONS +
+        pyarrow (three tiny columns, bounded by MOR_MAX_NEW_POSITIONS +
         fold size) - no second Spark job.
 
         The prior-position fold is deliberately UNFILTERED: restricting
@@ -1498,17 +1498,31 @@ class SnapshotTable:
             shaped = new_pos.coalesce(1) if single_task \
                 else new_pos.repartition(1)
         shaped.write.mode("errorifexists").parquet(stage)
+        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
         parts = [os.path.join(stage, f) for f in sorted(os.listdir(stage))
                  if f.endswith(".parquet")]
         per_file: dict[str, int] = {}
-        for p in parts:
-            t = pq.read_table(p, columns=["file", "new"])
-            vc = pc.value_counts(t["file"].filter(t["new"]))
-            for d in vc.to_pylist():
-                per_file[d["values"]] = (per_file.get(d["values"], 0)
-                                         + int(d["counts"]))
+        if parts:
+            t = pa.concat_tables(
+                pq.read_table(p, columns=["file", "row_index", "new"])
+                for p in parts)
+            t = t.filter(t["new"])
+            for d in pc.value_counts(t["file"]).to_pylist():
+                per_file[d["values"]] = int(d["counts"])
+            # a new position staged twice is one target row changed by
+            # two source rows (a merge run with validate_cardinality=
+            # False): it would delete one row but count two
+            if t.group_by(["file", "row_index"]).aggregate([]).num_rows \
+                    != t.num_rows:
+                shutil.rmtree(stage, ignore_errors=True)
+                raise SnapshotError(
+                    f"{self.path}: MERGE cardinality violation - a target "
+                    "row matches multiple source rows, so merge-on-read "
+                    "would stage its position twice; make the ON "
+                    "condition key-unique or pre-aggregate the source "
+                    "(e.g. newest_wins)")
         if not per_file:
             shutil.rmtree(stage, ignore_errors=True)
             return None, None

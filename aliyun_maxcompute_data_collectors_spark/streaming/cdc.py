@@ -214,7 +214,7 @@ def ivf_assign_ingest_writer(catalog, table: str, centers_table: str,
     """foreachBatch hook: streaming half of the build-once/assign-many ANN
     lifecycle.  ``centers_table`` holds the frozen coarse quantizer
     ``(cell int, center array<double>)`` (write it once from
-    similarity.det_kmeans / ivf_build); each arriving micro-batch of
+    similarity.det_kmeans); each arriving micro-batch of
     vectors is assigned to its nearest cell (vectorized sequential-fold
     kernel, bit-equal to the batch path) and appended to ``table`` as
     ``(id, vec, cell, dist)``.  Create ``table`` partitioned or bucketed
@@ -238,7 +238,7 @@ def ivf_assign_ingest_writer(catalog, table: str, centers_table: str,
             for r in catalog.read_table(centers_table).collect())
         if not centers_rows:
             raise ValueError(f"{centers_table} is empty - build the index "
-                             "first (det_kmeans/ivf_build)")
+                             "first (det_kmeans)")
         if [c for c, _v in centers_rows] != list(range(len(centers_rows))):
             raise ValueError(f"{centers_table} cells must be 0..k-1 dense")
         centers = [v for _c, v in centers_rows]

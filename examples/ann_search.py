@@ -1,6 +1,7 @@
 """ANN search over an embedding column, the amortized way: build the IVF
-index ONCE (k-means cells + centroids), persist the cells table bucketed by
-cell, then serve query batches against the prebuilt index.
+index ONCE (deterministic k-means cells + centroids, `det_kmeans`), persist
+the cells table partitioned by cell, then serve query batches against the
+prebuilt index with `ivf_query`.
 
 At 100 TB the k-means fit dominates; a single-call API would re-pay it per
 query batch.  The cells table written bucketed by `cell` makes each probe a
@@ -20,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from aliyun_maxcompute_data_collectors_spark.operators.similarity import (
-    cosine_topk, ivf_build, ivf_query)
+    cosine_topk, det_assign_fast, det_kmeans, ivf_query)
 from aliyun_maxcompute_data_collectors_spark.session import get_spark, load_tables
 
 
@@ -33,7 +34,8 @@ def main() -> None:
         emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
 
         # ---- offline: build + persist the index ------------------------
-        cells, centers = ivf_build(emb, n_clusters=16)
+        cells, centers = det_kmeans(emb, "vec_id", "embedding", dim=64,
+                                    n_clusters=16)
         cells.write.mode("overwrite").partitionBy("cell") \
             .parquet(os.path.join(out, "cells"))
         # centers are tiny - park them next to the cells
@@ -55,7 +57,6 @@ def main() -> None:
 
         # ---- maintenance: assign an arriving batch WITHOUT refitting ----
         # (the streaming twin is streaming/cdc.ivf_assign_ingest_writer)
-        from aliyun_maxcompute_data_collectors_spark.operators.similarity import det_assign_fast
         arriving = emb.where(F.col("vec_id") % 97 == 0) \
             .select(F.col("vec_id").alias("neighbor_id"),
                     F.col("embedding").alias("cv"))

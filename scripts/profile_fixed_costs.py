@@ -128,8 +128,10 @@ def prof_dedup(spark, reps: int = 3):
     """semantic_dedup phase breakdown: assignment, pairs, CC (with
     iteration count), anti-join."""
     import aliyun_maxcompute_data_collectors_spark.operators.graph as G
+    from aliyun_maxcompute_data_collectors_spark.operators.dedup import (
+        embedding_dup_pairs)
     from aliyun_maxcompute_data_collectors_spark.operators.similarity import (
-        cosine_fast, det_kmeans)
+        det_kmeans)
     from aliyun_maxcompute_data_collectors_spark.queries_llm import _coarse_centers
 
     for rep in range(reps):
@@ -141,16 +143,8 @@ def prof_dedup(spark, reps: int = 3):
                               centers=centers)
         cells = cells.localCheckpoint(eager=True)
         t.mark("assign+checkpoint")
-        a = cells.select("cell", F.col("neighbor_id").alias("id1"),
-                         F.col("cv").alias("v1"))
-        b = cells.select("cell", F.col("neighbor_id").alias("id2"),
-                         F.col("cv").alias("v2"))
-        pairs = (a.join(b, "cell")
-                 .where(F.col("id1") < F.col("id2"))
-                 .select("id1", "id2",
-                         F.round(cosine_fast(F.col("v1"), F.col("v2")), 6)
-                         .alias("cos"))
-                 .where(F.col("cos") >= 0.40))
+        pairs = embedding_dup_pairs(cells, "neighbor_id", "cv", 0.40,
+                                    block_col="cell")
         n_pairs = pairs.count()
         t.mark(f"pairs count (n={n_pairs})")
         comp = G.connected_components(pairs, "id1", "id2")

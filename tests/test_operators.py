@@ -15,7 +15,34 @@ from aliyun_maxcompute_data_collectors_spark.operators import dedup as D
 from aliyun_maxcompute_data_collectors_spark.operators.merge import merge_datasets
 from aliyun_maxcompute_data_collectors_spark.operators.multimodal import (
     decode_media, extract_features, with_blob_meta)
-from aliyun_maxcompute_data_collectors_spark.operators.similarity import cosine_topk, lsh_topk
+from aliyun_maxcompute_data_collectors_spark.operators.similarity import (
+    cosine_topk, dot_expr, lsh_topk, norm_expr)
+
+
+# Reference folds for the Arrow kernels (cosine_fast, det_assign_fast): the
+# JVM higher-order-function expressions the kernels replaced, kept here
+# unchanged as the bit-equality reference.
+
+def cosine_expr(a, b):
+    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
+
+
+def _sq_dist_expr(vec, center):
+    lits = F.array(*[F.lit(float(x)) for x in center])
+    return F.aggregate(
+        F.zip_with(vec, lits,
+                   lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)),
+        F.lit(0.0), lambda acc, x: acc + x)
+
+
+def det_kmeans_assign_best(vec, centers):
+    """Struct (d: squared distance, c: cell) of the argmin assignment, tie
+    -> lower cell (struct sort on (dist, cell) - the same ordering a
+    ROW_NUMBER() OVER (ORDER BY d, cell) oracle uses)."""
+    scored = F.array(*[
+        F.struct(_sq_dist_expr(vec, c).alias("d"), F.lit(ci).alias("c"))
+        for ci, c in enumerate(centers)])
+    return F.array_sort(scored)[0]
 
 
 def test_merge_new_beats_old_on_tie(spark):
@@ -564,14 +591,15 @@ def test_connected_components_driver_path_matches_distributed(spark):
 
 def test_ivf_topk_recall(spark, sf_dir):
     from aliyun_maxcompute_data_collectors_spark.operators.similarity import (
-        cosine_topk, ivf_topk)
+        cosine_topk, det_ivf_topk)
     from aliyun_maxcompute_data_collectors_spark.session import load_tables
     t = load_tables(spark, sf_dir, ["embeddings"])
     e = t["embeddings"]
     q = e.where(F.col("vec_id") < 5)
     exact = {(r["query_id"], r["neighbor_id"]) for r in cosine_topk(q, e, k=5).collect()}
     approx = {(r["query_id"], r["neighbor_id"]) for r in
-              ivf_topk(q, e, k=5, n_clusters=8, n_probe=4).collect()}
+              det_ivf_topk(q, e, dim=64, k=5, n_clusters=8,
+                           n_probe=4).collect()}
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, f"IVF recall too low: {recall}"
 
@@ -800,7 +828,7 @@ def test_semantic_dedup_matches_bruteforce(spark):
     # duplicate pairs; end-to-end keeps min-id representative per group
     import numpy as np
     from aliyun_maxcompute_data_collectors_spark.operators.similarity import (
-        semantic_dedup, semantic_dedup_pairs)
+        det_kmeans, det_semantic_dedup)
     rng = np.random.default_rng(7)
     base = rng.normal(size=(40, 16)).astype("float32")
     rows = []
@@ -813,17 +841,22 @@ def test_semantic_dedup_matches_bruteforce(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
     # single cluster == exact brute force: all planted pairs found
-    exact = semantic_dedup_pairs(df, threshold=0.99, n_clusters=1).collect()
+    exact = D.embedding_dup_pairs(df, "vec_id", "embedding", threshold=0.99,
+                                  allow_quadratic=True).collect()
     exact_pairs = {(r["id1"], r["id2"]) for r in exact}
     assert {(i, 100 + i) for i in range(10)} <= exact_pairs
 
-    # blocked variant keeps high recall on the planted pairs
-    blocked = semantic_dedup_pairs(df, threshold=0.99, n_clusters=4).collect()
+    # blocked variant (the pair join det_semantic_dedup runs over its
+    # k-means cells) keeps high recall on the planted pairs
+    cells, _ = det_kmeans(df, "vec_id", "embedding", dim=16, n_clusters=4)
+    blocked = D.embedding_dup_pairs(cells, "neighbor_id", "cv",
+                                    threshold=0.99,
+                                    block_col="cell").collect()
     got = {(r["id1"], r["id2"]) for r in blocked}
     planted = {(i, 100 + i) for i in range(10)}
     assert len(got & planted) >= 8  # perturbed twins land in the same cell
 
-    kept = semantic_dedup(df, threshold=0.99, n_clusters=1)
+    kept = det_semantic_dedup(df, dim=16, threshold=0.99, n_clusters=1)
     ids = {r["vec_id"] for r in kept.select("vec_id").collect()}
     assert all(100 + i not in ids for i in range(10))  # dup drops keep min id
     assert all(i in ids for i in range(10))
@@ -1304,7 +1337,7 @@ def test_ivf_assign_matches_full_fit_cells(spark, sf_dir):
     """Frozen-index assignment of vectors the fit HAS seen must reproduce
     the fit's own cells (assignment expr == det_kmeans final pass)."""
     from aliyun_maxcompute_data_collectors_spark.operators.similarity import (
-        det_kmeans, det_kmeans_assign_best)
+        det_kmeans)
     from aliyun_maxcompute_data_collectors_spark.session import load_tables
 
     e = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
@@ -1324,7 +1357,7 @@ def test_vectorized_fold_kernels_bit_equal(spark):
     import random as _r
 
     from aliyun_maxcompute_data_collectors_spark.operators.similarity import (
-        cosine_expr, cosine_fast, det_assign_fast, det_kmeans_assign_best)
+        cosine_fast, det_assign_fast)
 
     rng = _r.Random(5)
     dim = 16
@@ -1386,7 +1419,7 @@ def test_cosine_fast_on_sliced_batches(spark):
     import random as _r
 
     from aliyun_maxcompute_data_collectors_spark.operators.similarity import (
-        cosine_expr, cosine_fast)
+        cosine_fast)
 
     rng = _r.Random(11)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)],
@@ -1444,7 +1477,7 @@ def test_vectorized_kernels_null_semantics_match_fold(spark):
     double 0/0 is NULL, not NaN); det_assign_fast must yield (d NULL, c 0)
     for NULL/ragged vectors exactly as the struct-sort expression does."""
     from aliyun_maxcompute_data_collectors_spark.operators.similarity import (
-        cosine_expr, cosine_fast, det_assign_fast, det_kmeans_assign_best)
+        cosine_fast, det_assign_fast)
 
     rows = [(1, [1.0, 2.0], [2.0, 1.0]),
             (2, None, [1.0, 1.0]),

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from hypothesis import given, settings
+from hypothesis import Phase, given, settings
 from hypothesis import strategies as st
 
 _FULL_TIER = os.environ.get("SPARK_GRAFT_TEST_TIER", "").lower() == "full"
@@ -25,6 +25,12 @@ _FULL_TIER = os.environ.get("SPARK_GRAFT_TEST_TIER", "").lower() == "full"
 def _ex(n: int) -> int:
     """Example budget for a SPARK-BACKED property at the current tier."""
     return n if _FULL_TIER else max(5, n // 4)
+
+
+# Spark-backed properties skip hypothesis' shrink phase: every shrink step
+# replays a whole Spark example, so a red run spent 6-8 minutes shrinking
+# before it reported its first falsifying example
+_NO_SHRINK = tuple(p for p in Phase if p is not Phase.shrink)
 
 from aliyun_maxcompute_data_collectors_spark.operators import hashing as H
 from aliyun_maxcompute_data_collectors_spark.sources.jdbc import integer_splits
@@ -193,7 +199,7 @@ def _snapshot_step(t, op, before: list) -> list:
     st.integers(-50, 50),
     st.integers(-50, 50),
 )
-@settings(max_examples=_ex(12), deadline=None)
+@settings(max_examples=_ex(12), deadline=None, phases=_NO_SHRINK)
 def test_merge_into_matches_reference(spark, tmp_path_factory, tgt_rows,
                                       src_rows, del_below, upd_above):
     """``merge_into`` and ``SnapshotTable.merge`` in both publishing modes
@@ -266,7 +272,7 @@ def test_merge_into_matches_reference(spark, tmp_path_factory, tgt_rows,
              min_size=1, max_size=14, unique_by=lambda t: (t[0], t[1])),
     st.integers(0, 13),
 )
-@settings(max_examples=_ex(12), deadline=None)
+@settings(max_examples=_ex(12), deadline=None, phases=_NO_SHRINK)
 def test_scd2_incremental_equals_full_rebuild(spark, changelog, cut):
     """Any split of a changelog into (initial, later-batch) — including
     batches that are entirely 'late' — must converge to the same SCD2
@@ -291,7 +297,7 @@ def test_scd2_incremental_equals_full_rebuild(spark, changelog, cut):
     st.sampled_from([0.1, 0.2, 0.4]),
     st.integers(1, 6),
 )
-@settings(max_examples=_ex(10), deadline=None)
+@settings(max_examples=_ex(10), deadline=None, phases=_NO_SHRINK)
 def test_heavy_hitters_exact_under_random_skew(spark, raw, phi, nparts):
     """heavy_hitters returns EXACTLY the items with count >= phi*N for any
     item distribution, capacity default, and partitioning - the Misra-Gries
@@ -313,7 +319,7 @@ def test_heavy_hitters_exact_under_random_skew(spark, raw, phi, nparts):
                        st.integers(0, 2)),
              min_size=1, max_size=25, unique_by=lambda t: (t[0], t[1])),
 )
-@settings(max_examples=_ex(12), deadline=None)
+@settings(max_examples=_ex(12), deadline=None, phases=_NO_SHRINK)
 def test_funnel_matches_sequential_reference(spark, events):
     """funnel() equals a per-user sequential scan: step k's time is the
     earliest event of type k strictly after step k-1, for random event
@@ -351,7 +357,7 @@ def test_funnel_matches_sequential_reference(spark, events):
     st.lists(st.tuples(st.integers(-100, 100), st.integers(-50, 50)),
              min_size=1, max_size=20, unique_by=lambda t: t[0]),
 )
-@settings(max_examples=_ex(12), deadline=None)
+@settings(max_examples=_ex(12), deadline=None, phases=_NO_SHRINK)
 def test_prefixscan_matches_sequential_reference(spark, rows):
     """running_agg's __below/__upto over random distinct-keyed rows equal
     the sequential cumulative sum/max."""
@@ -381,7 +387,7 @@ def test_prefixscan_matches_sequential_reference(spark, rows):
              min_size=0, max_size=25),
     st.lists(st.text(alphabet="ab ", max_size=6), max_size=8),
 )
-@settings(max_examples=_ex(40), deadline=None)
+@settings(max_examples=_ex(40), deadline=None, phases=_NO_SHRINK)
 def test_incremental_exact_dedup_matches_reference(spark, batch_rows, hist_texts):
     """Incremental dedup == pure-python first-seen-wins reference: a batch
     row survives iff its normalized text is not in history and its id is
@@ -426,7 +432,7 @@ def test_incremental_exact_dedup_matches_reference(spark, batch_rows, hist_texts
     st.lists(st.text(alphabet="ab ", max_size=24), min_size=0, max_size=15),
     st.integers(min_value=1, max_value=4),
 )
-@settings(max_examples=_ex(30), deadline=None)
+@settings(max_examples=_ex(30), deadline=None, phases=_NO_SHRINK)
 def test_span_dedup_matches_reference(spark, texts, span_words):
     """span_dedup == pure-python sequential first-occurrence reference:
     walking docs in (id, pos) order and keeping each aligned window the
@@ -463,7 +469,7 @@ def test_span_dedup_matches_reference(spark, texts, span_words):
              min_size=1, max_size=20),
     st.integers(min_value=1, max_value=8),
 )
-@settings(max_examples=_ex(25), deadline=None)
+@settings(max_examples=_ex(25), deadline=None, phases=_NO_SHRINK)
 def test_weighted_sample_matches_reference(spark, weights, n):
     """weighted_sample == pure-python Efraimidis-Spirakis with the same
     md5-derived uniforms: identical ranked draw, not just the same bias."""
@@ -494,7 +500,7 @@ def test_weighted_sample_matches_reference(spark, weights, n):
                        st.sampled_from(["cc", "c4", "wiki"])),
              min_size=1, max_size=40),
 )
-@settings(max_examples=_ex(20), deadline=None)
+@settings(max_examples=_ex(20), deadline=None, phases=_NO_SHRINK)
 def test_ngram_novelty_invariants(spark, docs):
     """novelty in [0,1]; the minimum doc_id of every content group scores
     its grams as novel wherever that content's grams first appear there;
@@ -518,7 +524,7 @@ def test_ngram_novelty_invariants(spark, docs):
                        st.sampled_from(["cc", "c4", "wiki"])),
              min_size=1, max_size=40),
 )
-@settings(max_examples=_ex(20), deadline=None)
+@settings(max_examples=_ex(20), deadline=None, phases=_NO_SHRINK)
 def test_source_overlap_matches_set_reference(spark, docs):
     """source_overlap == pure-python set intersection counts per pair."""
     from collections import defaultdict
@@ -543,7 +549,7 @@ def test_source_overlap_matches_set_reference(spark, docs):
 
 
 @given(st.integers(2, 5), st.integers(1, 3))
-@settings(max_examples=_ex(10), deadline=None)
+@settings(max_examples=_ex(10), deadline=None, phases=_NO_SHRINK)
 def test_det_kmeans_partitions_all_rows(spark, k, n_iter):
     """Every vector gets exactly one cell in [0, k); cells reproduce on a
     second identical call (pure determinism, no RNG state)."""
@@ -569,7 +575,7 @@ def test_det_kmeans_partitions_all_rows(spark, k, n_iter):
                        st.integers(0, 3)),    # variant: extra suffix words
              min_size=2, max_size=25),
 )
-@settings(max_examples=_ex(15), deadline=None)
+@settings(max_examples=_ex(15), deadline=None, phases=_NO_SHRINK)
 def test_ngram_jaccard_matches_python_reference(spark, docs):
     """The r4 identical-content collapse + expansion must equal a direct
     python computation of shingle-set Jaccard over ALL doc pairs - for any
@@ -612,7 +618,7 @@ def test_ngram_jaccard_matches_python_reference(spark, docs):
                        st.integers(0, 3)),    # variant: extra suffix words
              min_size=2, max_size=25),
 )
-@settings(max_examples=_ex(15), deadline=None)
+@settings(max_examples=_ex(15), deadline=None, phases=_NO_SHRINK)
 def test_ngram_containment_matches_python_reference(spark, docs):
     """Containment through the shared collapse/expansion path must equal a
     direct python computation of |A∩B| / min(|A|,|B|) over ALL doc pairs."""
@@ -678,7 +684,7 @@ def _ref_substring_dedup(corpus: list[tuple[int, str]], k: int) -> dict:
 @given(st.lists(
     st.lists(st.sampled_from(["a", "b", "c"]), min_size=0, max_size=12),
     min_size=1, max_size=8))
-@settings(max_examples=_ex(12), deadline=None)
+@settings(max_examples=_ex(12), deadline=None, phases=_NO_SHRINK)
 def test_substring_dedup_matches_reference(spark, docs):
     import aliyun_maxcompute_data_collectors_spark.operators.dedup as D
 

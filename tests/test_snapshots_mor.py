@@ -465,6 +465,24 @@ def test_mor_merge_cdf_and_guards(spark, table):
                        matched=[(None, {"v": "s.v"})]) == head
 
 
+@pytest.mark.parametrize("mor", [False, True])
+def test_unvalidated_merge_refuses_a_twice_matched_row(spark, tmp_path, mor):
+    """With validate_cardinality=False (the cdc_apply_merge shape) a
+    target row matched by two source rows must abort the merge in both
+    modes - merge-on-read used to stage its position twice and commit
+    ``rows`` one too low - and leave the table at its pre-state."""
+    t = SnapshotTable.init(spark, str(tmp_path / "t"))
+    t.append(_df(spark, [(1, "a"), (2, "b")]).coalesce(1))
+    pre_rows = sorted(map(tuple, t.read().collect()))
+    pre_manifest = t.manifest()
+    src = _df(spark, [(1, "x"), (1, "y")])
+    with pytest.raises(SnapshotError):
+        t.merge(src, "t.id = s.id", matched=[(None, {"v": "s.v"})],
+                validate_cardinality=False, mor=mor)
+    assert sorted(map(tuple, t.read().collect())) == pre_rows
+    assert t.manifest() == pre_manifest
+
+
 def test_mor_cdc_writer_batches(spark, tmp_path):
     """The versioned CDC writer with mor=True: every trigger lands as a
     merge-mor commit (sidecar + appended images, no file rewrites) and
