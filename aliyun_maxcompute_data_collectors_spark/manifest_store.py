@@ -7,18 +7,20 @@ A snapshot table rooted at ``path`` keeps all metadata under
   staged by writers before any commit.  A stage no manifest references
   is invisible; ``vacuum`` collects it.
 - ``manifests/vNNNNNNNN.json``: one manifest per snapshot.
-- ``manifests/seg-NNNNNNNN-<uuid>.{json,parquet}``: immutable segment
-  side files that manifests reference.
+- ``manifests/seg-NNNNNNNN-<uuid>.parquet``: immutable segment side
+  files that manifests reference.
 - ``HEAD``: the current version number.
 - ``COMMIT_LOCK``: present only while a commit runs; it holds the
   writer's ``host:pid:starttime``.
 - ``clones/``: back-reference markers of shallow clones.
 
-Manifests and JSON segments are compact JSON, gzip'd (see
-``JSON_GZIP_LEVEL``) unless a segment carries bloom entries; files
+Manifests are compact JSON, gzip'd (see ``JSON_GZIP_LEVEL``); manifests
 written before that are plain JSON and read the same.  ``zcat -f``
-prints either form.  Nothing outside this module opens them:
-:meth:`ManifestStore.manifest_json` returns a manifest as stored.
+prints either form.  Segments are parquet; JSON segments (``.json``,
+gzip'd or plain), which older writers produced, are read, never
+written, and a fold rewrites them as parquet.  Nothing outside this
+module opens these files: :meth:`ManifestStore.manifest_json` returns a
+manifest as stored.
 
 MANIFEST FIELDS.  Every manifest has ``version``, ``parent`` (None for
 the first), ``operation``, ``rows`` (logical rows, deletion vectors
@@ -30,22 +32,33 @@ layouts:
   {column: [min, max]}; ``blooms`` maps path -> {column: bloom entry}.
 - stats-segmented (more than ``inline_stats_files`` statted entries):
   ``files`` is still inline, ``stats`` is {} and ``segments`` lists
-  side files holding ``{"stats", "blooms"}``.
+  side files holding the entries' stats and blooms.
 - file-segmented (more than ``inline_files`` paths): ``files`` and
   ``stats`` are empty; ``file_segments`` lists side files holding
-  ``{"files", "stats", "blooms"}`` (parquet once a segment holds
-  ``parquet_seg_min_files`` paths); ``removed_files`` lists paths
+  files with their stats and blooms; ``removed_files`` lists paths
   subtracted from those segments; ``segments`` may still carry
   stats-only side files from before the crossing.
 
+A parquet segment has one row per file: ``file`` (for a stats-only
+segment, the paths its entries belong to), ``s_lo:c``/``s_hi:c`` per
+stat column ``c`` in the column's one arrow type, and per bloomed
+column ``b_m:c`` (int64 m) and ``b_z:c`` (binary, the zlib bytes).  A
+stat column whose values do not share one exact arrow type is left out
+of the segment, with a warning, and never prunes.
+
 A bloom entry is ``{"m", "z"}``: an m-bit bitmap, bit p at bit ``p & 7``
 of byte ``p >> 3``, zlib-compressed and base64-encoded, so it costs
-about its set bits rather than m/8 bytes.  Parquet segments hold a
-bloomed column ``c`` as ``b_m:c`` (int64 m) and ``b_z:c`` (binary, the
-zlib bytes).  Legacy ``{"m", "hex"}`` entries and ``b_hex:c`` columns
-are still read and prune identically; a commit re-encodes every entry
-it rewrites (inline carry, new segment, fold).  An entry of any other
-shape never prunes.
+about its set bits rather than m/8 bytes.  Legacy ``{"m", "hex"}``
+entries and ``b_hex:c`` columns are still read and prune identically; a
+commit re-encodes every entry it rewrites (inline carry, new segment,
+fold).  An entry of any other shape never prunes.
+
+PRUNING.  :func:`prune_manifest_files` keeps a file unless some
+conjunct provably excludes it, by the file's [min, max] or, for an
+equality, its bloom.  One arrow kernel, :func:`_columnar_exclude`, runs
+over a (lo, hi) view of every source of stats: the inline ``stats``,
+each stats-only segment and each file segment.  It errs one way only:
+a case it cannot decide exactly keeps the file.
 
 ``dvs`` maps a data file to its live deletion vector ``{path, n}``: the
 sidecar holding the file's deleted row positions and their count.
@@ -173,30 +186,27 @@ def _fsync_write(path: str, payload: bytes | str) -> None:
     _rename_durable(tmp, path)
 
 
-# MANIFEST AND JSON-SEGMENT ENCODING: compact JSON (no indent, no
-# spaces), gzip'd with mtime 0 so equal metadata gives equal bytes.  A
-# manifest names each file's path in ``files``, ``stats``, ``blooms``,
-# ``dvs`` and ``delta``; gzip stores the repeats as back-references and
-# halves the manifest bytes a table keeps per version.  Level 1: on the
-# lakehouse_dml manifests level 6 saved 1% more.  A segment holding
-# bloom entries stays plain: its bulk is base64'd zlib bitmaps, which
-# gzip shrinks by only a third at ~40 MB/s (scripts/manifest_scale.py
-# --blooms: the COW commit of a 4k-file table took 4x longer).
+# MANIFEST ENCODING: compact JSON (no indent, no spaces), gzip'd with
+# mtime 0 so equal metadata gives equal bytes.  A manifest names each
+# file's path in ``files``, ``stats``, ``blooms``, ``dvs`` and ``delta``;
+# gzip stores the repeats as back-references and halves the manifest
+# bytes a table keeps per version.  Level 1: on the lakehouse_dml
+# manifests level 6 saved 1% more.
 JSON_GZIP_LEVEL = 1
 _GZIP_MAGIC = b"\x1f\x8b"
 
 
-def _encode_json(obj, gzipped: bool = True) -> bytes:
+def _encode_json(obj) -> bytes:
     # allow_nan=False: a non-finite stat slipping through would emit the
     # nonstandard NaN token other parsers reject - fail the write instead
     # (collect-time filtering + the carry-path _sanitize_stats sweep make
     # this unreachable)
     text = json.dumps(obj, separators=(",", ":"), allow_nan=False).encode()
-    return gzip.compress(text, JSON_GZIP_LEVEL, mtime=0) if gzipped else text
+    return gzip.compress(text, JSON_GZIP_LEVEL, mtime=0)
 
 
 def _read_json(path: str) -> tuple[dict, int]:
-    """(decoded object, decoded JSON bytes) of a manifest or JSON
+    """(decoded object, decoded JSON bytes) of a manifest or legacy JSON
     segment, gzip'd or - as written before gzip - plain."""
     with open(path, "rb") as f:
         raw = f.read()
@@ -366,9 +376,10 @@ MAX_SEGMENTS = 64
 
 # Segment cache, bounded by BYTES not entries (VERDICT r8 #4: 64 cached
 # 85 MB bloom segments = multi-GB driver RSS under an entry-count LRU).
-# A JSON segment is charged its decoded JSON bytes - proportional to the
-# in-memory footprint of these flat dicts; charging the gzip'd file,
-# several times smaller, would let the bound admit that much more.
+# A parquet segment is charged the arrow bytes of the columns it has
+# read; a legacy JSON segment its decoded JSON bytes - proportional to
+# the in-memory footprint of those flat dicts (charging the gzip'd file,
+# several times smaller, would let the bound admit that much more).
 # Segments are immutable once written (uuid-named, fsync-renamed), so
 # caching by path is safe for the process lifetime.
 SEG_CACHE_MAX_BYTES = 256 * 1024 * 1024
@@ -376,21 +387,6 @@ _SEG_CACHE: "_collections.OrderedDict[str, tuple[dict, int]]" = \
     _collections.OrderedDict()
 _SEG_CACHE_BYTES = 0
 _SEG_CACHE_LOCK = _threading.Lock()
-
-
-# PARQUET SEGMENTS (r10, VERDICT r9 #6): a 1e6-file JSON segment is
-# ~190 MB and json.load alone costs ~5s of every cold plan.  Segments
-# holding at least this many files are written as PARQUET side files
-# instead (columns: file path, per-stat-column lo/hi in their NATIVE
-# arrow types, per-bloom-column m/zlib bytes) - the Iceberg move from JSON-ish
-# to columnar manifests.  pyarrow reads them in ~0.1s and the prune
-# evaluates conjuncts VECTORIZED over the arrow arrays instead of one
-# dict lookup per file.  Small segments stay JSON (``zcat -f`` prints
-# them); readers dispatch on the file extension, so tables with
-# mixed generations read fine.  A stat column whose values cannot map
-# to one arrow type makes the whole segment fall back to JSON (never
-# silently coerce - e.g. int64 folded into float64 could mis-prune).
-PARQUET_SEG_MIN_FILES = 65536
 
 
 # STALE COMMIT-LOCK TTL (r10): the lock guards only the manifest write
@@ -428,24 +424,32 @@ class _Segment:
     """One immutable segment side file, decoded lazily.  Dict-compatible
     (``seg["files"]`` / ``seg.get("stats")``) so every existing consumer
     keeps working, but the expensive forms - the 1e6-entry stats dict,
-    the columnar arrays the vectorized prune wants - materialize only on
-    first use and are cached for the (process-lifetime) segment cache.
+    the columnar arrays the prune wants - materialize only on first use
+    and are cached for the (process-lifetime) segment cache.
 
     A parquet segment reads only its ``file`` column up front; the
     ``s_lo:``/``s_hi:`` stat columns and the ``b_m:``/``b_z:`` bloom
     columns are read when first used, so listing a table's files never
     loads its bloom bytes.  ``nbytes`` is what the segment holds in
-    memory (the decoded JSON bytes for JSON), and every column read
-    later is charged to the segment cache."""
+    memory (the decoded JSON bytes for a legacy JSON segment), and every
+    column read later is charged to the segment cache.
+
+    ``payload`` wraps metadata already in memory - a manifest's inline
+    ``{"stats", "blooms"}`` - in the JSON form, so the prune reads it
+    like any segment.  The rows of a payload without ``files`` (a
+    stats-only segment) are its entries' paths."""
 
     __slots__ = ("_path", "_json", "_names", "_cols", "nbytes", "_files",
                  "_stats", "_blooms", "_columnar")
 
-    def __init__(self, path: str):
+    def __init__(self, path: str | None, payload: dict | None = None):
         self._path = path
         self._files = self._stats = self._blooms = self._columnar = None
         self._cols: dict = {}
-        if path.endswith(".parquet"):
+        self._names = None
+        if payload is not None:
+            self._json, self.nbytes = payload, 0
+        elif path.endswith(".parquet"):
             import pyarrow.parquet as pq
             with pq.ParquetFile(path) as pf:
                 self._names = pf.schema_arrow.names
@@ -455,7 +459,6 @@ class _Segment:
             self.nbytes = t.nbytes
         else:
             self._json, self.nbytes = _read_json(path)
-            self._names = None
 
     @property
     def is_parquet(self) -> bool:
@@ -478,7 +481,8 @@ class _Segment:
         if not want:
             return
         import pyarrow.parquet as pq
-        t = pq.read_table(self._path, columns=want)
+        with pq.ParquetFile(self._path) as pf:
+            t = pf.read(columns=want)
         for n in want:
             self._cols[n] = t.column(n)
         self.nbytes += t.nbytes
@@ -504,13 +508,17 @@ class _Segment:
     @property
     def files(self) -> list[str]:
         if self._files is None:
-            if self._json is not None:
-                self._files = list(self._json.get("files") or [])
-            else:
+            if self._json is None:
                 # to_numpy + list() is ~7x faster than to_pylist for 1e6
                 # paths (0.1s vs 0.7s) and yields exact python str objects
                 self._files = list(
                     self.column("file").to_numpy(zero_copy_only=False))
+            elif "files" in self._json:
+                self._files = list(self._json["files"] or [])
+            else:
+                self._files = list(dict.fromkeys(
+                    [*(self._json.get("stats") or {}),
+                     *(self._json.get("blooms") or {})]))
         return self._files
 
     @property
@@ -541,67 +549,66 @@ class _Segment:
                 self._blooms = self._json.get("blooms") or {}
             else:
                 files = self.files
-                names = set(self._names)
                 out: dict[str, dict] = {}
                 self.load(self.names("b_"))
-                for name in self.names("b_m:"):
-                    c = name[len("b_m:"):]
-                    ms = self.column(name).to_pylist()
-                    if f"b_z:{c}" in names:
-                        zs = self.column(f"b_z:{c}").to_pylist()
-                        entries = [None if z is None else _bloom_z_entry(m, z)
-                                   for m, z in zip(ms, zs)]
-                    else:  # legacy segment: hex strings
-                        entries = [None if h is None else {"m": m, "hex": h}
-                                   for m, h in zip(
-                                       ms, self.column(f"b_hex:{c}")
-                                       .to_pylist())]
-                    for f, m, e in zip(files, ms, entries):
-                        if m is not None and e is not None:
+                for c in self._bloom_columns():
+                    for f, e in zip(files, self._parquet_bloom_entries(c)):
+                        if e is not None:
                             out.setdefault(f, {})[c] = e
                 self._blooms = out
         return self._blooms
 
+    def _bloom_columns(self) -> list[str]:
+        return [n[len("b_m:"):] for n in self.names("b_m:")]
+
+    def _parquet_bloom_entries(self, c: str, rows=None) -> list:
+        """The bloom entries of parquet column ``c`` at ``rows`` (every
+        row when None): ``{"m", "z"}``, or ``{"m", "hex"}`` from a
+        legacy ``b_hex:`` column; None where the row has none."""
+        legacy = f"b_z:{c}" not in self._names
+        ms, data = (self.column(f"b_m:{c}"),
+                    self.column(f"b_{'hex' if legacy else 'z'}:{c}"))
+        if rows is not None:
+            ms, data = ms.take(rows), data.take(rows)
+        out = []
+        for m, d in zip(ms.to_pylist(), data.to_pylist()):
+            if m is None or d is None:
+                out.append(None)
+            else:
+                out.append({"m": m, "hex": d} if legacy
+                           else _bloom_z_entry(m, d))
+        return out
+
     def columnar(self):
-        """(files, {col: (lo arrow array, hi arrow array)}, bloom col
-        set) for the vectorized prune.  Parquet segments slice their
-        native columns (zero decode); JSON segments build the arrays
-        once from the stats dict and cache them - a column whose decoded
-        values don't fit one arrow type is simply absent (the prune then
-        keeps every file on that column's conjuncts, which is safe)."""
+        """(files, {col: (lo, hi) arrow arrays}, bloom col set) for the
+        prune.  Parquet segments slice their native columns (zero
+        decode); JSON ones convert their stats dict once through the
+        writer's own conversion (:func:`_stat_columns`), so a column
+        prunes the same in either form, and cache the arrays."""
         if self._columnar is None:
-            import pyarrow as pa
             files = self.files
-            cols: dict[str, tuple] = {}
-            bloom_cols: set[str] = set()
             if self.is_parquet:
                 self.load(self.names("s_"))
+                cols = {}
                 for name in self.names("s_lo:"):
                     c = name[len("s_lo:"):]
                     cols[c] = (self.column(name).combine_chunks(),
                                self.column(f"s_hi:{c}").combine_chunks())
-                bloom_cols = {n[len("b_m:"):] for n in self.names("b_m:")}
+                bloom_cols = set(self._bloom_columns())
             else:
-                stats = self.stats
-                names = {c for s in stats.values() for c in (s or {})}
-                for c in names:
-                    lo, hi = [], []
-                    for f in files:
-                        iv = (stats.get(f) or {}).get(c)
-                        if iv is None:
-                            lo.append(None)
-                            hi.append(None)
-                        else:
-                            lo.append(_stat_from_json(iv[0]))
-                            hi.append(_stat_from_json(iv[1]))
-                    try:
-                        cols[c] = (pa.array(lo), pa.array(hi))
-                    except Exception:
-                        continue  # heterogeneous column: not vectorizable
+                cols, _ = _stat_columns(files, self.stats)
                 bloom_cols = {c for b in self.blooms.values()
                               for c in (b or {})}
             self._columnar = (files, cols, bloom_cols)
         return self._columnar
+
+    def bloom_entries(self, c: str, rows) -> list:
+        """The bloom entries on column ``c`` of the files at ``rows``
+        (None where a file has none); only those rows are decoded."""
+        if self.is_parquet:
+            return self._parquet_bloom_entries(c, rows)
+        blooms, files = self.blooms, self.files
+        return [(blooms.get(files[i]) or {}).get(c) for i in rows]
 
 
 def _load_segment(path: str) -> _Segment:
@@ -649,11 +656,22 @@ def _seg_cache_clear() -> None:
         _SEG_CACHE_BYTES = 0
 
 
-# exact python type -> arrow type for parquet segment stat columns.  One
-# column = one type, enforced: pyarrow's own inference would silently
-# promote mixed int/float to float64, and an int64 beyond 2^53 folded
-# into float64 can prune WRONG.  Anything else raises and the writer
-# falls back to a JSON segment.
+# PARQUET SEGMENTS (r10, VERDICT r9 #6; the only format written): a
+# 1e6-file JSON segment is ~190 MB and json.load alone costs ~5s of
+# every cold plan.  A segment is a parquet side file (columns: file
+# path, per-stat-column lo/hi in their NATIVE arrow types, per-bloom-
+# column m/zlib bytes) - the Iceberg move from JSON-ish to columnar
+# manifests.  pyarrow reads them in ~0.1s, the prune evaluates conjuncts
+# VECTORIZED over the arrow arrays, and bloom bitmaps are raw binary
+# instead of base64 text.  Readers dispatch on the file extension, so
+# tables holding JSON segments of older writers read fine.
+#
+# exact python type -> arrow type of a stat column.  One column = one
+# type, enforced: pyarrow's own inference would silently promote mixed
+# int/float to float64 (an int64 beyond 2^53 folded into float64 can
+# prune WRONG) and read naive and aware datetimes as one type.  Aware
+# datetimes are stored in UTC.  Anything else raises, and the column is
+# left out (it never prunes).
 def _stat_arrow_array(values):
     import pyarrow as pa
 
@@ -664,25 +682,29 @@ def _stat_arrow_array(values):
         raise TypeError(f"mixed stat types {kinds}")
     k = kinds.pop()
     explicit = {int: pa.int64(), float: pa.float64(), bool: pa.bool_(),
-                str: pa.string()}
+                str: pa.string(), _dt.date: pa.date32()}
     if k in explicit:
         return pa.array(values, explicit[k])
-    if k in (_dt.datetime, _dt.date):
-        return pa.array(values)  # arrow timestamp/date inference is exact
+    if k is _dt.datetime:
+        aware = {v.tzinfo is not None for v in values if v is not None}
+        if aware == {True}:
+            utc = _dt.timezone.utc
+            return pa.array([None if v is None else v.astimezone(utc)
+                             for v in values],
+                            pa.timestamp("us", "UTC"))
+        if aware == {False}:
+            return pa.array(values, pa.timestamp("us"))
+        raise TypeError("naive and aware timestamps in one column")
     raise TypeError(f"unsupported stat type {k}")
 
 
-def _write_parquet_segment(path: str, payload: dict) -> str:
-    """Columnar segment: file path + per-stat-column lo/hi (native arrow
-    types) + per-bloom-column m/zlib bytes.  Written atomically (tmp + rename),
-    same crash contract as the JSON form."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    files = payload["files"]
-    stats = payload.get("stats") or {}
-    blooms = payload.get("blooms") or {}
-    arrays: dict = {"file": pa.array(files, pa.string())}
+def _stat_columns(files: list, stats: dict) -> tuple[dict, list]:
+    """({column: (lo, hi) arrow arrays, one row per file}, [columns left
+    out]) of a stats dict.  lo and hi share one conversion, so both take
+    the column's one type; a missing or partial entry is null in both.
+    The conversion of every segment write and of every prune."""
+    n = len(files)
+    cols, dropped = {}, []
     for c in sorted({c for s in stats.values() for c in (s or {})}):
         lo, hi = [], []
         for f in files:
@@ -693,8 +715,36 @@ def _write_parquet_segment(path: str, payload: dict) -> str:
             else:
                 lo.append(_stat_from_json(iv[0]))
                 hi.append(_stat_from_json(iv[1]))
-        arrays[f"s_lo:{c}"] = _stat_arrow_array(lo)
-        arrays[f"s_hi:{c}"] = _stat_arrow_array(hi)
+        try:
+            # ArrowInvalid is a ValueError, ArrowTypeError a TypeError
+            both = _stat_arrow_array(lo + hi)
+        except (TypeError, ValueError, OverflowError):
+            dropped.append(c)
+            continue
+        cols[c] = (both[:n], both[n:])
+    return cols, dropped
+
+
+def _write_parquet_segment(path: str, payload: dict) -> str:
+    """Columnar segment: file path + per-stat-column lo/hi (native arrow
+    types) + per-bloom-column m/zlib bytes.  A payload without ``files``
+    (stats-only) gets one row per entry path.  Written atomically (tmp +
+    rename + directory fsync)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stats = payload.get("stats") or {}
+    blooms = payload.get("blooms") or {}
+    files = _Segment(None, payload).files
+    arrays: dict = {"file": pa.array(files, pa.string())}
+    cols, dropped = _stat_columns(files, stats)
+    if dropped:
+        _log.warning("segment %s leaves out stat columns %s: their values "
+                     "share no exact arrow type, so they never prune",
+                     path, dropped)
+    for c, (lo, hi) in cols.items():
+        arrays[f"s_lo:{c}"] = lo
+        arrays[f"s_hi:{c}"] = hi
     for c in sorted({c for b in blooms.values() for c in (b or {})}):
         ms, zs = [], []
         for f in files:
@@ -779,10 +829,13 @@ def live_bloom_columns(manifest: dict) -> tuple[list[str], int]:
             import pyarrow as pa
             import pyarrow.compute as pc
 
+            names = src.names("b_m:")
+            if not names:
+                continue
             if live_arr is None:
                 live_arr = pa.array(manifest["files"], pa.string())
             keep = pc.is_in(src.column("file"), live_arr)
-            for name in src.names("b_m:"):
+            for name in names:
                 note(name[4:], pc.max(src.column(name).filter(keep)).as_py())
             continue
         blooms = src.get("blooms") or {}
@@ -814,6 +867,235 @@ def _fold_entries(seg_paths: list[str], live: set, stats: dict,
                                  if f in live}), **blooms})
 
 
+# ---------------------------------------------------------------------------
+# pruning: one arrow kernel over every layout
+# ---------------------------------------------------------------------------
+
+_PRUNE_OPS = ("==", "=", "<", "<=", ">", ">=", "between")
+
+
+def _conjunct_list(where) -> list:
+    """One ``(col, op, value)`` conjunct or a list of them, as a list;
+    an op outside ``_PRUNE_OPS`` raises."""
+    conjuncts = [where] if isinstance(where, tuple) else list(where)
+    for _col, op, _value in conjuncts:
+        if op not in _PRUNE_OPS:
+            raise SnapshotError(f"unsupported prune op {op!r}")
+    return conjuncts
+
+
+# each op as the bounds a file's [lo, hi] must meet for a row to match:
+# (side, comparison, index of the literal in the value tuple)
+_OP_BOUNDS = {"==": (("lo", "<=", 0), ("hi", ">=", 0)),
+              "<": (("lo", "<", 0),), "<=": (("lo", "<=", 0),),
+              ">": (("hi", ">", 0),), ">=": (("hi", ">=", 0),),
+              "between": (("hi", ">=", 0), ("lo", "<=", 1))}
+_OP_BOUNDS["="] = _OP_BOUNDS["=="]
+_ARROW_CMP = {"<": "less", "<=": "less_equal", ">": "greater",
+              ">=": "greater_equal"}
+
+
+def _literal_scalar(t, v):
+    """``v`` as an arrow scalar that compares with a column of arrow
+    type ``t`` exactly as Python compares it with the column's values;
+    None when no such scalar exists (the bound then never prunes).  An
+    int past 2^53 does not meet a float64 column, nor a naive datetime
+    an aware one, nor a date a timestamp."""
+    import pyarrow as pa
+
+    if isinstance(v, bool):
+        ok = pa.types.is_boolean(t)
+    elif isinstance(v, int):
+        ok = pa.types.is_integer(t) or (pa.types.is_floating(t)
+                                        and abs(v) <= 1 << 53)
+    elif isinstance(v, float):
+        ok = pa.types.is_integer(t) or pa.types.is_floating(t)
+    elif isinstance(v, str):
+        ok = pa.types.is_string(t)
+    elif isinstance(v, _dt.datetime):
+        ok = pa.types.is_timestamp(t) and (
+            (t.tz is None) == (v.tzinfo is None))
+        if ok and v.tzinfo is not None:
+            v = v.astimezone(_dt.timezone.utc)
+    elif isinstance(v, _dt.date):
+        ok = pa.types.is_date32(t)
+    else:
+        ok = False
+    return pa.scalar(v) if ok else None
+
+
+def _columnar_exclude(lo, hi, op: str, value):
+    """Boolean numpy mask, True where a file is PROVABLY excluded by
+    ``col <op> value`` given per-file [lo, hi] arrow arrays of one type.
+    Missing stats (null) and NaN entries are never excluded; a numpy
+    literal compares as its python value.  None (keep every file) when
+    some bound cannot be compared exactly: a NaN literal, an infinite
+    one against integer stats, or a literal of another type
+    (:func:`_literal_scalar`); a literal past the column type's range
+    raises (OverflowError).  A float literal against integer stats
+    becomes the EQUIVALENT integer bound - arrow would promote the int64
+    arrays to float64, inexact past 2^53: lo <= v <=> lo <= floor(v);
+    lo < v <=> lo <= ceil(v)-1; hi >= v <=> hi >= ceil(v); hi > v <=>
+    hi >= floor(v)+1."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    vals = tuple(v.item() if isinstance(v, np.generic) else v
+                 for v in (value if op == "between" else (value,)))
+    if any(isinstance(v, float) and _math.isnan(v) for v in vals):
+        return None
+    sides = {"lo": lo, "hi": hi}
+    may = None
+    for side, cmp, i in _OP_BOUNDS[op]:
+        arr, v = sides[side], vals[i]
+        if (isinstance(v, float) and pa.types.is_integer(arr.type)):
+            if _math.isinf(v):
+                return None
+            cmp, v = {"<": ("<=", _math.ceil(v) - 1),
+                      "<=": ("<=", _math.floor(v)),
+                      ">": (">=", _math.floor(v) + 1),
+                      ">=": (">=", _math.ceil(v))}[cmp]
+        scalar = _literal_scalar(arr.type, v)
+        if scalar is None:
+            return None
+        b = getattr(pc, _ARROW_CMP[cmp])(arr, scalar)
+        may = b if may is None else pc.and_kleene(may, b)
+    excl = pc.fill_null(pc.invert(may), False)
+    for arr in (lo, hi):
+        if pa.types.is_floating(arr.type):
+            excl = pc.and_(excl, pc.invert(pc.fill_null(pc.is_nan(arr),
+                                                        False)))
+    return excl.to_numpy(zero_copy_only=False)
+
+
+def _bloom_position(value, m: int) -> int | None:
+    """Bit position of ``value`` in an m-bit bloom - MUST mirror the
+    Spark expression in ``SnapshotTable._collect_blooms`` exactly
+    (md5 of the CAST-to-string rendering).  Only int/str values render
+    identically in Python and Spark; anything else returns None and the
+    bloom is skipped for that conjunct (prune stays safe)."""
+    import hashlib
+
+    if isinstance(value, bool) or not isinstance(value, (int, str)):
+        return None
+    h = hashlib.md5(str(value).encode()).hexdigest()[:8]
+    return int(h, 16) % m
+
+
+def _bloom_excludes(entry, value) -> bool:
+    """Does a file's bloom ``entry`` prove ``value`` absent?  An entry of
+    unknown shape never excludes."""
+    m = entry.get("m") if isinstance(entry, dict) else None
+    if not isinstance(m, int) or isinstance(m, bool) or m <= 0:
+        return False
+    pos = _bloom_position(value, m)
+    if pos is None:
+        return False
+    bits = bloom_bitmap(entry)
+    return bits is not None and not bloom_may_contain(bits, pos)
+
+
+_BLOOM_LITERAL_TYPES = {"byte": int, "short": int, "integer": int,
+                        "long": int, "string": str}
+
+
+def _bloom_literal_types(manifest: dict) -> dict[str, type]:
+    """{column: the only literal type a bloom on it may test}.  Spark
+    casts before comparing (``"07"`` equals 7 on a bigint column, ``7``
+    equals ``"00007"`` on a string one) while a bloom hashes renderings,
+    so only an ``int`` on an integral or a ``str`` on a plain string
+    column hashes as its matches do.  No schema, no bloom prune."""
+    if not manifest.get("schema"):
+        return {}
+    return {f["name"]: _BLOOM_LITERAL_TYPES[f["type"]]
+            for f in json.loads(manifest["schema"]).get("fields", [])
+            if isinstance(f.get("type"), str)
+            and f["type"] in _BLOOM_LITERAL_TYPES}
+
+
+def _segment_excludes(seg: _Segment, conjuncts: list, types: dict):
+    """(the segment's rows, numpy mask of the rows some conjunct
+    provably excludes, or None when none is).  Intervals go through
+    :func:`_columnar_exclude`; an equality whose literal has the type
+    ``types`` allows the column's bloom then probes only the rows the
+    intervals kept."""
+    import numpy as np
+
+    files, cols, bloom_cols = seg.columnar()
+    excl = None
+    probes = []
+    for col, op, value in conjuncts:
+        pair = cols.get(col)
+        if pair is not None:
+            try:
+                e = _columnar_exclude(pair[0], pair[1], op, value)
+            except (OverflowError, NotImplementedError, TypeError,
+                    ValueError):
+                # a literal past the column type's range, or a pair
+                # arrow cannot compare: never prune
+                e = None
+            if e is not None:
+                excl = e if excl is None else excl | e
+        if (op in ("==", "=") and col in bloom_cols
+                and type(value) is types.get(col)):
+            probes.append((col, value))
+    if probes:
+        excl = (np.zeros(len(files), dtype=bool) if excl is None
+                else excl.copy())
+        for col, value in probes:
+            rows = np.flatnonzero(~excl)
+            hit = [_bloom_excludes(e, value)
+                   for e in seg.bloom_entries(col, rows)]
+            excl[rows[np.asarray(hit, dtype=bool)]] = True
+    return files, excl
+
+
+def prune_manifest_files(manifest: dict, conjuncts: list) -> list[str]:
+    """The live files ``conjuncts`` may match, in manifest order,
+    session-free (also the Python Data Source planner's, in
+    sources/pyds.py): a file is dropped when SOME conjunct provably
+    excludes it - by its [min, max] interval or, for an equality whose
+    literal has the column's type (:func:`_bloom_literal_types`), by its
+    BLOOM bitmap (point lookups on columns whose ranges overlap across
+    files, the case intervals can't prune).  Missing stats keep the
+    file.  An op outside ``_PRUNE_OPS`` raises whatever the layout.
+
+    Every source of stats - the inline ``stats``/``blooms``, each
+    stats-only segment and each file segment - is one arrow view that
+    :func:`_segment_excludes` evaluates with one kernel call per
+    (source, conjunct).  On a file-segmented manifest the live list is
+    the segments' files minus ``removed_files``, and only the files a
+    segment keeps are visited in python."""
+    import numpy as np
+
+    conjuncts = _conjunct_list(conjuncts)
+    if not conjuncts:
+        return list(manifest["files"])
+    types = _bloom_literal_types(manifest)
+    dropped: set = set()
+    sources = [_load_segment(p) for p in manifest.get("segments") or []]
+    if manifest.get("stats") or manifest.get("blooms"):
+        sources.append(_Segment(None, {"stats": manifest.get("stats"),
+                                       "blooms": manifest.get("blooms")}))
+    for seg in sources:
+        files, excl = _segment_excludes(seg, conjuncts, types)
+        if excl is not None:
+            dropped.update(files[i] for i in np.flatnonzero(excl))
+    fsegs = manifest.get("file_segments") or []
+    if not fsegs:
+        return [f for f in manifest["files"] if f not in dropped]
+    dropped.update(manifest.get("removed_files") or ())
+    kept: list[str] = []
+    for p in fsegs:
+        files, excl = _segment_excludes(_load_segment(p), conjuncts, types)
+        if excl is not None:
+            files = [files[i] for i in np.flatnonzero(~excl)]
+        kept.extend([f for f in files if f not in dropped] if dropped
+                    else files)
+    return kept
+
+
 _BASE = object()  # commit(onto=...) default: the commit lands on base itself
 
 
@@ -821,7 +1103,7 @@ class ManifestStore:
     """The metadata of one snapshot table: HEAD, manifests, segments and
     the commit lock (format and invariants in the module docstring).
 
-    The five thresholds shape only how commits lay metadata out; None
+    The four thresholds shape only how commits lay metadata out; None
     late-binds to the module constant at commit time.  Stores with
     different thresholds read each other's tables."""
 
@@ -829,15 +1111,13 @@ class ManifestStore:
                  inline_files: int | None = None,
                  inline_stats_files: int | None = None,
                  max_segments: int | None = None,
-                 removed_files_max: int | None = None,
-                 parquet_seg_min_files: int | None = None):
+                 removed_files_max: int | None = None):
         self.path = path
         self.root = os.path.join(path, "_snapshots")
         self._inline_files = inline_files
         self._inline_stats_files = inline_stats_files
         self._max_segments = max_segments
         self._removed_files_max = removed_files_max
-        self._parquet_seg_min_files = parquet_seg_min_files
         if not os.path.isdir(self.root):
             raise SnapshotError(
                 f"{path} is not a snapshot table (no _snapshots dir); "
@@ -874,11 +1154,6 @@ class ManifestStore:
     def removed_files_max(self) -> int:
         v = self._removed_files_max
         return REMOVED_FILES_MAX if v is None else v
-
-    @property
-    def parquet_seg_min_files(self) -> int:
-        v = self._parquet_seg_min_files
-        return PARQUET_SEG_MIN_FILES if v is None else v
 
     # -- reads ---------------------------------------------------------------
     def manifest_path(self, version: int) -> str:
@@ -1109,28 +1384,9 @@ class ManifestStore:
         return fd
 
     def write_segment(self, version: int, payload: dict) -> str:
-        base = os.path.join(self.root, "manifests",
-                            f"seg-{version:08d}-{uuid.uuid4().hex}")
-        files = payload.get("files") or []
-        if len(files) >= self.parquet_seg_min_files:
-            import pyarrow as pa
-            try:
-                return _write_parquet_segment(base + ".parquet", payload)
-            except (TypeError, pa.lib.ArrowInvalid, pa.lib.ArrowTypeError,
-                    pa.lib.ArrowNotImplementedError) as e:
-                # untypeable stat column (mixed python types, exotic
-                # arrow type): JSON keeps exactness.  Narrow + logged
-                # (VERDICT r10 #2: a blanket except here would silently
-                # degrade EVERY future segment to JSON on a pyarrow
-                # regression - correctness survives but the 0.287 s
-                # cold plan becomes seconds with zero signal).
-                _log.warning(
-                    "parquet segment fallback to JSON for %s (%d files): %s",
-                    base, len(files), e)
-        seg = base + ".json"
-        _fsync_write(seg, _encode_json(payload,
-                                       gzipped=not payload.get("blooms")))
-        return seg
+        return _write_parquet_segment(os.path.join(
+            self.root, "manifests",
+            f"seg-{version:08d}-{uuid.uuid4().hex}.parquet"), payload)
 
     def commit(self, base: dict | None, operation: str, *, rows: int,
                add: list[str] = (), stats: dict | None = None,

@@ -16,8 +16,6 @@ Registered into the driver registry by ``queries.register_analytics_ops``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -547,9 +545,8 @@ ORDER BY tok
 # driver instead of through native WITH RECURSIVE (whose per-step join +
 # scheduling fixed cost dominates at small scale).  64 MB of parquet keys
 # is orders of magnitude past where fixed cost dominates; beyond it the
-# native distributed recursion runs unchanged.  Env-overridable.
-RECURSIVE_DRIVER_MAX_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_RECURSIVE_DRIVER_MAX_BYTES", str(64 << 20)))
+# native distributed recursion runs unchanged.
+RECURSIVE_DRIVER_MAX_BYTES = 64 << 20
 
 _RECURSIVE_SQL = """
 WITH RECURSIVE chain (root, node, depth) AS (

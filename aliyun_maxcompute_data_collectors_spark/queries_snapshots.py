@@ -1687,12 +1687,12 @@ WHERE o_orderkey % 10 < 8 AND o_orderkey % 10 <> 6
 
 def snapshot_parquet_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PARQUET manifest segments e2e under the oracle (r10, VERDICT r9
-    #6): with per-instance thresholds (``inline_files=2``,
-    ``parquet_seg_min_files=1`` - no module-global mutation) four
-    single-file appends cross into file-list segmentation with every
-    segment written as a PARQUET side file (native-typed stat columns),
-    a COW DELETE rides the removal list over the parquet segments, the
-    vectorized arrow-kernel prune must keep exactly one file for a
+    #6): with a per-instance threshold (``inline_files=2`` - no
+    module-global mutation) four single-file appends cross into
+    file-list segmentation, every segment a PARQUET side file (the only
+    format written; native-typed stat columns), a COW DELETE rides the
+    removal list over the parquet segments, the arrow-kernel prune
+    must keep exactly one file for a
     point predicate, ``consolidate_metadata`` folds parquet->parquet,
     and ``vacuum`` keeps the live segment.  The hash pins the post-DML
     aggregate plus the metadata shape: zero inline paths, ONE parquet
@@ -1705,7 +1705,7 @@ def snapshot_parquet_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey", "o_totalprice")
         m10 = F.col("o_orderkey") % 10
         tab = SnapshotTable.init(spark, _os.path.join(root, "t"),
-                                 inline_files=2, parquet_seg_min_files=1)
+                                 inline_files=2)
         tab.append(o.where(m10 < 5).coalesce(1))
         tab.append(o.where((m10 >= 5) & (m10 < 8)).coalesce(1))
         tab.append(o.where(m10 == 8).coalesce(1))   # crosses: segmented

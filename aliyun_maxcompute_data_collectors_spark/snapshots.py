@@ -51,21 +51,21 @@ from aliyun_maxcompute_data_collectors_spark.manifest_store import (  # noqa: F4
     INLINE_FILES,
     INLINE_STATS_FILES,
     MAX_SEGMENTS,
-    PARQUET_SEG_MIN_FILES,
     REMOVED_FILES_MAX,
     SEG_CACHE_MAX_BYTES,
     ManifestStore,
     SnapshotConflict,
     SnapshotError,
+    _bloom_position,
+    _conjunct_list,
     _fsync_write,
     _load_segment,
     _seg_cache_clear,
     _stat_from_json,
     _stat_to_json,
-    bloom_bitmap,
     bloom_entry,
-    bloom_may_contain,
     live_bloom_columns,
+    prune_manifest_files,
     resolve_stats,
     retry_on_conflict,
 )
@@ -86,8 +86,6 @@ _log = logging.getLogger(__name__)
 # on that column (all-null chunks, legacy manifests) - skipping is an IO
 # optimization, not a correctness gate, and the residual filter is always
 # applied to the returned DataFrame.
-
-import math as _math  # noqa: E402
 
 
 def _collect_file_stats(path: str) -> dict[str, list]:
@@ -124,19 +122,6 @@ def _collect_file_stats(path: str) -> dict[str, list]:
                     _stat_to_json(min(a0, _stat_from_json(lo))),
                     _stat_to_json(max(a1, _stat_from_json(hi)))]
     return {k: v for k, v in acc.items() if v is not None}
-
-
-_PRUNE_OPS = ("==", "=", "<", "<=", ">", ">=", "between")
-
-
-def _conjunct_list(where) -> list:
-    """One ``(col, op, value)`` conjunct or a list of them, as a list;
-    an op outside ``_PRUNE_OPS`` raises."""
-    conjuncts = [where] if isinstance(where, tuple) else list(where)
-    for _col, op, _value in conjuncts:
-        if op not in _PRUNE_OPS:
-            raise SnapshotError(f"unsupported prune op {op!r}")
-    return conjuncts
 
 
 def _conjunct_column(col: str, op: str, value):
@@ -283,10 +268,8 @@ MOR_MAX_NEW_POSITIONS = 10_000_000
 # metadata, driver-side, touched files only) refuses with a pointer at
 # compact() / mor=False instead: past ~half-dead, copy-on-write
 # rewriting the file IS the cheaper plan and the read tax stops
-# compounding.  Env-tunable for tables whose DML/compaction cadence
-# differs.
-MOR_MAX_DV_FRACTION = float(os.environ.get(
-    "SPARK_GRAFT_MOR_MAX_DV_FRACTION", "0.5"))
+# compounding.
+MOR_MAX_DV_FRACTION = 0.5
 
 # Memoized hadoop.fs.Path.toString renderings (r13): keyed on the RAW
 # inputFiles() string, a pure function of it - see _rendered_paths.
@@ -317,258 +300,6 @@ def _sidecar_rows(path: str) -> int:
 
 
 _SIDECAR_ROWS_CACHE: dict = {}
-
-
-
-
-def _columnar_exclude(lo, hi, op: str, value):
-    """Vectorized twin of :func:`_interval_may_match`: boolean numpy
-    mask, True where a file is PROVABLY excluded by ``col <op> value``
-    given per-file [lo, hi] arrow arrays.  Missing stats (null) and NaN
-    entries are never excluded; returns None (caller keeps every file)
-    for the cases the scalar path resolves to "never prune": NaN
-    operands, float-vs-integer-column comparisons that float64
-    promotion could get wrong, incomparable types (arrow raises, the
-    caller catches)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    vals = list(value) if op == "between" else [value]
-    if any(isinstance(v, float) and _math.isnan(v) for v in vals):
-        return None
-    if pa.types.is_floating(lo.type) and any(
-            isinstance(v, int) and abs(v) > (1 << 53) for v in vals):
-        return None  # int64 -> float64 promotion would lose exactness
-    if pa.types.is_integer(lo.type) and any(
-            isinstance(v, float) for v in vals):
-        # float literal vs integer stats: arrow would promote the int64
-        # arrays to float64 (inexact past 2^53); rewrite each bound to
-        # the EQUIVALENT integer comparison instead - exact parity with
-        # python's scalar semantics.  lo <= v <=> lo <= floor(v);
-        # hi >= v <=> hi >= ceil(v); lo < v <=> lo <= ceil(v)-1;
-        # hi > v <=> hi >= floor(v)+1.
-        if any(isinstance(v, float) and _math.isinf(v) for v in vals):
-            return None  # floor/ceil of inf: just keep (prune is opt-in)
-        if op in ("==", "="):
-            may = pc.and_kleene(
-                pc.less_equal(lo, pa.scalar(_math.floor(value))),
-                pc.greater_equal(hi, pa.scalar(_math.ceil(value))))
-        elif op == "<":
-            may = pc.less_equal(lo, pa.scalar(_math.ceil(value) - 1))
-        elif op == "<=":
-            may = pc.less_equal(lo, pa.scalar(_math.floor(value)))
-        elif op == ">":
-            may = pc.greater_equal(hi, pa.scalar(_math.floor(value) + 1))
-        elif op == ">=":
-            may = pc.greater_equal(hi, pa.scalar(_math.ceil(value)))
-        elif op == "between":
-            a, b = value
-            may = pc.and_kleene(
-                pc.greater_equal(hi, pa.scalar(_math.ceil(a))),
-                pc.less_equal(lo, pa.scalar(_math.floor(b))))
-        else:
-            raise SnapshotError(f"unsupported prune op {op!r}")
-    elif op in ("==", "="):
-        may = pc.and_kleene(pc.less_equal(lo, pa.scalar(value)),
-                            pc.greater_equal(hi, pa.scalar(value)))
-    elif op == "<":
-        may = pc.less(lo, pa.scalar(value))
-    elif op == "<=":
-        may = pc.less_equal(lo, pa.scalar(value))
-    elif op == ">":
-        may = pc.greater(hi, pa.scalar(value))
-    elif op == ">=":
-        may = pc.greater_equal(hi, pa.scalar(value))
-    elif op == "between":
-        a, b = value
-        may = pc.and_kleene(pc.greater_equal(hi, pa.scalar(a)),
-                            pc.less_equal(lo, pa.scalar(b)))
-    else:
-        raise SnapshotError(f"unsupported prune op {op!r}")
-    excl = pc.fill_null(pc.invert(may), False)
-    for arr in (lo, hi):
-        if pa.types.is_floating(arr.type):
-            nan = pc.fill_null(pc.is_nan(arr), False)
-            excl = pc.and_(excl, pc.invert(nan))
-    return excl.to_numpy(zero_copy_only=False)
-
-
-def _bloom_excludes(fblooms: dict, col: str, value, decoded: dict) -> bool:
-    """Does the file's bloom on ``col`` prove ``value`` absent?
-    ``decoded`` memoizes this file's bitmaps by column, so an entry is
-    decompressed at most once however many conjuncts probe it.  An
-    entry of unknown shape never excludes."""
-    bl = fblooms.get(col)
-    m = bl.get("m") if isinstance(bl, dict) else None
-    if not isinstance(m, int) or isinstance(m, bool) or m <= 0:
-        return False
-    pos = _bloom_position(value, m)
-    if pos is None:
-        return False
-    if col not in decoded:
-        decoded[col] = bloom_bitmap(bl)
-    bits = decoded[col]
-    return bits is not None and not bloom_may_contain(bits, pos)
-
-
-def _interval_may_match(lo, hi, op: str, value) -> bool:
-    """Can any row with col in [lo, hi] satisfy ``col <op> value``?
-    NULL rows never satisfy a comparison, so value-interval logic is
-    null-safe.  Any NaN operand makes every comparison below return
-    False, which would WRONGLY prune - never prune on NaN (ADVICE r7:
-    legacy manifests may carry NaN stats; new commits disqualify the
-    column at collect time)."""
-    ops = [lo, hi] + (list(value) if op == "between" else [value])
-    if any(isinstance(v, float) and _math.isnan(v) for v in ops):
-        return True
-    try:
-        if op in ("==", "="):
-            return lo <= value <= hi
-        if op == "<":
-            return lo < value
-        if op == "<=":
-            return lo <= value
-        if op == ">":
-            return hi > value
-        if op == ">=":
-            return hi >= value
-        if op == "between":
-            a, b = value
-            return not (hi < a or lo > b)
-    except TypeError:
-        return True  # incomparable literal type - never prune on it
-    raise SnapshotError(f"unsupported prune op {op!r}")
-
-
-def _bloom_position(value, m: int) -> int | None:
-    """Bit position of ``value`` in an m-bit bloom - MUST mirror the
-    Spark expression in ``SnapshotTable._collect_blooms`` exactly
-    (md5 of the CAST-to-string rendering).  Only int/str values render
-    identically in Python and Spark; anything else returns None and the
-    bloom is skipped for that conjunct (prune stays safe)."""
-    import hashlib
-
-    if isinstance(value, bool) or not isinstance(value, (int, str)):
-        return None
-    h = hashlib.md5(str(value).encode()).hexdigest()[:8]
-    return int(h, 16) % m
-
-
-_BLOOM_LITERAL_TYPES = {"byte": int, "short": int, "integer": int,
-                        "long": int, "string": str}
-
-
-def _bloom_literal_types(manifest: dict) -> dict[str, type]:
-    """{column: the only literal type a bloom on it may test}.  Spark
-    casts before comparing (``"07"`` equals 7 on a bigint column, ``7``
-    equals ``"00007"`` on a string one) while a bloom hashes renderings,
-    so only an ``int`` on an integral or a ``str`` on a plain string
-    column hashes as its matches do.  No schema, no bloom prune."""
-    if not manifest.get("schema"):
-        return {}
-    return {f["name"]: _BLOOM_LITERAL_TYPES[f["type"]]
-            for f in json.loads(manifest["schema"]).get("fields", [])
-            if isinstance(f.get("type"), str)
-            and f["type"] in _BLOOM_LITERAL_TYPES}
-
-
-def prune_manifest_files(manifest: dict, conjuncts: list) -> list[str]:
-    """Manifest-stats file pruning, session-free (also used by the
-    Python Data Source planner in sources/pyds.py): keep a file unless
-    SOME conjunct provably excludes it - by [min, max] interval, or for
-    equality conjuncts by the file's BLOOM bitmap when one was built
-    (point lookups on columns whose ranges overlap across files - the
-    case intervals can't prune) and the literal's type matches the
-    column's (:func:`_bloom_literal_types`).  Missing stats keep the
-    file.
-
-    On a file-list-segmented manifest the conjuncts evaluate VECTORIZED
-    over each segment's arrow stat arrays (r10, VERDICT r9 #6) - one
-    compute kernel per (segment, conjunct) instead of a python dict
-    lookup per file; blooms are then checked only for interval
-    survivors.  The inline layout keeps the exact scalar loop."""
-    fsegs = manifest.get("file_segments") or []
-    if fsegs and not (manifest.get("stats") or manifest.get("segments")
-                      or manifest.get("blooms")):
-        return _prune_segmented(manifest, fsegs, conjuncts)
-    stats, blooms = resolve_stats(manifest)
-    types = _bloom_literal_types(manifest)
-    kept = []
-    for f in manifest["files"]:
-        fstats = stats.get(f) or {}
-        fblooms = blooms.get(f) or {}
-        decoded: dict = {}
-        keep = True
-        for col, op, value in conjuncts:
-            iv = fstats.get(col)
-            if iv is not None:
-                lo, hi = _stat_from_json(iv[0]), _stat_from_json(iv[1])
-                if not _interval_may_match(lo, hi, op, value):
-                    keep = False
-                    break
-            if (op in ("==", "=") and type(value) is types.get(col)
-                    and _bloom_excludes(fblooms, col, value, decoded)):
-                keep = False  # definitely absent from this file
-                break
-        if keep:
-            kept.append(f)
-    return kept
-
-
-def _prune_segmented(manifest: dict, fsegs: list[str],
-                     conjuncts: list) -> list[str]:
-    """Vectorized prune over file segments.  Parity contract with the
-    scalar loop: a file is dropped only when some conjunct PROVABLY
-    excludes it; any case the kernels cannot resolve exactly
-    (incomparable types, NaN, mixed-type columns) keeps the file - the
-    residual filter downstream makes results exact either way.  The
-    op-validity check runs first so unsupported ops still raise."""
-    _conjunct_list(conjuncts)
-    removed = set(manifest.get("removed_files") or [])
-    types = _bloom_literal_types(manifest)
-    kept: list[str] = []
-    for seg_path in fsegs:
-        seg = _load_segment(seg_path)
-        files, cols, bloom_cols = seg.columnar()
-        excl = None
-        bloom_conjs = []
-        for col, op, value in conjuncts:
-            pair = cols.get(col)
-            if pair is not None:
-                try:
-                    e = _columnar_exclude(pair[0], pair[1], op, value)
-                except SnapshotError:
-                    raise
-                except Exception:
-                    e = None  # incomparable types: never prune
-                if e is not None:
-                    excl = e if excl is None else (excl | e)
-            if (op in ("==", "=") and col in bloom_cols
-                    and type(value) is types.get(col)):
-                bloom_conjs.append((col, value))
-        if excl is None and not bloom_conjs:
-            if removed:
-                kept.extend(f for f in files if f not in removed)
-            else:
-                kept.extend(files)
-            continue
-        if excl is None:
-            idx = range(len(files))
-        else:
-            import numpy as np
-            idx = np.nonzero(~excl)[0]
-        blooms = seg.blooms if bloom_conjs else {}
-        for i in idx:
-            f = files[i]
-            if f in removed:
-                continue
-            if bloom_conjs:
-                fb, decoded = blooms.get(f) or {}, {}
-                if any(_bloom_excludes(fb, c, v, decoded)
-                       for c, v in bloom_conjs):
-                    continue
-            kept.append(f)
-    return kept
 
 
 def _clause_codes(clauses: list, tag: str):
@@ -712,7 +443,7 @@ class SnapshotTable:
 
     def __init__(self, spark: SparkSession, path: str, **thresholds):
         # ``thresholds`` (inline_files, inline_stats_files, max_segments,
-        # removed_files_max, parquet_seg_min_files) are per-instance
+        # removed_files_max) are per-instance
         # (VERDICT r9 #5: no module-global mutation); they shape only
         # how commits lay metadata out - see ManifestStore
         self.spark = spark

@@ -77,11 +77,11 @@ from pyspark.sql.types import StructType
 from aliyun_maxcompute_data_collectors_spark.manifest_store import (
     ManifestStore,
     SnapshotError,
+    prune_manifest_files,
     retry_on_conflict,
 )
 from aliyun_maxcompute_data_collectors_spark.snapshots import (
     _collect_file_stats,
-    prune_manifest_files,
     unify_schemas,
 )
 
@@ -692,14 +692,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
             return v, off["file"]
         return v, len(self._entries(tab, v, enforce_policy=False))
 
-    def _trace(self, msg: str) -> None:
-        p = os.environ.get("GRAFT_PYDS_TRACE")
-        if p:
-            with open(p, "a") as fh:
-                fh.write(f"pid={os.getpid()} id={id(self) % 100000} {msg}\n")
-
     def initialOffset(self) -> dict:
-        self._trace("initialOffset")
         # starting_version semantics are "replay commits AFTER v", so v
         # itself counts as fully consumed (policy never applies to it)
         tab = ManifestStore(self._path)
@@ -710,7 +703,6 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         return dict(self._cursor)
 
     def latestOffset(self) -> dict:
-        self._trace(f"latestOffset cursor={self._cursor}")
         tab = ManifestStore(self._path)
         head = tab.current_version()
         if self._max_files is None or self._cursor is None:
@@ -743,7 +735,6 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         return off
 
     def partitions(self, start: dict, end: dict):
-        self._trace(f"partitions {start} {end}")
         tab = ManifestStore(self._path)
         sv, sf = self._consumed(tab, start)
         ev, ef = self._consumed(tab, end)

@@ -9,8 +9,9 @@ cd "$(dirname "$0")/.."
 
 echo "== gate start: $(date -u +%FT%TZ)  uptime: $(uptime) =="
 
-echo "== 0/4 Spark-free manifest store and footer-schema tests (fail fast, seconds) =="
-python -m pytest tests/test_manifest_store.py tests/test_footer_schema.py -q
+echo "== 0/4 Spark-free manifest store, prune kernel and footer-schema tests (fail fast, seconds) =="
+python -m pytest tests/test_manifest_store.py tests/test_prune_kernel.py \
+  tests/test_footer_schema.py -q
 
 echo "== 1/4 unit + integration tests (test_correctness defaults to sf0.01 since r6; FULL property tier since r13) =="
 # the gate runs the FULL hypothesis example budgets; plain `pytest tests/`

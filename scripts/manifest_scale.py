@@ -14,14 +14,16 @@ lists through the real ``ManifestStore.commit`` / ``manifest()`` /
   every default-policy write resolves (manifest load + which columns
   the live files bloom, at what width) - it must not cost more than
   the cold plan
-- manifest and segment sizes, on disk and decoded (gzip'd JSON
-  inflated; a parquet segment's arrow table with every column loaded),
-  so the decode cost above shows next to the bytes it saves
+- manifest and segment sizes, on disk and decoded (a gzip'd JSON
+  manifest inflated; a parquet segment's arrow table with every column
+  loaded), so the decode cost above shows next to the bytes it saves
 
 Run:  python scripts/manifest_scale.py [--blooms] [--sizes N,N,...]
 Output: one JSON line per (N, variant) -> SCALE.md curve.  N is the
-table's size before the timed 100-file append: ``--sizes 3996`` times a
-table of 4,096 inline files.
+table's size before the timed 100-file append.  The default sizes span
+every layout: 300 and 3,996 files keep the file list inline with their
+stats in segments (``--sizes 3996`` times a table of 4,096 inline
+files), 1e4 and up segment the file list too.
 """
 
 from __future__ import annotations
@@ -35,10 +37,13 @@ import tempfile
 import time
 
 # plan_s times segment decode and pruning; import pyarrow's compute
-# kernels and pandas (which arrow conversions load) up front so the
-# one-time module import is not billed to the first size's cold plan
+# kernels, its parquet reader (whose table reads load pyarrow.dataset)
+# and pandas (which arrow conversions load) up front so the one-time
+# module import is not billed to the first size's cold plan
 import pandas  # noqa: E402,F401
 import pyarrow.compute  # noqa: E402,F401
+import pyarrow.dataset  # noqa: E402,F401
+import pyarrow.parquet  # noqa: E402,F401
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -193,8 +198,8 @@ if __name__ == "__main__":
     blooms = "--blooms" in sys.argv
     # 1e6 files ~ 128 TB at 128 MB/file: the file-list segmentation
     # target point (VERDICT r8 #1 done-criteria)
-    sizes = ([1_000, 10_000, 100_000, 1_000_000] if not blooms
-             else [1_000, 10_000, 100_000])
+    sizes = ([300, 1_000, 3_996, 10_000, 100_000, 1_000_000] if not blooms
+             else [300, 1_000, 3_996, 10_000, 100_000])
     if "--sizes" in sys.argv:
         sizes = [int(n) for n in
                  sys.argv[sys.argv.index("--sizes") + 1].split(",")]

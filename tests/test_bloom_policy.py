@@ -5,6 +5,7 @@ and the Spark and Python bloom positions agree bit for bit."""
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import logging
 import uuid
@@ -12,6 +13,7 @@ import uuid
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from manifest_reference import legacy_json_segments
 from pyspark.sql import functions as F
 
 from aliyun_maxcompute_data_collectors_spark.manifest_store import (
@@ -180,8 +182,14 @@ def test_unbloomed_table_launches_no_extra_job(spark, tmp_path):
 
 _LAYOUTS = {"inline": {}, "stats-segment": {"inline_stats_files": 1},
             "json-segment": {"inline_files": 1},
-            "parquet-segment": {"inline_files": 1,
-                                "parquet_seg_min_files": 1}}
+            "parquet-segment": {"inline_files": 1}}
+
+
+def _writer(layout):
+    """Legacy JSON segments for the ``json-segment`` layout, the current
+    writer otherwise."""
+    return (legacy_json_segments() if layout == "json-segment"
+            else contextlib.nullcontext())
 
 
 @pytest.mark.parametrize("layout", sorted(_LAYOUTS))
@@ -198,8 +206,9 @@ def test_live_bloom_columns_reads_live_files_only(tmp_path, layout):
               "/d/c": {"k": bloom_entry([3], 1 << 14),
                        "code": bloom_entry([4], 1 << 8)},
               "/d/e": {}}
-    store.commit(store.manifest(), "append", rows=4, add=sorted(blooms),
-                 blooms=blooms)
+    with _writer(layout):
+        store.commit(store.manifest(), "append", rows=4,
+                     add=sorted(blooms), blooms=blooms)
     assert live_bloom_columns(store.manifest()) == (["code", "k"], 1 << 14)
     store.commit(store.manifest(), "delete", rows=3, remove=["/d/c"])
     m = store.manifest()
@@ -272,10 +281,15 @@ def test_bloom_literal_type_guard_without_spark(tmp_path, layout):
                 for i in range(3)}
     blooms = _synthetic_blooms(contents)
     store = ManifestStore.init(str(tmp_path / "t"), **_LAYOUTS[layout])
-    store.commit(store.manifest(), "append", rows=3, add=list(contents),
-                 blooms=blooms, schema=_schema(k="long", code="string"))
+    with _writer(layout):
+        store.commit(store.manifest(), "append", rows=3,
+                     add=list(contents), blooms=blooms,
+                     schema=_schema(k="long", code="string"))
     m = store.manifest()
     assert bool(m.get("file_segments")) == (layout != "inline")
+    assert all(p.endswith(".json" if layout == "json-segment"
+                          else ".parquet") for p in m.get("file_segments")
+               or [])
     files = sorted(contents)
 
     def kept(*conj):

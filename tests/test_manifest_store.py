@@ -31,6 +31,7 @@ from hypothesis.stateful import (
     precondition,
     rule,
 )
+from manifest_reference import legacy_json_segments
 
 import aliyun_maxcompute_data_collectors_spark.manifest_store as S
 from aliyun_maxcompute_data_collectors_spark.manifest_store import (
@@ -38,6 +39,7 @@ from aliyun_maxcompute_data_collectors_spark.manifest_store import (
     bloom_bitmap,
     bloom_entry,
     bloom_may_contain,
+    prune_manifest_files,
     resolve_stats,
 )
 
@@ -66,11 +68,14 @@ def _legacy_parquet_segment(path: str, payload: dict) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    _REAL_PARQUET_SEGMENT(path, {**payload, "blooms": {}})
-    table = pq.read_table(path)
     blooms = payload.get("blooms") or {}
+    _REAL_PARQUET_SEGMENT(path, {
+        "files": S._Segment(None, payload).files,
+        "stats": payload.get("stats") or {}})
+    table = pq.read_table(path)
     for c in sorted({c for b in blooms.values() for c in b}):
-        es = [(blooms.get(f) or {}).get(c) for f in payload["files"]]
+        es = [(blooms.get(f) or {}).get(c)
+              for f in table.column("file").to_pylist()]
         table = table.append_column(
             f"b_m:{c}", pa.array([e and e["m"] for e in es], pa.int64()))
         table = table.append_column(
@@ -88,6 +93,12 @@ def _legacy_writer():
                               _legacy_parquet_segment)]
 
 
+# how a commit drawn by the model writes its metadata: "hex" stores
+# blooms as the pre-compression writer did, "json" writes its segments
+# as the JSON writer of older tables did; "" is the current writer
+WRITERS = ("", "hex", "json", "json+hex")
+
+
 def _bits(bitmap: bytes, m: int) -> np.ndarray:
     return np.unpackbits(np.frombuffer(bitmap, np.uint8),
                          bitorder="little")[:m].astype(bool)
@@ -102,11 +113,14 @@ class StoreModel(RuleBasedStateMachine):
     ordered live file list, each live file's stats, the deletion-vector
     map and the file diff against the parent (None when the commit
     records none).  Thresholds are drawn small so inline, stats-
-    segmented, file-segmented, removal-list, fold and parquet layouts
-    all occur.  Every added file carries a bloom; a commit drawn
-    ``legacy`` stores its blooms as the pre-compression writer did, so
-    hex and compressed entries mix in every layout and every live
-    file's bloom must decode to its own bit set."""
+    segmented, file-segmented, removal-list and fold layouts all occur.
+    Every added file carries a bloom.  Each commit draws its writer
+    (``WRITERS``): one drawn ``hex`` stores its blooms as the
+    pre-compression writer did, one drawn ``json`` writes legacy JSON
+    segments (gzip'd, plain, or by the old writer's rule - drawn once
+    per table), so hex and compressed entries, and JSON and parquet
+    segments, mix in every layout; every live file's bloom must decode
+    to its own bit set and every fold lands in parquet."""
 
     def __init__(self):
         super().__init__()
@@ -121,8 +135,9 @@ class StoreModel(RuleBasedStateMachine):
                 inline_stats_files=st.integers(1, 4),
                 max_segments=st.integers(1, 4),
                 removed_files_max=st.integers(1, 4),
-                parquet_seg_min_files=st.sampled_from([1, 10 ** 9]))
-    def create(self, **thresholds):
+                json_gzip=st.sampled_from([None, True, False]))
+    def create(self, json_gzip, **thresholds):
+        self.json_gzip = json_gzip
         self.store = ManifestStore.init(os.path.join(self.tmp, "t"),
                                         **thresholds)
         self.versions[1] = {"files": [], "dvs": {}, "delta": ([], [])}
@@ -157,14 +172,17 @@ class StoreModel(RuleBasedStateMachine):
             out[f] = {"c": _hex_entry(e) if legacy else e}
         return out
 
-    def _commit(self, operation, live, live_dvs, diff, legacy=False,
+    def _commit(self, operation, live, live_dvs, diff, legacy="",
                 **kw) -> None:
+        hexed = "hex" in legacy
         if "add" in kw:
-            kw["blooms"] = self._blooms(kw["add"], legacy)
+            kw["blooms"] = self._blooms(kw["add"], hexed)
         parent = self.store.manifest_json(self.store.current_version())
         with contextlib.ExitStack() as stack:
-            for p in _legacy_writer() if legacy else []:
+            for p in _legacy_writer() if hexed else []:
                 stack.enter_context(p)
+            if "json" in legacy:
+                stack.enter_context(legacy_json_segments(self.json_gzip))
             v = self.store.commit(self.store.manifest(), operation,
                                   rows=len(live), **kw)
         self.versions[v] = {"files": live, "dvs": live_dvs, "delta": diff,
@@ -211,14 +229,15 @@ class StoreModel(RuleBasedStateMachine):
         return [f for f in live if f in picked]
 
     # -- rules ---------------------------------------------------------------
-    @rule(k=st.integers(1, 3), legacy=st.booleans())
+    @rule(k=st.integers(1, 3), legacy=st.sampled_from(WRITERS))
     def append(self, k, legacy):
         head, add = self.head, self._new(k)
         self._commit("append", head["files"] + add, head["dvs"],
                      (add, []), legacy, add=add, stats=self._stats(add))
 
     @precondition(lambda self: self.versions and self.head["files"])
-    @rule(data=st.data(), k=st.integers(0, 2), legacy=st.booleans())
+    @rule(data=st.data(), k=st.integers(0, 2),
+          legacy=st.sampled_from(WRITERS))
     def cow(self, data, k, legacy):
         head, add = self.head, self._new(k)
         gone = self._pick(data, head["files"])
@@ -227,14 +246,15 @@ class StoreModel(RuleBasedStateMachine):
         self._commit("delete", live, dvs, (add, gone), legacy, add=add,
                      stats=self._stats(add), remove=gone)
 
-    @rule(k=st.integers(0, 3), legacy=st.booleans())
+    @rule(k=st.integers(0, 3), legacy=st.sampled_from(WRITERS))
     def replace(self, k, legacy):
         head, add = self.head, self._new(k)
         self._commit("overwrite", add, {}, (add, head["files"]), legacy,
                      add=add, stats=self._stats(add), shape="replace")
 
     @precondition(lambda self: self.versions and self.head["files"])
-    @rule(data=st.data(), k=st.integers(0, 2), legacy=st.booleans())
+    @rule(data=st.data(), k=st.integers(0, 2),
+          legacy=st.sampled_from(WRITERS))
     def fold(self, data, k, legacy):
         head, add = self.head, self._new(k)
         gone = (self._pick(data, head["files"])
@@ -297,7 +317,7 @@ class StoreModel(RuleBasedStateMachine):
                 assert e["m"] == want_m, (v, f)
                 got = np.flatnonzero(_bits(bloom_bitmap(e), want_m))
                 assert got.tolist() == want_bits, (v, f)
-            if not want.get("legacy"):
+            if "hex" not in want.get("legacy", ""):
                 # a commit stores every entry it writes compressed: the
                 # inline ones and those of the segments it writes
                 written = [m.get("blooms") or {}] + [
@@ -307,6 +327,13 @@ class StoreModel(RuleBasedStateMachine):
                     if os.path.basename(p).startswith(f"seg-{v:08d}-")]
                 assert all("z" in e for b in written for per in b.values()
                            for e in per.values()), v
+            if not want.get("legacy"):
+                # the current writer writes parquet segments only
+                assert all(p.endswith(".parquet") for p in
+                           (m.get("segments") or [])
+                           + (m.get("file_segments") or [])
+                           if os.path.basename(p).startswith(
+                               f"seg-{v:08d}-")), v
             dvs = m.get("dvs") or {}
             assert set(dvs) <= set(m["files"]), v
             assert dvs == want["dvs"], v
@@ -371,18 +398,22 @@ def test_unknown_bloom_entries_decode_to_none(entry):
     assert S._compress_blooms({"f": {"c": entry}}) == {"f": {"c": entry}}
 
 
-@pytest.mark.parametrize("thresholds", [
-    {}, {"inline_stats_files": 1}, {"inline_files": 1},
-    {"inline_files": 1, "parquet_seg_min_files": 1}],
+@pytest.mark.parametrize("thresholds, json_segments", [
+    ({}, False), ({"inline_stats_files": 1}, False),
+    ({"inline_files": 1}, True), ({"inline_files": 1}, False)],
     ids=["inline", "stats-segments", "file-segments", "parquet"])
-def test_unknown_bloom_entries_commit(tmp_path, thresholds):
+def test_unknown_bloom_entries_commit(tmp_path, thresholds, json_segments):
     """Entries of unknown shape are carried or dropped, never raised on,
-    and never reach a parquet bloom column."""
+    and never reach a parquet bloom column - also when a legacy JSON
+    file segment holding them folds into parquet."""
     store = ManifestStore.init(str(tmp_path / "t"), **thresholds)
     good = bloom_entry([3, 9], 64)
     odd = {"m": "x", "z": "??"}
-    store.commit(store.manifest(), "append", rows=2, add=["/a", "/b"],
-                 blooms={"/a": {"c": good, "d": odd}, "/b": {"c": odd}})
+    with (legacy_json_segments() if json_segments
+          else contextlib.nullcontext()):
+        store.commit(store.manifest(), "append", rows=2, add=["/a", "/b"],
+                     blooms={"/a": {"c": good, "d": odd},
+                             "/b": {"c": odd}})
     m = store.manifest()
     store.commit(m, "compact", rows=2, remove=[], shape="fold")
     _, blooms = resolve_stats(store.manifest())
@@ -458,8 +489,7 @@ CRASH_CASES = {
                          3, _do_cow),
     "cow-inline": ({}, 3, _do_cow),
     "replace": ({"inline_files": 2}, 3, _do_replace),
-    "fold-parquet": ({"inline_files": 2, "parquet_seg_min_files": 1},
-                     3, _do_fold),
+    "fold-parquet": ({"inline_files": 2}, 3, _do_fold),
     "rollback": ({"inline_files": 2}, 3, _do_rollback),
 }
 
@@ -546,8 +576,7 @@ def test_commit_fsyncs_directory_after_each_rename(tmp_path, monkeypatch):
     """Durability: every rename that publishes a segment, a manifest or
     HEAD is followed by an fsync of the directory holding it - without
     it a power loss can undo the rename after the commit returned."""
-    store = ManifestStore.init(str(tmp_path / "d"), inline_files=1,
-                               parquet_seg_min_files=1)
+    store = ManifestStore.init(str(tmp_path / "d"), inline_files=1)
     _append(store, _files("a", 1))
     events: list[tuple[str, str]] = []
     fd_paths: dict[int, str] = {}
@@ -620,8 +649,7 @@ def test_parquet_segment_reads_bloom_bytes_only_when_used(tmp_path):
     stats and bloom columns load on first use, and the segment cache
     is charged exactly the bytes each segment holds."""
     store = ManifestStore.init(str(tmp_path / "t"), inline_files=2,
-                               inline_stats_files=1,
-                               parquet_seg_min_files=1)
+                               inline_stats_files=1)
     add = _files("p", 40)
     blooms = {f: {"c": bloom_entry([i, i + 7], 1 << 12)}
               for i, f in enumerate(add)}
@@ -656,10 +684,11 @@ def test_parquet_segment_reads_bloom_bytes_only_when_used(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# on-disk encoding: gzip'd compact JSON, plain JSON still read
+# on-disk encoding: gzip'd compact JSON manifests and parquet segments;
+# plain JSON and JSON segments still read
 # ---------------------------------------------------------------------------
 
-def _plain_json(obj, gzipped=True) -> bytes:
+def _plain_json(obj) -> bytes:
     """What writers before gzip stored: plain JSON text."""
     return json.dumps(obj, indent=1, allow_nan=False).encode()
 
@@ -672,9 +701,10 @@ def _decoded(path: str) -> bytes:
 
 
 def test_manifest_and_json_segment_are_gzipped_compact_json(tmp_path):
-    """Manifests and JSON segments round-trip as gzip'd compact JSON; a
-    segment carrying bloom entries is written plain (its bitmaps are
-    already zlib'd) and reads the same."""
+    """Manifests round-trip as gzip'd compact JSON and segments are
+    parquet.  A legacy JSON segment - plain when it carries bloom
+    entries, gzip'd otherwise - reads the same, and the next commit
+    beside it writes parquet."""
     store = ManifestStore.init(str(tmp_path / "t"), inline_stats_files=1)
     add = _files("g", 3)
     blooms = {f: {"c": bloom_entry([i, 9], 64)} for i, f in enumerate(add)}
@@ -684,19 +714,27 @@ def test_manifest_and_json_segment_are_gzipped_compact_json(tmp_path):
     assert _decoded(store.manifest_path(v)) == json.dumps(
         mj, separators=(",", ":")).encode()
     assert mj["dvs"] == {add[0]: {"path": "/dv/0", "n": 2}}
-    (bloomed,) = mj["segments"]
+    (seg,) = mj["segments"]
+    assert seg.endswith(".parquet")
+    assert S._Segment(seg).stats == _stats(add)
+    assert S._Segment(seg).blooms == blooms
+
+    legacy = ManifestStore.init(str(tmp_path / "l"), inline_stats_files=1)
+    with legacy_json_segments():
+        _append(legacy, add, blooms=blooms)
+        more = _files("h", 2)
+        v = _append(legacy, more)
+    bloomed, plain = legacy.manifest_json(v)["segments"]
     with open(bloomed, "rb") as f:
         assert json.loads(f.read()) == {"stats": _stats(add),
                                         "blooms": blooms}
-    more = _files("h", 2)
-    v = _append(store, more)
-    seg = store.manifest_json(v)["segments"][-1]
-    assert seg.endswith(".json")
-    assert json.loads(_decoded(seg)) == {"stats": _stats(more),
-                                         "blooms": {}}
-    _, got = resolve_stats(store.manifest())
+    assert json.loads(_decoded(plain)) == {"stats": _stats(more),
+                                           "blooms": {}}
+    v = _append(legacy, _files("p", 1))
+    assert legacy.manifest_json(v)["segments"][-1].endswith(".parquet")
+    _, got = resolve_stats(legacy.manifest())
     assert got == blooms
-    assert store.versions()[-1]["operation"] == "append"
+    assert legacy.versions()[-1]["operation"] == "append"
 
 
 def test_repeated_commit_is_byte_identical(tmp_path, monkeypatch):
@@ -722,7 +760,8 @@ def test_plain_json_table_reads_and_commits(tmp_path):
     reads, time-travels and gives its commit deltas unchanged, and a
     commit on top writes gzip'd files beside the plain ones."""
     path = str(tmp_path / "t")
-    with mock.patch.object(S, "_encode_json", _plain_json):
+    with mock.patch.object(S, "_encode_json", _plain_json), \
+            legacy_json_segments(gzipped=False):
         store = _seeded(path, {"inline_files": 3, "inline_stats_files": 1},
                         3)
     mdir = os.path.join(store.root, "manifests")
@@ -749,11 +788,77 @@ def test_plain_json_table_reads_and_commits(tmp_path):
     assert store.manifest(4)["files"] == [f for fs in want for f in fs]
 
 
+def test_mixed_generation_table_reads_prunes_and_folds(tmp_path):
+    """A table whose older commits wrote JSON segments (plain with hex
+    blooms, gzip'd with base64 ones) and whose newer commits wrote
+    parquet: every version reads and time-travels, the table prunes as
+    one by stats and by bloom, a copy-on-write commit removes files of
+    both generations, and a fold leaves one parquet segment."""
+    schema = json.dumps({"type": "struct", "fields": [
+        {"name": "c", "type": "long", "nullable": True, "metadata": {}}]})
+    store = ManifestStore.init(str(tmp_path / "t"), inline_files=2,
+                               inline_stats_files=1)
+    gens = [_files(f"g{g}_", 2) for g in range(4)]
+    key = {f: 100 + i for i, f in enumerate(sum(gens, []))}
+    # (writer patches, hex blooms) per generation: gzip'd JSON, plain
+    # JSON keeping hex entries verbatim, then the current writer twice
+    writers = [([legacy_json_segments(True)], False),
+               (_legacy_writer()[:1] + [legacy_json_segments(False)], True),
+               ([], False), ([], False)]
+    for add, (patches, hexed) in zip(gens, writers):
+        with contextlib.ExitStack() as stack:
+            for p in patches:
+                stack.enter_context(p)
+            blooms = {}
+            for f in add:
+                e = bloom_entry([S._bloom_position(key[f], 1024)], 1024)
+                blooms[f] = {"c": _hex_entry(e) if hexed else e}
+            m = store.manifest()
+            store.commit(m, "append", rows=m["rows"] + 2, add=add,
+                         schema=schema, blooms=blooms,
+                         stats={f: {"x": [key[f], key[f]]} for f in add})
+    m = store.manifest()
+    segs = m.get("segments", []) + m["file_segments"]
+    assert {os.path.splitext(p)[1] for p in segs} == {".json", ".parquet"}
+
+    def pruned(mf):
+        for f in mf["files"]:
+            assert prune_manifest_files(mf, [("x", "==", key[f])]) == [f]
+            assert f in prune_manifest_files(mf, [("c", "==", key[f])])
+        assert prune_manifest_files(mf, [("x", ">", 10 ** 6)]) == []
+
+    for v in range(2, 6):
+        want = sum(gens[:v - 1], [])
+        mv = store.manifest(v)
+        assert mv["files"] == want, v
+        stats, _ = resolve_stats(mv)
+        assert {f: stats[f] for f in want} == {
+            f: {"x": [key[f], key[f]]} for f in want}, v
+        pruned(mv)
+    _, blooms = resolve_stats(m)
+    assert {"hex", "z"} <= {k for f in m["files"] for k in blooms[f]["c"]}
+    gone = [gens[0][0], gens[3][1]]
+    store.commit(m, "delete", rows=m["rows"] - 2, remove=gone)
+    m = store.manifest()
+    assert m["files"] == [f for f in sum(gens, []) if f not in gone]
+    pruned(m)
+    store.commit(m, "compact", rows=m["rows"], remove=[], shape="fold")
+    m = store.manifest()
+    (seg,) = m["file_segments"]
+    assert seg.endswith(".parquet") and not m.get("segments")
+    assert m["files"] == [f for f in sum(gens, []) if f not in gone]
+    pruned(m)
+    _, blooms = resolve_stats(m)
+    assert all("z" in blooms[f]["c"] for f in m["files"])
+    assert store.manifest(5)["files"] == sum(gens, [])
+
+
 def test_segment_cache_charges_decoded_json_bytes(tmp_path):
     """A gzip'd JSON segment costs the cache its decoded bytes, the
     in-memory proxy, not its 2-5x smaller file size."""
     store = ManifestStore.init(str(tmp_path / "t"), inline_stats_files=1)
-    _append(store, _files("c", 50))
+    with legacy_json_segments():
+        _append(store, _files("c", 50))
     (seg,) = store.manifest()["segments"]
     S._seg_cache_clear()
     S._load_segment(seg)

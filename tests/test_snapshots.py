@@ -4,6 +4,7 @@ no-localCheckpoint CDC merge path."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 
@@ -745,8 +746,10 @@ def test_legacy_hex_blooms_prune_like_compressed(spark, tmp_path,
     keep exactly the files the compressed form keeps - in prune_files,
     read(where=...) and the graft_snapshot pushdown - and the next
     commit that rewrites them stores them compressed."""
-    import aliyun_maxcompute_data_collectors_spark.manifest_store as S
+    from manifest_reference import legacy_json_segments
     from pyspark.sql.datasource import EqualTo
+
+    import aliyun_maxcompute_data_collectors_spark.manifest_store as S
     from aliyun_maxcompute_data_collectors_spark.sources.pyds import (
         GraftSnapshotDataSource,
     )
@@ -762,8 +765,9 @@ def test_legacy_hex_blooms_prune_like_compressed(spark, tmp_path,
     assert all("z" in e for b in blooms.values() for e in b.values())
     legacy = {f: {c: {"m": e["m"], "hex": S.bloom_bitmap(e).hex()}
                   for c, e in b.items()} for f, b in blooms.items()}
-    with monkeypatch.context() as mp:
-        mp.setattr(S, "_compress_blooms", lambda b: b)  # the old writer
+    # the old writer: entries verbatim, in JSON segments
+    with monkeypatch.context() as mp, legacy_json_segments():
+        mp.setattr(S, "_compress_blooms", lambda b: b)
         v_hex = t._store.commit(m, "legacy", rows=m["rows"], blooms=legacy,
                                 remove=[], shape="fold")
     _, stored = S.resolve_stats(t.manifest(v_hex))
@@ -836,16 +840,26 @@ def test_nan_stats_never_prune(spark, table):
 
 
 def test_nan_interval_guard_on_legacy_manifests():
-    """Pre-fix manifests may carry NaN stats: the interval check itself
+    """Pre-fix manifests may carry NaN stats: the prune kernel itself
     must refuse to prune on any NaN operand."""
-    from aliyun_maxcompute_data_collectors_spark.snapshots import _interval_may_match
+    import pyarrow as pa
+
+    from aliyun_maxcompute_data_collectors_spark.manifest_store import (
+        _columnar_exclude,
+    )
+
     nan = float("nan")
-    assert _interval_may_match(nan, nan, ">", 1.5)
-    assert _interval_may_match(1.0, nan, "==", 0.5)
-    assert _interval_may_match(1.0, 2.0, ">", nan)
-    assert _interval_may_match(1.0, nan, "between", (0.0, 0.5))
+
+    def may_match(lo, hi, op, value):
+        e = _columnar_exclude(pa.array([lo]), pa.array([hi]), op, value)
+        return e is None or not e[0]
+
+    assert may_match(nan, nan, ">", 1.5)
+    assert may_match(1.0, nan, "==", 0.5)
+    assert may_match(1.0, 2.0, ">", nan)
+    assert may_match(1.0, nan, "between", (0.0, 0.5))
     # finite intervals still prune
-    assert not _interval_may_match(1.0, 2.0, ">", 2.0)
+    assert not may_match(1.0, 2.0, ">", 2.0)
 
 
 def test_vacuum_blast_radius_is_pinned(spark, table):
@@ -2035,15 +2049,10 @@ def test_unmappable_phase1_hit_raises(spark, dml_table, monkeypatch):
 
 # -- r10: parquet segments + vectorized prune -------------------------------
 
-def test_parquet_segments_roundtrip(spark, tmp_path, monkeypatch):
-    """VERDICT r9 #6: big segments are written as PARQUET (threshold
-    patched to 1 so small tables exercise the path) and every consumer
-    - materialize, read, time travel, prune, DML removal lists, fold,
-    vacuum - behaves identically to the JSON layout."""
-
-    import aliyun_maxcompute_data_collectors_spark.manifest_store as S
-
-    monkeypatch.setattr(S, "PARQUET_SEG_MIN_FILES", 1)
+def test_parquet_segments_roundtrip(spark, tmp_path):
+    """VERDICT r9 #6: segments are written as PARQUET (the only format
+    written) and every consumer - materialize, read, time travel,
+    prune, DML removal lists, fold, vacuum - behaves identically."""
     t = SnapshotTable.init(spark, str(tmp_path / "pqseg"), inline_files=2)
     for lo in range(0, 1000, 250):
         t.append(_kv(spark, lo, lo + 250).coalesce(1), bloom_cols=["k"])
@@ -2078,35 +2087,45 @@ def test_parquet_segments_roundtrip(spark, tmp_path, monkeypatch):
 
 def test_parquet_segment_fallback_is_narrow_and_loud(spark, tmp_path,
                                                      monkeypatch, caplog):
-    """VERDICT r10 #2: write_segment used to swallow EVERY exception
-    into a silent JSON fallback - a pyarrow regression would quietly
-    degrade all future segments (0.3 s cold plan -> seconds, zero
-    signal).  Now: a normal payload always lands as .parquet, an
-    expected stat-typing error falls back WITH a warning log, and an
-    unexpected error propagates instead of degrading silently."""
+    """VERDICT r10 #2: a segment write never degrades silently.  A
+    normal payload lands as .parquet with no warning; a stat column
+    whose values share no exact arrow type (int vs float: float64 would
+    fold ints past 2^53) is left out of that segment with one warning
+    and never prunes, while the segment's other columns still prune;
+    an unexpected error propagates."""
     import logging
 
     import aliyun_maxcompute_data_collectors_spark.manifest_store as S
+    from aliyun_maxcompute_data_collectors_spark.snapshots import (
+        prune_manifest_files,
+    )
 
-    monkeypatch.setattr(S, "PARQUET_SEG_MIN_FILES", 1)
+    logger = "aliyun_maxcompute_data_collectors_spark.manifest_store"
     t = SnapshotTable.init(spark, str(tmp_path / "nf"), inline_files=1)
 
-    # 1. standard commit: parquet, no fallback log
-    with caplog.at_level(logging.WARNING,
-                         logger="aliyun_maxcompute_data_collectors_spark.manifest_store"):
+    # 1. standard commit: parquet, no warning
+    with caplog.at_level(logging.WARNING, logger=logger):
         t.append(_kv(spark, 0, 100).coalesce(1), bloom_cols=["k"])
         t.append(_kv(spark, 100, 200).coalesce(1), bloom_cols=["k"])
     segs = t.manifest().get("file_segments") or []
     assert segs and all(s.endswith(".parquet") for s in segs)
-    assert "fallback" not in caplog.text
+    assert "leaves out" not in caplog.text
 
-    # 2. expected typing error (mixed stat types): JSON fallback + log
-    seg = t._store.write_segment(99, {
-        "files": ["a.parquet", "b.parquet"],
-        "stats": {"a.parquet": {"c": [1, 2]},
-                  "b.parquet": {"c": [1.5, 2.5]}}})  # int vs float: mixed
-    assert seg.endswith(".json")
-    assert "fallback to JSON" in caplog.text
+    # 2. mixed stat types: the column is left out and logged once, the
+    # segment is still parquet and its other columns still prune
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger=logger):
+        seg = t._store.write_segment(99, {
+            "files": ["a.parquet", "b.parquet"],
+            "stats": {"a.parquet": {"c": [1, 2], "d": [0, 9]},
+                      "b.parquet": {"c": [1.5, 2.5], "d": [10, 19]}}})
+    assert seg.endswith(".parquet")
+    warned = [r for r in caplog.records if r.name == logger]
+    assert len(warned) == 1 and "['c']" in warned[0].getMessage()
+    m = {"files": [], "file_segments": [seg], "stats": {}}
+    assert prune_manifest_files(m, [("c", "==", 7)]) == [
+        "a.parquet", "b.parquet"]
+    assert prune_manifest_files(m, [("d", ">", 9)]) == ["b.parquet"]
 
     # 3. unexpected error propagates (no silent degrade)
     def boom(path, payload):
@@ -2116,24 +2135,30 @@ def test_parquet_segment_fallback_is_narrow_and_loud(spark, tmp_path,
         t._store.write_segment(100, {"files": ["a.parquet"]})
 
 
-def test_parquet_segment_stats_dict_matches_json(spark, tmp_path,
-                                                 monkeypatch):
+def test_parquet_segment_stats_dict_matches_json(spark, tmp_path):
     """The lazy stats/blooms dicts decoded from a parquet segment equal
-    what the JSON layout would have stored (same _stat_to_json
-    encodings), so resolve_stats consumers see identical values."""
-    import aliyun_maxcompute_data_collectors_spark.manifest_store as S
+    what a legacy JSON segment of the same commit stores (same
+    _stat_to_json encodings), so resolve_stats consumers see identical
+    values whichever generation wrote the table."""
+    from manifest_reference import legacy_json_segments
+
     from aliyun_maxcompute_data_collectors_spark.snapshots import resolve_stats
 
     dfs = {}
-    for fmt, thresh in (("json", 10**9), ("pq", 1)):
-        monkeypatch.setattr(S, "PARQUET_SEG_MIN_FILES", thresh)
+    for fmt in ("json", "pq"):
+        # inline_files=0: the one-file append lands in a file segment
         t = SnapshotTable.init(spark, str(tmp_path / f"cmp_{fmt}"),
-                               inline_files=1)
-        t.append(spark.sql(
-            "SELECT id AS k, CAST(id AS DOUBLE) AS x, "
-            "TIMESTAMP'2024-01-02 03:04:05' + make_interval(0,0,0,0,0,0,id)"
-            " AS ts, DATE'2024-06-01' + CAST(id AS INT) AS d FROM range(50)")
-            .coalesce(1), bloom_cols=["k"])
+                               inline_files=0)
+        with (legacy_json_segments() if fmt == "json"
+              else contextlib.nullcontext()):
+            t.append(spark.sql(
+                "SELECT id AS k, CAST(id AS DOUBLE) AS x, "
+                "TIMESTAMP'2024-01-02 03:04:05' + "
+                "make_interval(0,0,0,0,0,0,id) AS ts, "
+                "DATE'2024-06-01' + CAST(id AS INT) AS d FROM range(50)")
+                .coalesce(1), bloom_cols=["k"])
+        (seg,) = t.manifest()["file_segments"]
+        assert seg.endswith(".json" if fmt == "json" else ".parquet")
         stats, blooms = resolve_stats(t.manifest())
         dfs[fmt] = ({os.path.basename(f): v for f, v in stats.items()},
                     {os.path.basename(f): v for f, v in blooms.items()})
@@ -2142,62 +2167,89 @@ def test_parquet_segment_stats_dict_matches_json(spark, tmp_path,
     assert list(js[1].values()) == list(pq_[1].values())  # same blooms
 
 
-def test_vectorized_prune_matches_scalar(spark, tmp_path, monkeypatch):
-    """Parity pin: the segmented (vectorized) prune and the inline
-    (scalar) prune keep exactly the same files across ops, types and
-    edge values (missing stats, NaN floats, incomparable literals)."""
+def test_vectorized_prune_matches_scalar(tmp_path):
+    """Parity pin: over every layout - inline, stats-segmented,
+    file-segmented parquet and legacy JSON segments - the one prune
+    kernel keeps exactly the files the scalar reference check keeps,
+    across ops, types and edge values (missing stats, NaN floats,
+    incomparable literals, float literals on integer stats, numpy
+    literals)."""
+    import numpy as np
+    from manifest_reference import interval_may_match, legacy_json_segments
+
     import aliyun_maxcompute_data_collectors_spark.manifest_store as S
     from aliyun_maxcompute_data_collectors_spark.snapshots import (
-        _seg_cache_clear,
         prune_manifest_files,
     )
 
-    tab = S.ManifestStore.init(str(tmp_path / "vp"))
-    for fmt_thresh in (1, 10**9):            # parquet AND json segments
-        monkeypatch.setattr(S, "PARQUET_SEG_MIN_FILES", fmt_thresh)
-        files = [f"f{i:03d}.parquet" for i in range(40)]
-        stats = {}
-        for i, f in enumerate(files):
-            s = {}
-            if i % 5 != 4:                   # every 5th file: no k stat
-                s["k"] = [i * 10, i * 10 + 9]
-            if i % 3 == 0:
-                s["x"] = [float(i), float(i) + 0.5]
-            if i == 7 and fmt_thresh == 1:
-                # NaN stat: never prune.  Only reachable in parquet form
-                # (json.dumps(allow_nan=False) rejects it, and commit-time
-                # _sanitize_stats drops it before any segment write)
-                s["x"] = [float("nan"), 1.0]
-            stats[f] = s
-        inline = {"files": files, "stats": stats, "rows": 0}
-        seg = tab.write_segment(1, {"files": files, "stats": stats})
-        segmented = {"files": files, "file_segments": [seg],
-                     "stats": {}, "rows": 0}
-        _seg_cache_clear()
-        cases = [
-            [("k", "==", 75)], [("k", "<", 100)], [("k", "<=", 99)],
-            [("k", ">", 300)], [("k", ">=", 300)],
-            [("k", "between", (42, 61))],
-            [("x", "==", 6.2)], [("x", ">=", 30.0)],
-            [("x", "==", float("nan"))],
-            [("k", "==", "not-an-int")],          # incomparable literal
-            [("k", "==", 2.5)],                   # float vs int column
-            [("missing", "==", 1)],
-            [("k", ">", 100), ("x", "<", 9.0)],   # multi-conjunct
-            [("k", "between", (0, 10**15))],
-        ]
+    files = [f"f{i:03d}.parquet" for i in range(40)]
+    stats = {}
+    for i, f in enumerate(files):
+        s = {}
+        if i % 5 != 4:                   # every 5th file: no k stat
+            s["k"] = [i * 10, i * 10 + 9]
+        if i % 3 == 0:
+            s["x"] = [float(i), float(i) + 0.5]
+        stats[f] = s
+    # NaN stat: never prune.  Only an in-memory manifest holds one
+    # (json.dumps(allow_nan=False) rejects it, and commit-time
+    # _sanitize_stats drops it before any write)
+    nan_stats = {**stats, files[7]: {**stats[files[7]],
+                                     "x": [float("nan"), 1.0]}}
+    layouts = {"in-memory": {"files": files, "stats": nan_stats,
+                             "rows": 0}}
+    for name, thresholds, legacy in [
+            ("inline", {}, False),
+            ("stats-segmented", {"inline_stats_files": 1}, False),
+            ("file-segmented", {"inline_files": 1}, False),
+            ("json-stats-segmented", {"inline_stats_files": 1}, True),
+            ("json-file-segmented", {"inline_files": 1}, True)]:
+        store = S.ManifestStore.init(str(tmp_path / name), **thresholds)
+        with legacy_json_segments() if legacy else contextlib.nullcontext():
+            store.commit(store.manifest(), "append", rows=0, add=files,
+                         stats=stats)
+        layouts[name] = store.manifest()
+    S._seg_cache_clear()
+
+    def reference(st, conj):
+        return [f for f in files if all(
+            (st.get(f) or {}).get(c) is None
+            or interval_may_match(*st[f][c], op, v) for c, op, v in conj)]
+
+    cases = [
+        [("k", "==", 75)], [("k", "<", 100)], [("k", "<=", 99)],
+        [("k", ">", 300)], [("k", ">=", 300)],
+        [("k", "between", (42, 61))],
+        [("x", "==", 6.2)], [("x", ">=", 30.0)],
+        [("x", "==", float("nan"))],
+        [("k", "==", "not-an-int")],          # incomparable literal
+        [("k", "==", 2.5)],                   # float vs int column
+        [("missing", "==", 1)],
+        [("k", ">", 100), ("x", "<", 9.0)],   # multi-conjunct
+        [("k", "between", (0, 10**15))],
+        [("k", "==", np.int64(75))], [("x", ">=", np.float64(30.0))],
+    ]
+    for name, m in layouts.items():
+        st = nan_stats if name == "in-memory" else stats
         for conj in cases:
-            got = prune_manifest_files(segmented, conj)
-            want = prune_manifest_files(inline, conj)
-            assert got == want, (fmt_thresh, conj, got, want)
-        # removal lists subtract in the vectorized path too
-        segmented["removed_files"] = files[:3]
-        got = prune_manifest_files(segmented, [("k", "<", 100)])
-        want = [f for f in prune_manifest_files(inline, [("k", "<", 100)])
-                if f not in files[:3]]
-        assert got == want
+            got = prune_manifest_files(m, conj)
+            assert got == reference(st, conj), (name, conj, got)
+        segmented = bool(m.get("file_segments"))
+        if segmented:
+            # removal lists subtract in the segmented path too
+            cut = {**m, "removed_files": files[:3]}
+            got = prune_manifest_files(cut, [("k", "<", 100)])
+            assert got == [f for f in reference(st, [("k", "<", 100)])
+                           if f not in files[:3]]
+        assert bool(m.get("segments")) == name.endswith("stats-segmented")
+        assert segmented == name.endswith("file-segmented")
         with pytest.raises(SnapshotError, match="unsupported prune op"):
-            prune_manifest_files(segmented, [("k", "!=", 1)])
+            prune_manifest_files(m, [("k", "!=", 1)])
+    # the inline no-stats case raises like every other layout
+    with pytest.raises(SnapshotError, match="unsupported prune op"):
+        prune_manifest_files({"files": ["a", "b"],
+                              "stats": {"a": {"k": [0, 9]}}},
+                             [("missing", "!=", 1)])
 
 
 def test_vacuum_time_retention_and_describe_detail(spark, tmp_path):
